@@ -254,15 +254,17 @@ def should_update_control(
     (artifacts/BENCH_latest_local.json). Refuses when the existing
     control is at a different sf or core count (r14, VERDICT r13 #3 —
     the driver's low-core scaling run must never displace the 32-core
-    control), or when this run's best spark canary is >20% slower than
-    the control's (a contended run can add a timestamped artifact but
-    never mutate the quiet control in place)."""
+    control), when the existing control records no core count (a legacy
+    control is replaced only by a deliberate fresh write), or when this
+    run's best spark canary is >20% slower than the control's (a
+    contended run can add a timestamped artifact but never mutate the
+    quiet control in place)."""
     if not old:
         return True
     if old.get("sf") != sf:
         return False  # a smoke run at another SF is no control
-    if old.get("cpus", cpus) != cpus:
-        return False  # cross-cpus run is no control (r14 guard)
+    if old.get("cpus") != cpus:
+        return False  # cross-cpus or unstamped control (r14 guard)
     old_canary = old.get("canary", {})
     old_spark = min(
         old_canary.get("spark_pre", float("inf")),

@@ -30,7 +30,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .relational import melt
+from .relational import latest_per_group, melt
 
 __all__ = [
     "melt_spec",
@@ -195,25 +195,7 @@ def verify_pipeline(
     4. conformance metrics per (channel, event, prop), stamped with the
        spec version.
     """
-    # r14 (guide §2.3/§2.4, VERDICT r13 #8): latest-version selection as
-    # ONE max window on the spec instead of latest_per_group's
-    # groupBy-max + broadcast join-back — same ties-kept semantics
-    # (rows where version == max(version) per channel), one exchange
-    # instead of an aggregate exchange plus a join, and the saving is
-    # doubled because the spec_long subtree is planned under BOTH of
-    # its consumers (the fan-out broadcast and the zero-fill left
-    # join). The spec is KB-sized by contract (a human-maintained
-    # spec), so a per-channel window is never a skew risk; the
-    # agg+join form stays available as relational.latest_per_group for
-    # genuinely large groups.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(channel_col)
-    latest = (
-        spec_wide.withColumn("__mx", F.max(version_col).over(w))
-        .where(F.col(version_col) == F.col("__mx"))
-        .drop("__mx")
-    )
+    latest = latest_per_group(spec_wide, [channel_col], version_col)
     spec_long = melt_spec(latest, id_cols=list(spec_id_cols), event_col=event_col)
 
     if catalog_version_expr is None:

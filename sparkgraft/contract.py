@@ -30,6 +30,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .relational import tiny_frame
+
 __all__ = [
     "validate_contract",
     "profile_table",
@@ -94,7 +96,7 @@ def validate_contract(df: DataFrame, rules: Sequence[Mapping]) -> DataFrame:
         "rule_id string, column string, check string, n_violations bigint"
     )
     if not rules:
-        empty = spark.createDataFrame([], report_schema)
+        empty = tiny_frame(spark, [], report_schema)
         return empty.withColumn("passed", F.lit(True))
 
     reports: list[DataFrame] = []
@@ -108,13 +110,9 @@ def validate_contract(df: DataFrame, rules: Sequence[Mapping]) -> DataFrame:
         long = wide.selectExpr(
             f"stack({len(scalar)}, {pairs}) as (rule_id, n_violations)"
         )
-        # 1-slice parallelize (r14, guide §4): a few rule-meta rows,
-        # broadcast-joined below — the default createDataFrame spreads
-        # them over defaultParallelism near-empty Python partitions
-        meta = spark.createDataFrame(
-            spark.sparkContext.parallelize(
-                [(rid, r["column"], r["check"]) for rid, r in scalar], 1
-            ),
+        meta = tiny_frame(
+            spark,
+            [(rid, r["column"], r["check"]) for rid, r in scalar],
             "rule_id string, column string, check string",
         )
         reports.append(long.join(F.broadcast(meta), "rule_id"))
@@ -185,7 +183,8 @@ def profile_table(
         # mirror validate_contract's empty-rules branch: stack(0, ) is
         # malformed SQL, so an empty column list returns an empty report
         # with the documented schema instead of an AnalysisException
-        return df.sparkSession.createDataFrame(
+        return tiny_frame(
+            df.sparkSession,
             [],
             "column string, n_rows bigint, n_null bigint, null_frac double, "
             "n_distinct_approx bigint, min_str string, max_str string",
@@ -321,8 +320,8 @@ def numeric_correlations(
     """
     cols = list(columns)
     if len(cols) < 2:
-        return df.sparkSession.createDataFrame(
-            [], "col_a string, col_b string, n bigint, corr double"
+        return tiny_frame(
+            df.sparkSession, [], "col_a string, col_b string, n bigint, corr double"
         )
     pairs = [(a, b) for i, a in enumerate(cols) for b in cols[i + 1:]]
     dec = "decimal(38,10)"

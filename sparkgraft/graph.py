@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .relational import tiny_frame
+
 __all__ = ["pagerank", "degree_stats", "triangle_count"]
 
 _DEC = "decimal(38,10)"
@@ -85,7 +87,7 @@ def pagerank(
     n = nodes.count()
     if n == 0:
         nodes.unpersist()
-        return edges.sparkSession.createDataFrame([], "node long, rank double")
+        return tiny_frame(edges.sparkSession, [], "node long, rank double")
     outw = e.groupBy("__s").agg(F.sum("__w").alias("__ow")).persist()
 
     d = float(damping)

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from .. import conformance as C
 from ..io import read_table
+from ..relational import tiny_frame
 from .registry import dec, register
 
 
@@ -34,18 +35,7 @@ SPEC_PROPS = ("k", "session_id")
 
 def _event_spec(spark: SparkSession) -> DataFrame:
     rows = [(t, p) for t in EVENT_TYPES for p in SPEC_PROPS]
-    # 1-slice parallelize (r14): 10 fixture rows otherwise spread
-    # over defaultParallelism near-empty Python partitions, and every
-    # spec-side stage pays a 32-task floor per consumer (the r13
-    # robots-fixture precedent; a real caller's spec frame carries
-    # data-sized partitioning). NOT .coalesce(1): a coalesced Python
-    # RDD makes ONE task compute all 32 parent partitions SEQUENTIALLY
-    # at a per-partition Python-runner round-trip apiece (measured
-    # ~10s per scan); sizing the parallelize itself costs nothing.
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1),
-        "event_name string, prop_name string",
-    )
+    return tiny_frame(spark, rows, "event_name string, prop_name string")
 
 
 _CONFORMANCE_ORACLE = """
@@ -205,11 +195,7 @@ def conformance_three_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("props").alias("properties"),
     )
     rows = [(t, p) for t in EVENT_TYPES for p in _THREE_PAYLOAD_PROPS]
-    # 1-slice parallelize: tiny fixture — see _event_spec's note
-    spec = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1),
-        "event_name string, prop_name string",
-    )
+    spec = tiny_frame(spark, rows, "event_name string, prop_name string")
     return C.verify_events(
         catalog, spec, payload_cols=["context", "traits", "properties"]
     )

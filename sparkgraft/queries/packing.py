@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from .. import packing as P
 from .. import text as T
 from ..io import read_table
-from ..relational import spread
+from ..relational import spread, tiny_frame
 from .duckfrag import TOK as _TOK
 from .registry import register
 
@@ -114,11 +114,8 @@ def domain_mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle at any scale; fractional epochs are drawn by md5 bucket so
     the realized mixture is reproducible, never ``rand()``-sampled."""
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "source")
-    # 1-slice parallelize: 3 fixture rows — see queries/core.py's
-    # _event_spec note
-    plan = spark.createDataFrame(
-        spark.sparkContext.parallelize(_MIX_PLAN, 1),
-        "source string, full_epochs int, extra_thr string",
+    plan = tiny_frame(
+        spark, _MIX_PLAN, "source string, full_epochs int, extra_thr string"
     )
     return P.epoch_replicate(docs, "doc_id", "source", plan).select(
         "doc_id", "source", "epoch"

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from .. import conformance as C
 from ..io import read_table
+from ..relational import tiny_frame
 from .registry import register
 
 # wide spec: per (channel, version): expected props as CELL VALUES in
@@ -130,12 +131,7 @@ def conformance_pipeline_versioned(spark: SparkSession, sf_dir: str) -> DataFram
         ).alias("context"),
         F.col("props").alias("properties"),
     )
-    # 1-slice parallelize: 6 fixture rows — see queries/core.py's
-    # _event_spec note (a .coalesce(1) here would serialize 32 Python
-    # partition round-trips into one task)
-    spec_wide = spark.createDataFrame(
-        spark.sparkContext.parallelize(_SPEC_WIDE, 1), _SPEC_SCHEMA
-    )
+    spec_wide = tiny_frame(spark, _SPEC_WIDE, _SPEC_SCHEMA)
     out = C.verify_pipeline(
         catalog,
         spec_wide,

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import read_table
+from ..relational import tiny_frame
 from .registry import register
 
 # per-source sampling thresholds (hex-bucket upper bounds out of 0x10000):
@@ -54,12 +55,7 @@ def stratified_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure row-local predicate: it pushes to the scan side of the join,
     no shuffle at all at any scale."""
     docs = read_table(spark, sf_dir, "documents")
-    # 1-slice parallelize: 3 fixture rows — see queries/core.py's
-    # _event_spec note
-    rates = spark.createDataFrame(
-        spark.sparkContext.parallelize(_RATES, 1),
-        "source string, thr string",
-    )
+    rates = tiny_frame(spark, _RATES, "source string, thr string")
     bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4)
     thr = F.coalesce(F.col("__thr"), F.lit(_DEFAULT_THR))
     return (

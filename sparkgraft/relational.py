@@ -26,7 +26,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -50,6 +50,7 @@ __all__ = [
     "pushdown_fence",
     "bloom_prune_join",
     "golden_records",
+    "tiny_frame",
 ]
 
 
@@ -66,6 +67,30 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     if partitions is None:
         partitions = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(partitions)
+
+
+def tiny_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema_ddl: str
+) -> DataFrame:
+    """Small driver-side rows as a JVM ``LocalRelation`` typed by the
+    DDL: one Arrow table, no Spark job to build, no Python worker to
+    scan. A list-input ``createDataFrame`` or ``parallelize`` makes a
+    Python RDD instead, whose every scan runs Python tasks (serially
+    after a ``.coalesce(1)``). Each scan of the frame, a broadcast
+    build included, runs min(rows, defaultParallelism) JVM tasks. The
+    library builds no other frame from Python values; a test in
+    ``tests/test_relational.py`` pins that."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(schema_ddl)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def materialize_intermediate(
@@ -194,9 +219,8 @@ def top_k_per_group(
     non-unique ordering picks an arbitrary row among ties.
 
     Scale note: one shuffle on ``partition_by``; skewed groups are
-    handled by AQE. For k==1 with a single max column prefer
-    ``latest_per_group`` (aggregate + broadcast-able self-join is
-    cheaper than a full sort within groups when groups are huge).
+    handled by AQE. For k==1 with a single max column where ties must
+    all survive, use ``latest_per_group`` (a max window, no sort).
     """
     w = Window.partitionBy(*partition_by).orderBy(*order_by)
     out = df.withColumn(rank_col, F.row_number().over(w)).filter(
@@ -210,13 +234,15 @@ def latest_per_group(
 ) -> DataFrame:
     """Rows holding the max ``version_col`` per group (ties all kept —
     this is the reference's ``rank()==1`` semantics, event_verify.py:38-39,
-    kept in-plan: ``groupBy.max`` + join back, no ``.first()`` driver pull).
+    kept in-plan, no ``.first()`` driver pull).
 
-    The aggregate side is |groups| rows — tiny — so it broadcasts,
-    making this cheaper than a window sort when groups are very large.
+    One max window: one exchange and no join, which matters for small
+    inputs planned under several consumers. A NULL version never wins;
+    a NULL group key is its own group.
     """
-    maxes = df.groupBy(*group_cols).agg(F.max(version_col).alias(version_col))
-    return df.join(F.broadcast(maxes), [*group_cols, version_col], "inner")
+    mx = F.max(version_col).over(Window.partitionBy(*group_cols))
+    out = df.withColumn("__mx", mx)
+    return out.where(F.col(version_col) == F.col("__mx")).drop("__mx")
 
 
 def melt(

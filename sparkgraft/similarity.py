@@ -2385,6 +2385,8 @@ def ivfpq_topk_from_codes(
     sha256 over the (small) coefficient lists — no Spark job."""
     from pyspark.sql import Window
 
+    from .relational import tiny_frame
+
     if codes_fingerprint is not None:
         serving = quantizer_fingerprint(codebooks, centroids)
         if serving != codes_fingerprint:
@@ -2424,16 +2426,8 @@ def ivfpq_topk_from_codes(
         for qi, qid in enumerate(qids)
         for cid in order[qi]
     ]
-    # 1-slice parallelize (r14, guide §4): the probed-pair list is
-    # driver-computed and bounded by |Q| x n_probe, and its only
-    # consumer is the broadcast below — the default createDataFrame
-    # spreads it over defaultParallelism near-empty PYTHON partitions,
-    # which cost one Python-runner round-trip apiece per pass (profiled
-    # at sf0.1: a 32-task 6.9s-run / 0.1s-cpu stage just to surface
-    # ~50 rows). One slice, one round-trip.
-    probes = corpus_codes.sparkSession.createDataFrame(
-        corpus_codes.sparkSession.sparkContext.parallelize(probe_rows, 1),
-        "query_id long, cid long",
+    probes = tiny_frame(
+        corpus_codes.sparkSession, probe_rows, "query_id long, cid long"
     )
     qidx = {int(qid): i for i, qid in enumerate(qids)}
 

@@ -1442,8 +1442,11 @@ def bm25_index(
     indexes fold by plain sums into EXACTLY the index of the unioned
     corpus, and queries run against the folded state without
     re-tokenizing history — index maintenance at 100 TB touches only
-    the arriving batch's text."""
-    tok = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
+    the arriving batch's text. NULL-id documents are dropped: they are
+    not retrievable, and would feed avgdl and df but not N."""
+    tok = df.where(F.col(id_col).isNotNull()).select(
+        F.col(id_col), F.explode(tokens(text_col)).alias("term")
+    )
     return tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
 
 
@@ -1478,7 +1481,8 @@ def bm25_topk_from_index(
     sum, which equals the token count by construction). ``query_ids``
     selects query documents out of the indexed corpus. The term-skew
     guard defaults ON (``max_df_ratio=0.5``) with the starvation
-    fallback — see :func:`bm25_topk` for the full contract."""
+    fallback — see :func:`bm25_topk` for the full contract. N counts
+    distinct ids; :func:`bm25_index` keeps NULL ids out of the index."""
     from pyspark.sql.window import Window
 
     # four consumers read the (doc, term, tf) state (doc lengths, df

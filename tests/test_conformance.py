@@ -131,7 +131,7 @@ def test_latest_per_group_keeps_version_ties(spark):
     """Reference semantics are rank()==1 (event_verify.py:38-39): ALL
     rows tied on the max version survive selection — a row_number-based
     implementation would arbitrarily drop one. latest_per_group's
-    groupBy.max + join-back keeps ties structurally."""
+    max window (version == max(version)) keeps ties structurally."""
     from sparkgraft.relational import latest_per_group
 
     spec = spark.createDataFrame(

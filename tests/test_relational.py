@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from sparkgraft import relational as R
@@ -24,6 +27,22 @@ def test_latest_per_group_keeps_ties(spark):
     out = R.latest_per_group(df, ["grp"], "version")
     got = {(r.grp, r.version, r.payload) for r in out.collect()}
     assert got == {("a", "2.0", "x"), ("a", "2.0", "y"), ("b", "3.0", "w")}
+
+
+def test_latest_per_group_null_versions_and_keys(spark):
+    """A NULL version never wins, a group with only NULL versions
+    yields nothing, and a NULL group key is its own group."""
+    df = spark.createDataFrame(
+        [
+            ("a", None, "x"), ("a", "1.0", "y"), ("a", "1.0", "z"),
+            ("b", None, "w"), ("b", None, "v"),
+            (None, "2.0", "n"), (None, "1.0", "m"),
+        ],
+        "grp string, version string, payload string",
+    )
+    out = R.latest_per_group(df, ["grp"], "version")
+    got = {(r.grp, r.version, r.payload) for r in out.collect()}
+    assert got == {("a", "1.0", "y"), ("a", "1.0", "z"), (None, "2.0", "n")}
 
 
 def test_melt_defaults_to_non_id_columns(spark):
@@ -583,6 +602,71 @@ def test_bench_control_update_guard():
     # contended run (>20% slower best spark canary): refuse
     hot = {"spark_pre": 1.9, "spark_post": 0.55}
     assert not bench.should_update_control(ctl, 0.1, 32, hot)
-    # legacy control without cpus: same-cpus comparison assumed
+    # legacy control without cpus: its core count is unknown, so refuse
     legacy = {"sf": 0.1, "canary": {"spark_pre": 0.5, "spark_post": 0.4}}
-    assert bench.should_update_control(legacy, 0.1, 32, quiet)
+    assert not bench.should_update_control(legacy, 0.1, 32, quiet)
+
+
+def test_tiny_frame_is_a_jvm_local_relation(spark):
+    """The fixture is a LocalRelation: the executed plan scans local
+    rows, never an RDD of pickled Python rows."""
+    df = R.tiny_frame(spark, [("a", 1)], "s string, i int")
+    qe = df._jdf.queryExecution()
+    assert qe.optimizedPlan().getClass().getSimpleName() == "LocalRelation"
+    executed = qe.executedPlan().toString()
+    assert "LocalTableScan" in executed
+    assert "ExistingRDD" not in executed and "PythonRDD" not in executed
+
+
+def test_tiny_frame_keeps_declared_types_and_nulls(spark):
+    ddl = "s string, i int, b bigint"
+    rows = [("a", 1, 2**40), (None, None, None), ("c", -3, None)]
+    df = R.tiny_frame(spark, rows, ddl)
+    assert df.schema.simpleString() == "struct<s:string,i:int,b:bigint>"
+    assert [tuple(r) for r in df.collect()] == rows
+    empty = R.tiny_frame(spark, [], ddl)
+    assert empty.schema == df.schema
+    assert empty.collect() == []
+
+
+def test_tiny_frame_launches_no_spark_job(spark):
+    """Building and collecting the fixture run no job; the list-input
+    createDataFrame it replaces runs one (the control)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "tiny-frame-no-job"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        rows = R.tiny_frame(spark, [("x", 7)], "s string, n bigint").collect()
+        assert [tuple(r) for r in rows] == [("x", 7)]
+        assert list(tracker.getJobIdsForGroup(group)) == []
+        spark.createDataFrame([("x", 7)], "s string, n bigint").collect()
+        assert list(tracker.getJobIdsForGroup(group)) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_only_tiny_frame_builds_frames_from_python_values():
+    """Lint-style guard: no module under sparkgraft/ calls
+    ``createDataFrame`` or ``parallelize`` except relational.tiny_frame,
+    so every small fixture is a JVM LocalRelation and no query starts
+    Python workers (or scans a Python RDD) just to read a few rows."""
+    root = Path(R.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        allowed = set()
+        if path.name == "relational.py" and path.parent == root:
+            for node in tree.body:
+                if isinstance(node, ast.FunctionDef) and node.name == "tiny_frame":
+                    allowed = {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("createDataFrame", "parallelize")
+                and id(node) not in allowed
+            ):
+                rel = path.relative_to(root.parent)
+                offenders.append(f"{rel}:{node.lineno} {node.func.attr}")
+    assert offenders == [], "use relational.tiny_frame: " + ", ".join(offenders)

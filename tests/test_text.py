@@ -693,3 +693,34 @@ def test_bm25_index_fold_equals_one_shot_exactly(spark):
             map(tuple, bm25_topk_from_index(folded, qids, k=10).collect())
         )
         assert via_state == direct and len(direct) > 0
+
+
+def test_bm25_index_drops_null_doc_ids(spark):
+    """A NULL doc id is no retrievable document. bm25_index drops it, so
+    N (distinct ids) and avgdl (tf sum / N) equal those of the non-NULL
+    corpus, and so does every score. Kept, its tokens would enter avgdl
+    and the term dfs while count_distinct left it out of N."""
+    from sparkgraft.text import bm25_index, bm25_topk
+
+    rows = [
+        (0, "zebra quark lion"),
+        (1, "zebra quark common lion lion"),
+        (2, "zebra common common"),
+        (3, "common lion tiger quark"),
+    ]
+    schema = "doc_id long, text string"
+    clean = spark.createDataFrame(rows, schema)
+    dirty = spark.createDataFrame(
+        rows + [(None, "zebra zebra quark tiger tiger tiger")], schema
+    )
+
+    def n_avgdl(index):
+        n = F.count_distinct("doc_id")
+        r = index.agg(n.alias("n"), (F.sum("tf") / n).alias("avgdl")).first()
+        return r.n, r.avgdl
+
+    assert n_avgdl(bm25_index(dirty)) == n_avgdl(bm25_index(clean)) == (4, 3.75)
+    qids = clean.where(F.col("doc_id") == 0).select("doc_id")
+    got = sorted(map(tuple, bm25_topk(dirty, qids, k=10).collect()))
+    want = sorted(map(tuple, bm25_topk(clean, qids, k=10).collect()))
+    assert got == want and len(want) == 3
