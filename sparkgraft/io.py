@@ -35,23 +35,40 @@ TPCH_TABLES = (
 )
 
 
-def _nanos_timestamp_cols(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS), which Spark cannot map
-    natively (PARQUET_TYPE_ILLEGAL). Detected from the footer via Arrow."""
+def _footer_schema(path: str) -> tuple[list[str], StructType | None]:
+    """``(nanos columns, Spark schema)`` of one parquet file, from its
+    footer read on the driver via Arrow.
+
+    Nanos columns are stored as TIMESTAMP(NANOS), which Spark cannot map
+    natively (PARQUET_TYPE_ILLEGAL); the schema types them as the longs
+    ``nanosAsLong`` reads, and naive timestamps as TIMESTAMP_NTZ — the
+    schema Spark's own inference gives. Passing it to the reader skips
+    that inference, a one-task Spark job per read. The schema is None
+    when Arrow cannot map a type, and the result is ``([], None)`` when
+    the footer is unreadable (a directory, a remote path): Spark then
+    infers."""
     try:
+        import pyarrow as pa
         import pyarrow.parquet as pq
-        from pyarrow import types as pat
+        from pyspark.sql.pandas.types import from_arrow_schema
     except ImportError:  # pragma: no cover
-        return []
+        return [], None
     try:
         schema = pq.read_schema(path)
     except Exception:  # directory / remote path: caller handles explicitly
-        return []
-    return [
+        return [], None
+    ns_cols = [
         f.name
         for f in schema
-        if pat.is_timestamp(f.type) and f.type.unit == "ns"
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
     ]
+    as_read = pa.schema(
+        [f.with_type(pa.int64()) if f.name in ns_cols else f for f in schema]
+    )
+    try:
+        return ns_cols, from_arrow_schema(as_read, prefer_timestamp_ntz=True)
+    except TypeError:  # a type Arrow cannot map: let Spark infer
+        return ns_cols, None
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -63,9 +80,11 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     and truncated to microsecond timestamps — the same truncation DuckDB
     applies when casting TIMESTAMP_NS to TIMESTAMP, keeping the oracle
     comparison exact. Set at runtime because the session is caller-owned.
+    The schema comes from the footer (``_footer_schema``), so building the
+    frame launches no Spark job.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    ns_cols = _nanos_timestamp_cols(path)
+    ns_cols, schema = _footer_schema(path)
     # All stored timestamps are naive (isAdjustedToUTC=false). Pin UTC so
     # every LTZ<->NTZ conversion below is wall-clock identity, whatever
     # the caller's session TZ; queries then see uniform TIMESTAMP_NTZ —
@@ -73,7 +92,8 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     for c in ns_cols:
         # integer `div`, not `/`: float division loses precision on
         # ~1e18 nanosecond epoch values (double mantissa is 53 bits)

@@ -59,10 +59,10 @@ _ROBOTS = (
 def robots_url_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Plant URLs over 5 hosts x 4 path classes, one two-group robots
     file per host; ``robots_rules`` parses (one Arrow pass),
-    ``robots_gate`` runs once per agent (host-keyed rules join + the
-    per-URL argmax window). Verdicts are pure residue functions, so
-    the oracle checks the full RFC semantics without reimplementing
-    the parser."""
+    ``robots_gate`` runs once per agent (host-keyed broadcast rules
+    join + the row-local argmax fold). Verdicts are pure residue
+    functions, so the oracle checks the full RFC semantics without
+    reimplementing the parser."""
     did = F.col("doc_id")
     url = F.concat(
         F.lit("http://h"),
@@ -80,11 +80,10 @@ def robots_url_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r13 optimization round: coalesce the 5-row fixture to ONE
     # partition — spark.range spreads it over defaultParallelism (32)
-    # near-empty partitions, and the rules side is referenced four
-    # times (has_exact + eff, x2 agents), so the Arrow parse ran as
-    # 128 near-empty Python tasks per query. A real caller's rules
-    # frame carries its own data-sized partitioning; this is fixture
-    # sizing, not an operator change.
+    # near-empty partitions, and the rules side is referenced once
+    # per agent, so the Arrow parse ran as 64 near-empty Python tasks
+    # per query. A real caller's rules frame carries its own data-sized
+    # partitioning; this is fixture sizing, not an operator change.
     hosts = (
         spark.range(5)
         .coalesce(1)

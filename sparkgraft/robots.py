@@ -288,21 +288,22 @@ def robots_gate(
 
     p = W.parse_url(url_col)
     al = agent.lower()
-    # effective group per host: exact if present, else '*'
-    has_exact = rules.where(F.col("agent") == al).select(
-        F.col("host").alias("__eh")
-    ).distinct()
+    # effective group per host from ONE aggregate over the rules (one
+    # read, so the robots parse runs once): the exact-agent rules when
+    # the host has any, else '*' (collect_list skips the NULLs)
+    rule = F.struct("rule_allow", "pattern_len", "pattern_re")
     eff = (
-        rules.join(has_exact, rules["host"] == F.col("__eh"), "left")
-        .where(
-            (F.col("agent") == al)
-            | ((F.col("agent") == "*") & F.col("__eh").isNull())
-        )
+        rules.where(F.col("agent").isin(al, "*"))
         .groupBy(F.col("host").alias("__rhost"))
         .agg(
-            F.collect_list(
-                F.struct("rule_allow", "pattern_len", "pattern_re")
-            ).alias("__rules")
+            F.collect_list(F.when(F.col("agent") == al, rule)).alias("__x"),
+            F.collect_list(F.when(F.col("agent") == "*", rule)).alias("__s"),
+        )
+        .select(
+            "__rhost",
+            F.when(F.size("__x") > 0, F.col("__x"))
+            .otherwise(F.col("__s"))
+            .alias("__rules"),
         )
     )
     in_cols = urls.columns

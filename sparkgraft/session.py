@@ -11,6 +11,8 @@ cluster-level config. Here every knob that matters for a 1000-executor /
   ``coalescePartitions`` to shrink an intentionally-high value).
 - UTC session timezone so timestamp semantics match DuckDB / Parquet.
 - Arrow enabled for any pandas interchange (vectorized batches, not rows).
+- Python workers run ``sparkgraft._pydaemon`` (see its docstring) and
+  find ``sparkgraft`` on their PYTHONPATH, whatever the working directory.
 """
 
 from __future__ import annotations
@@ -18,6 +20,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory holding the ``sparkgraft`` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 
 
 def get_spark(
@@ -83,7 +89,14 @@ def get_spark(
             "-XX:MaxGCPauseMillis=200",
         )
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # workers import sparkgraft (the worker daemon and the library's
+    # Python passes) from the package root, after any extra_conf entries
+    conf[_WORKER_PYTHONPATH] = os.pathsep.join(
+        filter(None, [conf.get(_WORKER_PYTHONPATH), _PACKAGE_ROOT])
+    )
+    conf.setdefault("spark.python.daemon.module", "sparkgraft._pydaemon")
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -2,6 +2,9 @@ from __future__ import annotations
 
 import io as _io
 import contextlib
+import glob
+import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -448,3 +451,63 @@ def test_bloom_manifest_superset_guarantee_every_key(spark, sf_dir, tmp_path):
         pruned, n_read, n_total = read_bloom_pruned(spark, out, k)
         assert n_read >= 1
         assert pruned.where(F.col("doc_id") == k).count() == 1, k
+
+
+def test_read_table_footer_schema_matches_spark_inference(spark, sf_dir, tmp_path):
+    """read_table hands the reader the schema it reads from the parquet
+    footer; it must be the one Spark's own inference gives, for every
+    test table and for a TIMESTAMP(NANOS) column (read as nanos-since-
+    epoch longs, then truncated to a microsecond TIMESTAMP_NTZ)."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    nanos = pa.table(
+        {
+            "id": pa.array([1, None], pa.int64()),
+            "ts": pa.array([1_500_000_000_123_456_789, None], pa.timestamp("ns")),
+            "tags": pa.array([["a"], None], pa.list_(pa.string())),
+        }
+    )
+    pq.write_table(nanos, str(tmp_path / "nanos.parquet"), version="2.6")
+    paths = sorted(glob.glob(os.path.join(sf_dir, "*.parquet")))
+    assert len(paths) == len(IO.TPCH_TABLES)
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.set(key, "true")
+    try:
+        for path in paths + [str(tmp_path / "nanos.parquet")]:
+            _, schema = IO._footer_schema(path)
+            assert schema is not None, path
+            given = spark.read.schema(schema).parquet(path).schema
+            assert given == spark.read.parquet(path).schema, path
+        assert IO._footer_schema(str(tmp_path / "nanos.parquet"))[0] == ["ts"]
+        rows = IO.read_table(spark, str(tmp_path), "nanos").orderBy("id").collect()
+        assert [r.ts for r in rows] == [
+            None,
+            datetime.datetime(2017, 7, 14, 2, 40, 0, 123456),
+        ]
+    finally:
+        spark.conf.unset(key)
+
+
+def test_read_table_launches_no_job(spark, sf_dir):
+    """Building a table frame runs no Spark job (no footer inference);
+    a schema-less ``spark.read.parquet`` in a second group is the
+    control. Listener events arrive in order, so once the control's job
+    shows, any job read_table launched would show too."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setLocalProperty("spark.jobGroup.id", "read-table-no-job")
+        for name in IO.TPCH_TABLES:
+            IO.read_table(spark, sf_dir, name)
+        sc.setLocalProperty("spark.jobGroup.id", "read-table-control")
+        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup("read-table-control"):
+            assert time.monotonic() < deadline, "control job never showed"
+            time.sleep(0.05)
+        assert list(tracker.getJobIdsForGroup("read-table-no-job")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

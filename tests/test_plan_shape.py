@@ -206,23 +206,26 @@ PLAN_PINS: dict[str, tuple[int, int]] = {
     # dimension-mean aggregate + per-label dot aggregate + the counts
     # aggregate and its label join (AQE broadcasts the tiny side)
     "embedding_snapshot_drift": (4, 0),
-    # r13 promotions. robots_url_gate: its R6_OP_PINS shape moved here
-    # unchanged — every exchange is on the RULES side (Arrow parse,
-    # has-exact distinct, per-host array aggregate, broadcast) x two
-    # agents; the URL side takes zero shuffles beyond the spread.
-    "robots_url_gate": (9, 4),
+    # r13 promotions. robots_url_gate: every exchange beyond the spread
+    # is on the RULES side — one per-host effective-group aggregate and
+    # its broadcast per agent; the URL side takes zero shuffles. The
+    # gate picks the agent group inside that aggregate, so the rules
+    # (and their Arrow parse) are read once per gate: the has-exact
+    # distinct and its broadcast join-back are gone (was (9, 4)).
+    "robots_url_gate": (3, 2),
     # NEW r13 flagship: the full crawl chain in one plan — spread +
-    # two rules-side aggregates, then the ONLY corpus-side shuffles:
-    # the canonical-dedup groupBy and the cap's two bounded-rank
-    # windows; the two BHJs are the rules-side has-exact join and the
-    # broadcast rules-onto-URLs gate join. r14 (guide §4, VERDICT r13
+    # the rules-side effective-group aggregate and its broadcast, then
+    # the ONLY corpus-side shuffles: the canonical-dedup groupBy and the
+    # cap's bounded-rank windows; the one BHJ is the broadcast
+    # rules-onto-URLs gate join (the rules-side has-exact join is gone,
+    # was (8, 2)). r14 (guide §4, VERDICT r13
     # #4): build/crack/extract are FUSED into ONE Arrow MapInPandas
     # pass composing the same library functions (was three passes;
     # the WARC payload and HTML string no longer round-trip through
     # Arrow twice each, and only doc_id/url/text cross back) — the
-    # remaining MapInPandas prints are the tiny rules-side parse.
+    # remaining MapInPandas print is the tiny rules-side parse.
     # Never BatchEvalPython.
-    "crawl_to_corpus": (8, 2),
+    "crawl_to_corpus": (5, 1),
 }
 
 # Exact tiers that legitimately broadcast a bounded side against every

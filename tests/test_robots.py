@@ -103,6 +103,25 @@ def test_robots_gate_semantics(spark):
     assert graft[5] is True
 
 
+def test_robots_gate_parses_rules_once(spark):
+    """The effective agent group comes from ONE per-host aggregate over
+    the rules, so a gate's plan reads its rules, and runs their Arrow
+    parse, once."""
+    from sparkgraft.relational import tiny_frame
+
+    rules = R.robots_rules(
+        tiny_frame(spark, [("a.example.com", _ROBOTS)], "host string, content string")
+    )
+    urls = tiny_frame(spark, [("http://a.example.com/x",)], "url string")
+    plan = (
+        R.robots_gate(urls, rules, agent="graftbot")
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert plan.count("MapInPandas") == 1
+
+
 def test_parse_robots_unknown_directive_between_agents():
     """RFC 9309 §2.2.2: unrecognized lines must not interfere with
     group parsing — a Sitemap/Crawl-delay line BETWEEN consecutive

@@ -1,0 +1,162 @@
+"""Session tests (sparkgraft/session.py, sparkgraft/_pydaemon.py): the
+worker daemon's stat-checked zip-cache invalidation, that Python workers
+run it, and that they import sparkgraft from any working directory."""
+
+from __future__ import annotations
+
+import importlib
+import os
+import subprocess
+import sys
+import textwrap
+import zipfile
+import zipimport
+
+import pytest
+
+from sparkgraft import _pydaemon as D
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(D.__file__)))
+
+
+def _write_zip(path: str, members: dict[str, str]) -> None:
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, src in members.items():
+            zf.writestr(name, src)
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13), reason="stdlib is lazy")
+def test_zip_invalidation_rereads_only_changed_archives(tmp_path, monkeypatch):
+    """Two importers on one archive (its root and its package dir).
+    Unchanged archive: invalidating reads nothing. Rewritten with a new
+    member: exactly one re-read, and the new member imports through the
+    package importer that did not read."""
+    archive = str(tmp_path / "lib.zip")
+    _write_zip(archive, {"sgzpkg/__init__.py": "", "sgzpkg/a.py": "X = 1\n"})
+    # restored after the test, like the stamps
+    monkeypatch.setattr(
+        zipimport.zipimporter,
+        "invalidate_caches",
+        zipimport.zipimporter.invalidate_caches,
+    )
+    monkeypatch.setattr(D, "_read_stamps", {})
+    monkeypatch.syspath_prepend(archive)
+    try:
+        import sgzpkg.a
+
+        assert sgzpkg.a.X == 1
+        importers = [
+            v
+            for k, v in sys.path_importer_cache.items()
+            if k.startswith(archive) and isinstance(v, zipimport.zipimporter)
+        ]
+        assert len(importers) == 2
+        D.install()  # stamps the archive with one read
+        assert zipimport.zipimporter.invalidate_caches is D.invalidate_caches
+
+        reads: list[str] = []
+        real = zipimport._read_directory
+        monkeypatch.setattr(
+            zipimport,
+            "_read_directory",
+            lambda path: reads.append(path) or real(path),
+        )
+        importlib.invalidate_caches()
+        assert reads.count(archive) == 0
+
+        _write_zip(
+            archive,
+            {
+                "sgzpkg/__init__.py": "",
+                "sgzpkg/a.py": "X = 1\n",
+                "sgzpkg/b.py": "Y = 2\n",
+            },
+        )
+        importlib.invalidate_caches()
+        assert reads.count(archive) == 1
+        import sgzpkg.b
+
+        assert sgzpkg.b.Y == 2
+        importlib.invalidate_caches()
+        assert reads.count(archive) == 1
+    finally:
+        for name in ("sgzpkg", "sgzpkg.a", "sgzpkg.b"):
+            sys.modules.pop(name, None)
+
+
+def test_daemon_leaves_lazy_stdlib_alone(monkeypatch):
+    """Python 3.13's ``zipimporter.invalidate_caches`` only drops the
+    shared cache entry; there the daemon patches nothing."""
+    stdlib = zipimport.zipimporter.invalidate_caches
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", stdlib)
+    monkeypatch.setattr(sys, "version_info", (3, 13, 0, "final", 0))
+    D.install()
+    assert zipimport.zipimporter.invalidate_caches is stdlib
+
+
+def test_workers_run_the_library_daemon(spark):
+    """Inside a task, ``zipimporter.invalidate_caches`` is the daemon's
+    (on Python < 3.13): forked workers inherited its patch."""
+
+    def probe(batches):
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        fn = zipimport.zipimporter.invalidate_caches
+        yield pa.RecordBatch.from_pydict(
+            {
+                "fn": [f"{fn.__module__}.{fn.__qualname__}"],
+                "lazy": [sys.version_info >= (3, 13)],
+            }
+        )
+
+    [row] = spark.range(1, numPartitions=1).mapInArrow(
+        probe, "fn string, lazy boolean"
+    ).collect()
+    expected = (
+        "zipimport.zipimporter.invalidate_caches"
+        if row.lazy
+        else "sparkgraft._pydaemon.invalidate_caches"
+    )
+    assert row.fn == expected
+
+
+def test_workers_import_sparkgraft_from_any_cwd(tmp_path):
+    """A library Python pass (``robots_rules``, 2 rows) run from a
+    directory that does not hold the package, with the package root only
+    on the driver's ``sys.path``: the workers still import sparkgraft."""
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO_ROOT!r})
+        from sparkgraft import robots as R
+        from sparkgraft.relational import tiny_frame
+        from sparkgraft.session import get_spark
+
+        spark = get_spark("cwd-probe", master="local[1]")
+        hosts = tiny_frame(
+            spark,
+            [("a.com", "User-agent: *\\nDisallow: /x\\n"), ("b.com", None)],
+            "host string, content string",
+        )
+        rows = R.robots_rules(hosts).collect()
+        print("RULES", [(r.host, r.agent, r.pattern) for r in rows])
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "RULES [('a.com', '*', '/x')]" in proc.stdout
