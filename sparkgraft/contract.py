@@ -590,7 +590,7 @@ def key_skew_report(
     top1_share, topn_share, entropy)`` — the measurement that decides
     BEFORE a join whether a key needs the salted path: a key whose
     top1_share is a few percent saturates one task under plain hash
-    partitioning (the skew_probe scenario, measured 3.75x), and
+    partitioning (artifacts/SKEW_PROBE_r05.json: 3.75x), and
     entropy near ln(n_distinct) certifies a uniform key that needs
     nothing.
 

@@ -18,7 +18,12 @@ registration order after an oracled-first sort):
   query is retired first (``register(..., retired=True)``): retired
   queries keep their oracle SQL and stay locally verified by
   tests/test_retired_oracles.py and ``tools/oracle_check.py --retired``,
-  they just stop consuming driver slots.
+  they just stop consuming driver slots;
+- a retired query stays only for a reason recorded in
+  ``artifacts/RETIRED_REACH.json``: code names it, or it alone reaches
+  some library lines. ``tools/reach_report.py`` regenerates the report
+  and deletes nothing itself; tests/test_retired_oracles.py fails until
+  the registry holds exactly the report's ``kept`` entries.
 
 Alignment rules (the driver hashes values order-insensitively after
 sorting columns by name):

@@ -15,7 +15,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..analytics import cohort_retention, funnel_steps, time_decayed_sum
+from ..analytics import funnel_steps, time_decayed_sum
 from ..io import read_table
 from .registry import register
 
@@ -62,69 +62,6 @@ def user_funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFra
     return funnel_steps(
         ev, ["view", "click", "purchase"], within="7 days"
     )
-
-
-@register(
-    "weekly_cohort_retention",
-    retired=True,
-    oracle="""
-    WITH firsts AS (
-        SELECT user_id, date_trunc('week', min(ts)) AS cohort
-        FROM events GROUP BY 1
-    ),
-    active AS (
-        SELECT DISTINCT user_id, date_trunc('week', ts) AS period
-        FROM events
-    )
-    SELECT f.cohort AS cohort_start,
-           CAST(date_diff('day', f.cohort, a.period) // 7 AS BIGINT)
-               AS period_offset,
-           CAST(count(DISTINCT a.user_id) AS BIGINT) AS n_active_users
-    FROM active a JOIN firsts f USING (user_id)
-    GROUP BY 1, 2
-    """,
-)
-def weekly_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """analytics.cohort_retention by week: users cohorted by the week
-    of their first event; each (cohort, week-offset) cell counts the
-    cohort members active that week — offset 0 is the cohort size.
-    Two map-side aggregations and a tiny final group-by."""
-    ev = read_table(spark, sf_dir, "events")
-    return cohort_retention(ev, period="week")
-
-
-@register(
-    "event_transition_matrix",
-    # NEW r6 retired tier: the Markov transition matrix with the
-    # (ts, id) ordering, pair counts, and in-plan conditional
-    # probabilities all recomputed in SQL.
-    retired=True,
-    oracle="""
-    WITH seq AS (
-        SELECT user_id, event_type AS cur,
-               lead(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id) AS nxt
-        FROM events
-    ),
-    pairs AS (
-        SELECT cur, nxt, count(*) AS n_transitions
-        FROM seq WHERE nxt IS NOT NULL GROUP BY 1, 2
-    )
-    SELECT cur, nxt, n_transitions,
-           round(CAST(n_transitions AS DOUBLE)
-                 / sum(n_transitions) OVER (PARTITION BY cur), 6) AS p_next
-    FROM pairs
-    """,
-)
-def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """analytics.event_transitions over the events table: P(next event
-    type | current) per adjacent pair in each user's (ts, event_id)-
-    ordered stream. One user-keyed window shuffle, a |types|^2-row
-    aggregate, in-plan conditional probabilities — the next-action
-    model a product-analytics stack derives before anything fancier."""
-    from ..analytics import event_transitions
-
-    return event_transitions(read_table(spark, sf_dir, "events"))
 
 
 @register(

@@ -202,32 +202,6 @@ def conformance_three_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# A1: grouped counts (reference event_verify.py:44)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "events_per_type",
-    # retired round 4 (coverage budget): grouped counting (A1/A2) is
-    # active in json_value_stats, json_keys_per_type, every conformance
-    # query, and lineitem_grouping_sets; countDistinct stays active in
-    # user_funnel_set_ops
-    retired=True,
-    oracle="""
-    SELECT event_type, count(*) AS n_events,
-           count(DISTINCT user_id) AS n_users
-    FROM events GROUP BY event_type
-    """,
-)
-def events_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = read_table(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("user_id").alias("n_users"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # TPC-H Q1 shape: multi-agg group-by with derived expressions (A1-A5, F17)
 # ---------------------------------------------------------------------------
 
@@ -299,43 +273,3 @@ def latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, ["user_id"], [F.desc("ts"), F.desc("event_id")], k=1
     )
     return latest.select("user_id", "event_id", "ts", "event_type", "value")
-
-
-_PRICING_ANSI = """
-    SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-               AS sum_base_price,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-               AS sum_disc_price,
-           round(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-                 / count(*), 4) AS avg_qty,
-           round(CAST(SUM(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE)
-                 / count(*), 4) AS avg_disc,
-           count(*) AS count_order
-    FROM lineitem
-    GROUP BY l_returnflag, l_linestatus
-"""
-
-
-@register(
-    "pricing_summary_sql",
-    # Retired-tier BREADTH query: the spark.sql() SURFACE itself under
-    # the oracle — ONE ANSI string executes on BOTH engines (Spark over
-    # io.register_views temp views, DuckDB over its parquet views) and
-    # must hash-match. Proves a user can run their existing ANSI SQL
-    # through this engine unchanged, Catalyst planning included.
-    retired=True,
-    oracle=_PRICING_ANSI,
-)
-def pricing_summary_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SQL front door: register the tables as temp views
-    (io.register_views) and execute the ORACLE'S OWN ANSI text via
-    spark.sql — dialect-portable SQL, zero DataFrame code. Catalyst
-    compiles it to the same aggregate plan as the DataFrame
-    pricing_summary (decimal-exact sums, map-side combine)."""
-    from ..io import register_views
-
-    register_views(spark, sf_dir, "lineitem")
-    return spark.sql(_PRICING_ANSI)

@@ -208,408 +208,3 @@ def documents_contract_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("column", "col_name")
         .withColumnRenamed("check", "check_kind")
     )
-
-
-@register(
-    "documents_profile_report",
-    # Retired-tier BREADTH query: profile_table verified vs DuckDB on
-    # every pytest run. The HLL distinct sketch is engine-specific, so
-    # (approx_distinct_users precedent) the compared column is the
-    # sketch's ACCURACY BOUND — |approx - exact| / exact <= 5% — which
-    # the oracle states as literal TRUE; all other statistics compare
-    # exactly. rsd=0.02 (not the 0.05 default): the bound must hold at
-    # EVERY tested scale, and the r6 full-registry sf0.1 re-check
-    # caught the default sketch 6.6% off on 5000 distinct doc_ids —
-    # a bound asserted as TRUE needs a sketch sized well inside it.
-    retired=True,
-    oracle="""
-    SELECT col_name, n_rows, n_null,
-           round(CAST(n_null AS DOUBLE) / greatest(n_rows, 1), 6) AS null_frac,
-           min_str, max_str, TRUE AS distinct_ok
-    FROM (
-        SELECT 'doc_id' AS col_name, count(*) AS n_rows,
-               CAST(sum(CASE WHEN doc_id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_null,
-               CAST(min(doc_id) AS VARCHAR) AS min_str,
-               CAST(max(doc_id) AS VARCHAR) AS max_str
-        FROM documents
-        UNION ALL
-        SELECT 'lang', count(*),
-               CAST(sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-               min(lang), max(lang)
-        FROM documents
-        UNION ALL
-        SELECT 'n_chars', count(*),
-               CAST(sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-               CAST(min(n_chars) AS VARCHAR), CAST(max(n_chars) AS VARCHAR)
-        FROM documents
-    )
-    """,
-)
-def documents_profile_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """contract.profile_table over documents (doc_id / lang / n_chars),
-    with the HLL distinct estimate reduced to its cross-engine-checkable
-    accuracy bound: ``distinct_ok`` = estimate within 5% of the exact
-    count (the raw sketch value is engine-specific; the bound is the
-    portable assertion, same pattern as approx_distinct_users)."""
-    from ..contract import profile_table
-
-    docs = read_table(spark, sf_dir, "documents")
-    cols = ["doc_id", "lang", "n_chars"]
-    prof = profile_table(docs, cols, rsd=0.02).withColumnRenamed("column", "col_name")
-    exact = (
-        docs.agg(
-            *[F.count_distinct(c).alias(f"__ex_{c}") for c in cols]
-        )
-        .selectExpr(
-            f"stack({len(cols)}, "
-            + ", ".join(f"'{c}', `__ex_{c}`" for c in cols)
-            + ") as (col_name, __exact)"
-        )
-    )
-    return prof.join(F.broadcast(exact), "col_name").select(
-        "col_name",
-        "n_rows",
-        "n_null",
-        "null_frac",
-        "min_str",
-        "max_str",
-        (
-            F.abs(F.col("n_distinct_approx") - F.col("__exact"))
-            / F.greatest(F.col("__exact").cast("double"), F.lit(1.0))
-            <= 0.05
-        ).alias("distinct_ok"),
-    )
-
-
-@register(
-    "bigram_pmi_topk",
-    # Retired-tier breadth: collocation extraction (PMI over adjacent
-    # word pairs) oracle-verified on every pytest run, ln() math
-    # reproduced on both engines like tfidf_top_terms.
-    f"""
-    WITH tok AS (SELECT {_TOK} AS tok FROM documents),
-    uni AS (
-        SELECT word, CAST(count(*) AS BIGINT) AS cw
-        FROM (SELECT unnest(tok) AS word FROM tok) GROUP BY word
-    ),
-    n1 AS (SELECT sum(cw) AS n1 FROM uni),
-    bi AS (
-        SELECT bigram, CAST(count(*) AS BIGINT) AS pair_count
-        FROM (
-            SELECT unnest(CASE WHEN len(tok) < 2 THEN []::VARCHAR[]
-                ELSE list_transform(range(1, len(tok)),
-                                    i -> tok[i] || ' ' || tok[i+1]) END) AS bigram
-            FROM tok
-        ) GROUP BY bigram
-    ),
-    n2 AS (SELECT sum(pair_count) AS n2 FROM bi)
-    SELECT bigram, pair_count,
-           round(ln((CAST(pair_count AS DOUBLE) / n2)
-                    / ((CAST(u1.cw AS DOUBLE) / n1)
-                       * (CAST(u2.cw AS DOUBLE) / n1))), 6) AS pmi
-    FROM bi
-    JOIN uni u1 ON string_split(bigram, ' ')[1] = u1.word
-    JOIN uni u2 ON string_split(bigram, ' ')[2] = u2.word
-    CROSS JOIN n1 CROSS JOIN n2
-    WHERE pair_count >= 5
-    ORDER BY pmi DESC, bigram ASC
-    LIMIT 200
-    """,
-    retired=True,
-)
-def bigram_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-200 collocations by PMI (text.collocations) — the
-    phrase-mining / tokenizer-merge-candidate primitive. Both engines
-    compute the identical ln() on identically rounded count ratios;
-    the (pmi, bigram) sort key is unique so the LIMIT boundary is
-    deterministic."""
-    docs = read_table(spark, sf_dir, "documents")
-    return T.collocations(docs, "text", min_count=5, k=200)
-
-
-@register(
-    "heavy_hitter_words_report",
-    # Retired-tier breadth: the two-pass heavy-hitters path verified vs
-    # DuckDB. The Misra-Gries pass is not SQL-expressible, but its
-    # OUTPUT contract is ("equal to the full aggregation at the same
-    # threshold"), so the oracle simply states the full aggregation —
-    # the sketch's exactness claim IS the cross-engine assertion.
-    f"""
-    WITH tok AS (SELECT {_TOK} AS tok FROM documents),
-    words AS (SELECT unnest(tok) AS word FROM tok),
-    uni AS (SELECT word, CAST(count(*) AS BIGINT) AS term_freq
-            FROM words GROUP BY word),
-    n AS (SELECT sum(term_freq) AS n FROM uni)
-    SELECT word, term_freq,
-           round(CAST(term_freq AS DOUBLE) / n, 6) AS share
-    FROM uni CROSS JOIN n
-    WHERE term_freq >= n * 0.005
-    """,
-    retired=True,
-)
-def heavy_hitter_words_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """text.heavy_hitter_words at a 0.5% share threshold — the
-    bounded-memory path for vocabularies too large to aggregate,
-    verified against the unbounded full aggregation it must equal."""
-    docs = read_table(spark, sf_dir, "documents")
-    return T.heavy_hitter_words(docs, "text", min_share=0.005)
-
-
-@register(
-    "documents_profile_drift",
-    # Retired-tier BREADTH query: snapshot-over-snapshot drift report
-    # oracle-verified on every pytest run. Exact statistics (row
-    # counts, null fractions, deltas) compare bit-for-bit; the
-    # HLL-derived distinct_ratio reduces to its accuracy bound
-    # (estimate ratio within 10% of the exact ratio), stated as
-    # literal TRUE by the oracle — the documents_profile_report
-    # precedent applied to the drift pair.
-    retired=True,
-    oracle="""
-    WITH b AS (
-        SELECT count(*) AS n_rows,
-               round(CAST(sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END)
-                          AS DOUBLE) / greatest(count(*), 1), 6) AS nf_lang,
-               round(CAST(sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END)
-                          AS DOUBLE) / greatest(count(*), 1), 6) AS nf_chars
-        FROM documents
-    ),
-    a AS (
-        SELECT count(*) AS n_rows,
-               round(CAST(sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END)
-                          AS DOUBLE) / greatest(count(*), 1), 6) AS nf_lang,
-               round(CAST(sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END)
-                          AS DOUBLE) / greatest(count(*), 1), 6) AS nf_chars
-        FROM documents WHERE n_chars >= 120
-    )
-    SELECT 'doc_id' AS column, b.n_rows AS n_rows_before,
-           a.n_rows AS n_rows_after,
-           0.0 AS null_frac_before, 0.0 AS null_frac_after,
-           0.0 AS null_frac_delta, TRUE AS distinct_ratio_ok
-    FROM b, a
-    UNION ALL
-    SELECT 'lang', b.n_rows, a.n_rows, b.nf_lang, a.nf_lang,
-           round(a.nf_lang - b.nf_lang, 6), TRUE
-    FROM b, a
-    UNION ALL
-    SELECT 'n_chars', b.n_rows, a.n_rows, b.nf_chars, a.nf_chars,
-           round(a.nf_chars - b.nf_chars, 6), TRUE
-    FROM b, a
-    """,
-)
-def documents_profile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """contract.profile_drift between the full corpus and its
-    length-filtered next snapshot (n_chars >= 120 — the common quality
-    cut): exact drift statistics verified cross-engine, the HLL
-    distinct ratio reduced to its portable accuracy bound (within 10%
-    of the exact distinct ratio on both snapshots)."""
-    from ..contract import profile_drift
-
-    docs = read_table(spark, sf_dir, "documents")
-    after = docs.where(F.col("n_chars") >= 120)
-    cols = ["doc_id", "lang", "n_chars"]
-    drift = profile_drift(docs, after, cols)
-    exact = (
-        docs.agg(*[F.count_distinct(c).alias(f"__b_{c}") for c in cols])
-        .crossJoin(
-            after.agg(*[F.count_distinct(c).alias(f"__a_{c}") for c in cols])
-        )
-        .selectExpr(
-            f"stack({len(cols)}, "
-            + ", ".join(f"'{c}', `__b_{c}`, `__a_{c}`" for c in cols)
-            + ") as (column, __exb, __exa)"
-        )
-    )
-    exact_ratio = F.col("__exa").cast("double") / F.greatest(
-        F.col("__exb").cast("double"), F.lit(1.0)
-    )
-    return drift.join(F.broadcast(exact), "column").select(
-        "column",
-        "n_rows_before",
-        "n_rows_after",
-        "null_frac_before",
-        "null_frac_after",
-        "null_frac_delta",
-        (
-            F.abs(F.col("distinct_ratio") - exact_ratio)
-            / F.greatest(exact_ratio, F.lit(1e-9))
-            <= 0.1
-        ).alias("distinct_ratio_ok"),
-    )
-
-
-@register(
-    "lineitem_correlations",
-    # Retired-tier BREADTH query: one-scan pairwise Pearson verified on
-    # every pytest run — the decimal-exact sufficient statistics and
-    # the correlation arithmetic recomputed in SQL.
-    retired=True,
-    oracle="""
-    WITH s AS (
-        SELECT
-            CAST(sum(CASE WHEN l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_qe,
-            CAST(sum(CASE WHEN l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL THEN CAST(l_quantity AS DECIMAL(38,10)) ELSE 0 END) AS DOUBLE) AS sx_qe,
-            CAST(sum(CASE WHEN l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL THEN CAST(l_extendedprice AS DECIMAL(38,10)) ELSE 0 END) AS DOUBLE) AS sy_qe,
-            CAST(sum(CASE WHEN l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL THEN CAST(l_quantity * l_quantity AS DECIMAL(38,10)) ELSE 0 END) AS DOUBLE) AS sxx_qe,
-            CAST(sum(CASE WHEN l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL THEN CAST(l_extendedprice * l_extendedprice AS DECIMAL(38,10)) ELSE 0 END) AS DOUBLE) AS syy_qe,
-            CAST(sum(CASE WHEN l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL THEN CAST(l_quantity * l_extendedprice AS DECIMAL(38,10)) ELSE 0 END) AS DOUBLE) AS sxy_qe,
-            CAST(sum(CASE WHEN l_quantity IS NOT NULL AND l_discount IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_qd,
-            CAST(sum(CASE WHEN l_quantity IS NOT NULL AND l_discount IS NOT NULL THEN CAST(l_quantity AS DECIMAL(38,10)) ELSE 0 END) AS DOUBLE) AS sx_qd,
-            CAST(sum(CASE WHEN l_quantity IS NOT NULL AND l_discount IS NOT NULL THEN CAST(l_discount AS DECIMAL(38,10)) ELSE 0 END) AS DOUBLE) AS sy_qd,
-            CAST(sum(CASE WHEN l_quantity IS NOT NULL AND l_discount IS NOT NULL THEN CAST(l_quantity * l_quantity AS DECIMAL(38,10)) ELSE 0 END) AS DOUBLE) AS sxx_qd,
-            CAST(sum(CASE WHEN l_quantity IS NOT NULL AND l_discount IS NOT NULL THEN CAST(l_discount * l_discount AS DECIMAL(38,10)) ELSE 0 END) AS DOUBLE) AS syy_qd,
-            CAST(sum(CASE WHEN l_quantity IS NOT NULL AND l_discount IS NOT NULL THEN CAST(l_quantity * l_discount AS DECIMAL(38,10)) ELSE 0 END) AS DOUBLE) AS sxy_qd,
-            CAST(sum(CASE WHEN l_extendedprice IS NOT NULL AND l_discount IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_ed,
-            CAST(sum(CASE WHEN l_extendedprice IS NOT NULL AND l_discount IS NOT NULL THEN CAST(l_extendedprice AS DECIMAL(38,10)) ELSE 0 END) AS DOUBLE) AS sx_ed,
-            CAST(sum(CASE WHEN l_extendedprice IS NOT NULL AND l_discount IS NOT NULL THEN CAST(l_discount AS DECIMAL(38,10)) ELSE 0 END) AS DOUBLE) AS sy_ed,
-            CAST(sum(CASE WHEN l_extendedprice IS NOT NULL AND l_discount IS NOT NULL THEN CAST(l_extendedprice * l_extendedprice AS DECIMAL(38,10)) ELSE 0 END) AS DOUBLE) AS sxx_ed,
-            CAST(sum(CASE WHEN l_extendedprice IS NOT NULL AND l_discount IS NOT NULL THEN CAST(l_discount * l_discount AS DECIMAL(38,10)) ELSE 0 END) AS DOUBLE) AS syy_ed,
-            CAST(sum(CASE WHEN l_extendedprice IS NOT NULL AND l_discount IS NOT NULL THEN CAST(l_extendedprice * l_discount AS DECIMAL(38,10)) ELSE 0 END) AS DOUBLE) AS sxy_ed
-        FROM lineitem
-    )
-    SELECT 'l_quantity' AS col_a, 'l_extendedprice' AS col_b, n_qe AS n,
-           round((n_qe * sxy_qe - sx_qe * sy_qe)
-                 / (sqrt(n_qe * sxx_qe - sx_qe * sx_qe)
-                    * sqrt(n_qe * syy_qe - sy_qe * sy_qe)), 6) AS corr
-    FROM s
-    UNION ALL
-    SELECT 'l_quantity', 'l_discount', n_qd,
-           round((n_qd * sxy_qd - sx_qd * sy_qd)
-                 / (sqrt(n_qd * sxx_qd - sx_qd * sx_qd)
-                    * sqrt(n_qd * syy_qd - sy_qd * sy_qd)), 6)
-    FROM s
-    UNION ALL
-    SELECT 'l_extendedprice', 'l_discount', n_ed,
-           round((n_ed * sxy_ed - sx_ed * sy_ed)
-                 / (sqrt(n_ed * sxx_ed - sx_ed * sx_ed)
-                    * sqrt(n_ed * syy_ed - sy_ed * sy_ed)), 6)
-    FROM s
-    """,
-)
-def lineitem_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """contract.numeric_correlations over lineitem's three measures:
-    every unordered pair's Pearson r from ONE map-side-combinable
-    aggregate of decimal-exact sufficient statistics — the
-    broken-join / unit-change drift detector."""
-    from ..contract import numeric_correlations
-
-    li = read_table(spark, sf_dir, "lineitem")
-    return numeric_correlations(
-        li, ["l_quantity", "l_extendedprice", "l_discount"]
-    )
-
-
-@register(
-    "order_price_mad_outliers",
-    # Retired-tier BREADTH query: robust (median/MAD) outlier
-    # detection verified on every pytest run — both exact medians, the
-    # modified z-score arithmetic, and the degenerate-MAD fallback all
-    # recomputed in SQL (quantile_cont == Spark's exact interpolated
-    # percentile; identical expression shape; round(6) both sides).
-    retired=True,
-    oracle="""
-    WITH base AS (
-        SELECT o_orderkey, o_orderpriority,
-               CAST(o_totalprice AS DOUBLE) AS o_totalprice
-        FROM orders WHERE o_custkey < 200
-    ),
-    med AS (
-        SELECT o_orderpriority, quantile_cont(o_totalprice, 0.5) AS med
-        FROM base GROUP BY 1
-    ),
-    wm AS (
-        SELECT b.*, m.med FROM base b JOIN med m USING (o_orderpriority)
-    ),
-    mad AS (
-        SELECT o_orderpriority,
-               quantile_cont(abs(o_totalprice - med), 0.5) AS mad
-        FROM wm GROUP BY 1
-    )
-    SELECT w.o_orderkey, w.o_orderpriority, w.o_totalprice, w.med, d.mad,
-           round(CASE WHEN d.mad > 0
-                 THEN 0.6745 * (w.o_totalprice - w.med) / d.mad END, 6)
-               AS robust_z,
-           CASE WHEN d.mad > 0
-                THEN abs(0.6745 * (w.o_totalprice - w.med) / d.mad) > 3.5
-                ELSE abs(w.o_totalprice - w.med) > 0 END AS is_outlier
-    FROM wm w JOIN mad d USING (o_orderpriority)
-    """,
-)
-def order_price_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """contract.mad_outliers over order prices grouped by priority:
-    the robust anomaly flag (median/MAD modified z-score, 50%
-    breakdown point) that mean/stddev z-scores can't give you — the
-    outliers being hunted inflate the stddev and hide themselves.
-    Per-group stats are broadcast-sized at any corpus scale."""
-    from ..contract import mad_outliers
-
-    orders = read_table(spark, sf_dir, "orders").where(F.col("o_custkey") < 200)
-    return mad_outliers(
-        orders,
-        ["o_orderpriority"],
-        "o_totalprice",
-        id_cols=["o_orderkey"],
-    )
-
-
-@register(
-    "order_price_psi_drift",
-    # Retired-tier BREADTH query: the PSI distribution-shift score
-    # verified on every pytest run — binning, per-bin fractions
-    # (round-6 before the log), the epsilon guard, and the
-    # decimal-summed PSI all recomputed in SQL.
-    retired=True,
-    oracle="""
-    WITH base AS (
-        SELECT CAST(o_totalprice AS DOUBLE) AS v FROM orders
-    ),
-    cur AS (
-        SELECT CAST(o_totalprice AS DOUBLE) * 1.15 AS v
-        FROM orders WHERE o_custkey % 2 = 1
-    ),
-    bb AS (
-        SELECT CAST(least(greatest(floor((v - 0.0) / 60000.0), 0), 9)
-                    AS INT) AS bin, count(*) AS n
-        FROM base GROUP BY 1
-    ),
-    cc AS (
-        SELECT CAST(least(greatest(floor((v - 0.0) / 60000.0), 0), 9)
-                    AS INT) AS bin, count(*) AS n
-        FROM cur GROUP BY 1
-    ),
-    grid AS (SELECT unnest(range(0, 10)) AS bin),
-    j AS (
-        SELECT g.bin, coalesce(bb.n, 0) AS nb, coalesce(cc.n, 0) AS nc
-        FROM grid g LEFT JOIN bb ON g.bin = bb.bin
-                    LEFT JOIN cc ON g.bin = cc.bin
-    ),
-    tot AS (SELECT sum(nb) AS tb, sum(nc) AS tc FROM j),
-    terms AS (
-        SELECT tot.tb, tot.tc,
-               CAST((greatest(round(j.nb / tot.tb, 6), 1e-6)
-                     - greatest(round(j.nc / tot.tc, 6), 1e-6))
-                    * ln(greatest(round(j.nb / tot.tb, 6), 1e-6)
-                         / greatest(round(j.nc / tot.tc, 6), 1e-6))
-                    AS DECIMAL(38,10)) AS term
-        FROM j, tot
-    )
-    SELECT CAST(tb AS BIGINT) AS n_baseline,
-           CAST(tc AS BIGINT) AS n_current,
-           round(CAST(sum(term) AS DOUBLE), 6) AS psi
-    FROM terms GROUP BY tb, tc
-    """,
-)
-def order_price_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """contract.psi_drift: the Population Stability Index between the
-    full order-price distribution and a 15%-inflated half-sample — the
-    distribution-shift score model monitoring gates on, which
-    profile_drift's null/cardinality checks cannot see. Two one-pass
-    bin aggregates; the PSI arithmetic runs on 10-row frames."""
-    from ..contract import psi_drift
-
-    orders = read_table(spark, sf_dir, "orders")
-    current = orders.where(F.col("o_custkey") % 2 == 1).withColumn(
-        "o_totalprice", F.col("o_totalprice") * 1.15
-    )
-    return psi_drift(orders, current, "o_totalprice", 0.0, 600000.0, bins=10)

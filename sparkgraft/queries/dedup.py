@@ -218,121 +218,6 @@ def decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "near_dup_doc_clusters",
-    # retired r6 (slot rotation): near_dup_quality_keep supersets this
-    # query (identical closure + the keep policy) and holds the active
-    # slot; this stays locally oracled on every pytest run
-    retired=True,
-    oracle=f"""
-    WITH RECURSIVE {_SH_CTE},
-    np AS (SELECT doc_a, doc_b FROM jac WHERE jaccard >= 0.2),
-    edges AS (
-        SELECT doc_a AS u, doc_b AS v FROM np
-        UNION
-        SELECT doc_b, doc_a FROM np
-    ),
-    reach(n, m) AS (
-        SELECT u, u FROM edges
-        UNION
-        SELECT r.n, e.v FROM reach r JOIN edges e ON r.m = e.u
-    )
-    SELECT n AS doc_id, CAST(min(m) AS BIGINT) AS cluster_id
-    FROM reach GROUP BY n
-    """,
-)
-def near_dup_doc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTER resolution — pairwise similarity is not
-    transitive, so the pair output (3-gram Jaccard >= 0.2 here) runs
-    through connected components (iterative min-label propagation,
-    dedup.near_dup_clusters) to yield one canonical survivor id per
-    component. The oracle computes the identical transitive closure
-    with a recursive CTE, so the driver verifies the engine's ONE
-    iterative operator end-to-end against declarative SQL — the
-    fixpoint loop, not just one round of propagation."""
-    docs = read_table(spark, sf_dir, "documents")
-    pairs = D.jaccard_pairs(docs, "text", "doc_id", k=3, threshold=0.2)
-    return D.near_dup_clusters(pairs.select("doc_a", "doc_b"))
-
-
-@register(
-    "ngram_containment_pairs",
-    # Retired-tier breadth: the asymmetric-containment variant of the
-    # inverted-index pair machinery, oracle-verified on every pytest
-    # run. The jac CTE already carries common/size_a/size_b.
-    retired=True,
-    oracle=f"""
-    WITH {_SH_CTE}
-    SELECT doc_a, doc_b, CAST(common AS BIGINT) AS common,
-           CAST(size_a AS BIGINT) AS size_a,
-           CAST(size_b AS BIGINT) AS size_b,
-           round(CAST(common AS DOUBLE) / size_a, 6) AS containment_a,
-           round(CAST(common AS DOUBLE) / size_b, 6) AS containment_b
-    FROM jac
-    WHERE greatest(round(CAST(common AS DOUBLE) / size_a, 6),
-                   round(CAST(common AS DOUBLE) / size_b, 6)) >= 0.5
-    """,
-)
-def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric containment pairs over documents (dedup
-    .containment_pairs): catches a document embedded in a larger one,
-    which symmetric Jaccard under-scores. Same inverted-index plan as
-    ngram_jaccard_near_dups; only the score/filter differs."""
-    docs = read_table(spark, sf_dir, "documents")
-    return D.containment_pairs(docs, "text", "doc_id", k=3, threshold=0.5)
-
-
-@register(
-    "incremental_dedup_refresh",
-    # Retired-tier breadth: dedup.dedup_incremental verified vs DuckDB
-    # on every pytest run. History = the doc_id%7==0 slice's
-    # fingerprints; the "arriving batch" is everything else.
-    retired=True,
-    oracle="""
-    WITH fp AS (
-        SELECT doc_id, source,
-               md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))
-                   AS fingerprint
-        FROM documents
-    ),
-    store AS (SELECT DISTINCT fingerprint FROM fp WHERE doc_id % 7 = 0),
-    fresh AS (
-        -- NOT EXISTS, not NOT IN: a NULL fingerprint in the store
-        -- would make NOT IN yield NULL for every row (dropping the
-        -- whole batch), while Spark's left_anti keeps rows whose key
-        -- matches nothing — NOT EXISTS has exactly those semantics
-        SELECT * FROM fp
-        WHERE doc_id % 7 <> 0
-          AND NOT EXISTS (
-              SELECT 1 FROM store s WHERE s.fingerprint = fp.fingerprint
-          )
-    )
-    SELECT doc_id, source, fingerprint FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY fingerprint ORDER BY doc_id ASC) AS rn
-        FROM fresh
-    ) WHERE rn = 1
-    """,
-)
-def incremental_dedup_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup.dedup_incremental end-to-end: the corpus's doc_id%7==0
-    slice plays the historical fingerprint store, the rest arrives as
-    the new batch — survivors are batch docs whose content fingerprint
-    is neither in the store nor earlier in the batch (lowest doc_id
-    wins). The oracle restates the anti-join + keep-first window in
-    plain SQL, so the store lookup AND the within-batch tie-break are
-    both cross-engine verified."""
-    docs = read_table(spark, sf_dir, "documents")
-    part = F.col("doc_id") % 7 == 0
-    from ..text import fingerprint as _fp
-
-    store = docs.where(part).select(_fp("text").alias("fingerprint"))
-    new = docs.where(~part).select("doc_id", "source", "text")
-    return D.dedup_incremental(
-        new, store, "text", id_col="doc_id", fingerprint_col="fingerprint"
-    ).select("doc_id", "source", "fingerprint")
-
-
 _COS_SQL = (
     "round(list_sum(list_transform(list_zip({a}, {b}), "
     "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) / "
@@ -574,82 +459,6 @@ def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.dedup_spans(docs, "text", "doc_id", avg_tokens=8)
 
 
-@register(
-    "near_dup_incremental_arrivals",
-    # Retired-tier BREADTH query: cross-run NEAR-dup dedup (arrivals
-    # vs signature history) verified on every pytest run — both
-    # halves' signatures, band derivation, the candidate join, the
-    # agreement-fraction estimator, and the best-match tiebreak all
-    # recomputed in SQL.
-    retired=True,
-    oracle=f"""
-    WITH tok AS (SELECT doc_id, {{tok}} AS tok FROM documents),
-    shs AS (SELECT doc_id, {_SHINGLES} AS shingles FROM tok),
-    sigs AS (SELECT doc_id, {_SIG_SQL} AS sig FROM shs
-             WHERE len(shingles) > 0),
-    new_sigs AS (SELECT * FROM sigs WHERE doc_id % 2 = 1),
-    old_sigs AS (SELECT * FROM sigs WHERE doc_id % 2 = 0),
-    new_banded AS (SELECT doc_id, {_BANDS_SQL} FROM new_sigs),
-    old_banded AS (SELECT doc_id, {_BANDS_SQL} FROM old_sigs),
-    new_bands AS ({_BAND_UNION.replace('banded', 'new_banded')}),
-    old_bands AS ({_BAND_UNION.replace('banded', 'old_banded')}),
-    cands AS (
-        SELECT DISTINCT n.doc_id, o.doc_id AS old_id
-        FROM new_bands n JOIN old_bands o USING (band, band_hash)
-    ),
-    est AS (
-        SELECT c.doc_id, c.old_id,
-               CAST(len(list_filter(list_zip(ns.sig, os.sig),
-                                    p -> p[1] = p[2])) AS DOUBLE)
-                 / CAST(16.0 AS DOUBLE) AS est_jaccard
-        FROM cands c
-        JOIN new_sigs ns ON c.doc_id = ns.doc_id
-        JOIN old_sigs os ON c.old_id = os.doc_id
-    ),
-    best AS (
-        SELECT * FROM (
-            SELECT doc_id, old_id, est_jaccard,
-                   row_number() OVER (PARTITION BY doc_id
-                                      ORDER BY est_jaccard DESC,
-                                               old_id ASC) AS rn
-            FROM est
-        ) WHERE rn = 1
-    )
-    SELECT n.doc_id,
-           b.old_id AS matched_id,
-           b.est_jaccard,
-           coalesce(b.est_jaccard >= 0.25, FALSE) AS is_dup
-    FROM new_sigs n LEFT JOIN best b USING (doc_id)
-    """.replace("{tok}", _TOK),
-)
-def near_dup_incremental_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup.near_dup_incremental end to end: even-id documents stand
-    in for the historical signature store (a real run reads the stored
-    ``(doc_id, signature)`` parquet — a few hundred bytes per doc, no
-    text), odd-id documents arrive, and each arrival reports its best
-    historical match by ESTIMATED Jaccard (minhash agreement fraction)
-    with the >= 0.25 verdict. The only text pass is over the arrivals;
-    history participates as row-local band derivation + one hash-keyed
-    join — how near-dup dedup stays incremental at 100 TB. Empty-text
-    docs have no signature and sit out on both sides."""
-    docs = read_table(spark, sf_dir, "documents")
-    history = docs.where(F.col("doc_id") % 2 == 0)
-    arrivals = docs.where(F.col("doc_id") % 2 == 1)
-    seen = (
-        D._doc_shingle_sets(history, "text", "doc_id", 3)
-        .where(F.size("shingles") > 0)
-        .select(
-            "doc_id",
-            D.signature_from_shingles(F.col("shingles"), 16).alias(
-                "signature"
-            ),
-        )
-    )
-    return D.near_dup_incremental(
-        arrivals, seen, "text", "doc_id", threshold=0.25
-    ).select("doc_id", "matched_id", "est_jaccard", "is_dup")
-
-
 # Planted boilerplate for the line-removal gate: two template lines
 # salted into large residue classes (~1/2 and ~1/3 of the corpus), far
 # above the min_docs=10 threshold; the organic 8-token word-soup lines
@@ -785,7 +594,7 @@ def boilerplate_line_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def near_dup_quality_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-argmax dedup decision (dedup.quality_keep): the same
-    3-gram-Jaccard components as near_dup_doc_clusters, but the
+    3-gram-Jaccard components as dedup.near_dup_clusters, but the
     survivor is the member with the RICHEST vocabulary (distinct-token
     count; doc_id ASC tiebreak) rather than the lowest id — the policy
     a curation pipeline actually wants, since near-dup groups mix a
@@ -805,63 +614,4 @@ def near_dup_quality_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return D.quality_keep(
         pairs.select("doc_a", "doc_b"), scores, "doc_id", "n_unique_tokens"
-    )
-
-
-@register(
-    "source_dedup_rates",
-    # NEW r6 retired tier: curation observability — the per-source
-    # duplication report a corpus owner reads before deciding where
-    # the cleaning budget goes; fingerprints, keeper rule, and rates
-    # recomputed in SQL.
-    retired=True,
-    oracle="""
-    WITH fp AS (
-        SELECT doc_id, source,
-               md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))
-                   AS fingerprint
-        FROM documents
-    ),
-    ranked AS (
-        SELECT source, doc_id,
-               row_number() OVER (
-                   PARTITION BY fingerprint ORDER BY doc_id ASC) AS rn
-        FROM fp
-    )
-    SELECT source,
-           count(*) AS n_docs,
-           CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_exact_dups,
-           round(CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                 / count(*), 6) AS dup_rate
-    FROM ranked
-    GROUP BY source
-    """,
-)
-def source_dedup_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source exact-duplication report: for each corpus source, how
-    many documents would the keep-first exact dedup REMOVE, and what
-    share of the source is that — the observability readout that turns
-    'dedup the corpus' into 'source X is 30% duplicates, start there'.
-    One fingerprint window (the dedup_exact_keep_first shuffle) plus a
-    per-source aggregate; the removed-doc attribution is per the
-    DUPLICATE's source, so a source that copies another's documents is
-    the one charged for them."""
-    docs = read_table(spark, sf_dir, "documents")
-    from pyspark.sql import Window
-
-    from ..text import fingerprint
-
-    w = Window.partitionBy(fingerprint("text")).orderBy(F.col("doc_id").asc())
-    ranked = docs.select(
-        "source", F.row_number().over(w).alias("__rn")
-    )
-    return ranked.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum((F.col("__rn") > 1).cast("bigint")).alias("n_exact_dups"),
-        F.round(
-            F.sum((F.col("__rn") > 1).cast("int")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("dup_rate"),
     )

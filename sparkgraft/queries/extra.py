@@ -8,139 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import read_table
-from .core import _event_spec
 from .registry import register
-
-
-@register(
-    "conformance_daily",
-    """
-    WITH spec(event_name, prop_name) AS (
-        SELECT t.event_name, p.prop_name
-        FROM (VALUES ('click'),('error'),('purchase'),('signup'),('view')) t(event_name)
-        CROSS JOIN (VALUES ('k'),('session_id')) p(prop_name)
-    ), joined AS (
-        SELECT strftime(e.ts, '%Y-%m-%d') AS event_date,
-               s.event_name, s.prop_name,
-               list_contains(json_keys(e.props), s.prop_name) AS key_present,
-               nullif(json_extract_string(e.props, '$.' || s.prop_name), '') AS v
-        FROM events e JOIN spec s ON e.event_type = s.event_name
-    )
-    SELECT event_date, event_name, prop_name,
-           count(*) AS total_records,
-           count(CASE WHEN key_present THEN 1 END) AS keys_not_null_count,
-           count(v) AS value_not_null_count
-    FROM joined GROUP BY 1, 2, 3
-    """,
-    retired=True,
-)
-def conformance_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conformance metrics PER DAY — the reference runs one driver
-    invocation per date partition (event_verify.py:18-21); here the date
-    is just another grouping column in the same single plan, which is
-    what makes a 1000-day backfill one job instead of 1000."""
-    ev = read_table(spark, sf_dir, "events").select(
-        F.date_format("ts", "yyyy-MM-dd").alias("event_date"),
-        F.col("event_type").alias("event_name"),
-        "props",
-    )
-    spec = _event_spec(spark)
-    joined = ev.join(F.broadcast(spec), "event_name")
-
-    from ..json_ops import extract_key, key_presence
-
-    present = key_presence([F.col("props")], F.col("prop_name"))
-    value = extract_key("props", F.col("prop_name"))
-    return joined.groupBy("event_date", "event_name", "prop_name").agg(
-        F.count(F.lit(1)).alias("total_records"),
-        F.count(F.when(present, F.lit(1))).alias("keys_not_null_count"),
-        F.count(value).alias("value_not_null_count"),
-    )
-
-
-@register(
-    "price_percentiles_by_status",
-    # Retired r4 (two-round-stable) to free a driver slot for the new
-    # packing surface. Still locally verified (test_retired_oracles,
-    # oracle_check --retired).
-    """
-    SELECT o_orderstatus,
-           count(*) AS n_orders,
-           round(quantile_cont(o_totalprice, 0.5), 4) AS p50,
-           round(quantile_cont(o_totalprice, 0.9), 4) AS p90,
-           round(quantile_cont(o_totalprice, 0.99), 4) AS p99
-    FROM orders GROUP BY o_orderstatus
-    """,
-    retired=True,
-)
-def price_percentiles_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT percentiles (linear interpolation — same definition as SQL
-    quantile_cont). At 100 TB switch to ``percentile_approx`` (t-digest
-    sketch, mergeable map-side) — exact percentile shuffles every value
-    of the group; the approx variant is in approx_distinct_users' vein."""
-    orders = read_table(spark, sf_dir, "orders")
-    return orders.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.round(F.percentile("o_totalprice", 0.5), 4).alias("p50"),
-        F.round(F.percentile("o_totalprice", 0.9), 4).alias("p90"),
-        F.round(F.percentile("o_totalprice", 0.99), 4).alias("p99"),
-    )
-
-
-@register(
-    "embedding_predicates_hof",
-    # retired round 4 (coverage budget, made room for the corpus tier):
-    # exists/forall HOF evidence stays verified here in the retired
-    # tier; active HOF evidence lives in doc_embedding_profile's
-    # filter/size and the similarity internals
-    retired=True,
-    oracle="""
-    SELECT vec_id,
-           len(list_filter(embedding, x -> x < 0)) > 0 AS has_negative,
-           len(list_filter(embedding, x -> abs(x) >= 1)) = 0 AS all_unit_range,
-           len(list_filter(embedding, x -> x > 0)) = len(embedding) AS all_positive
-    FROM embeddings
-    """,
-)
-def embedding_predicates_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """exists / forall higher-order predicates over array columns."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    return emb.select(
-        "vec_id",
-        F.exists("embedding", lambda x: x < 0).alias("has_negative"),
-        F.forall("embedding", lambda x: F.abs(x) < 1).alias("all_unit_range"),
-        F.forall("embedding", lambda x: x > 0).alias("all_positive"),
-    )
-
-
-@register(
-    "props_as_map",
-    # retired round 4 (coverage budget): map-function evidence stays
-    # verified in the retired tier; active JSON evidence lives in
-    # json_extract_events / json_keys_per_type / json_value_stats
-    retired=True,
-    oracle="""
-    SELECT event_id,
-           len(json_keys(props)) AS n_keys,
-           array_to_string(list_sort(json_keys(props)), ',') AS keys_sorted,
-           json_extract_string(props, '$.k') AS k_value
-    FROM events
-    """,
-)
-def props_as_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON payload parsed ONCE to ``map<string,string>`` then queried
-    with map functions — the single-parse fast path that replaces N
-    repeated ``get_json_object`` calls (SURVEY §7.3)."""
-    from ..json_ops import payload_map
-
-    ev = read_table(spark, sf_dir, "events")
-    m = payload_map("props")
-    return ev.select(
-        "event_id",
-        F.size(F.map_keys(m)).cast("bigint").alias("n_keys"),
-        F.array_join(F.array_sort(F.map_keys(m)), ",").alias("keys_sorted"),
-        F.element_at(m, "k").alias("k_value"),
-    )
 
 
 @register(
@@ -261,61 +129,3 @@ def order_trend_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("double").alias("y"),
     )
     return groupwise_ols(orders, ["o_orderpriority"], "x", "y")
-
-
-@register(
-    "lineitem_key_skew_report",
-    # NEW r6 retired tier: the pre-join skew detector with counts,
-    # shares, top-N, and the rounded-decimal entropy recomputed in SQL.
-    retired=True,
-    oracle="""
-    WITH report AS (
-        SELECT 'l_suppkey' AS key_col, CAST(l_suppkey AS VARCHAR) AS k
-        FROM lineitem WHERE l_suppkey IS NOT NULL
-        UNION ALL
-        SELECT 'l_returnflag', l_returnflag
-        FROM lineitem WHERE l_returnflag IS NOT NULL
-    ),
-    counts AS (
-        SELECT key_col, k, count(*) AS c FROM report GROUP BY 1, 2
-    ),
-    totals AS (
-        SELECT key_col, sum(c) AS n, count(*) AS d FROM counts GROUP BY 1
-    ),
-    tops AS (
-        SELECT key_col, max(c) AS top1, sum(c) AS topn FROM (
-            SELECT key_col, c,
-                   row_number() OVER (
-                       PARTITION BY key_col ORDER BY c DESC, k ASC) AS rn
-            FROM counts
-        ) WHERE rn <= 10 GROUP BY 1
-    ),
-    ent AS (
-        SELECT counts.key_col,
-               CAST(sum(CAST(round(-(CAST(c AS DOUBLE) / n)
-                                   * ln(CAST(c AS DOUBLE) / n), 9)
-                             AS DECIMAL(18,9))) AS DOUBLE) AS h
-        FROM counts JOIN totals ON counts.key_col = totals.key_col
-        GROUP BY 1
-    )
-    SELECT totals.key_col, CAST(n AS BIGINT) AS n_rows,
-           CAST(d AS BIGINT) AS n_distinct,
-           round(CAST(top1 AS DOUBLE) / n, 6) AS top1_share,
-           round(CAST(topn AS DOUBLE) / n, 6) AS topn_share,
-           round(h, 6) AS entropy
-    FROM totals
-    JOIN tops ON totals.key_col = tops.key_col
-    JOIN ent ON totals.key_col = ent.key_col
-    """,
-)
-def lineitem_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """contract.key_skew_report over lineitem's join key (l_suppkey,
-    100 uniform suppliers) and its most skewed column (l_returnflag, 3
-    values — a worst-case stand-in): the measurement that routes a join
-    to relational.salted_join BEFORE it runs (the skew probe measured
-    3.75x on a 95%-hot key). Per column: one exact count aggregate, a
-    TakeOrdered top-10, a one-row roll-up; never a full sort."""
-    from ..contract import key_skew_report
-
-    li = read_table(spark, sf_dir, "lineitem")
-    return key_skew_report(li, ["l_suppkey", "l_returnflag"])

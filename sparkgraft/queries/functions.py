@@ -12,39 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import read_table
-from ..relational import melt
 from .registry import dec, register
-
-
-@register(
-    "string_ops_part",
-    """
-    SELECT p_partkey,
-           upper(p_name) AS name_upper,
-           length(p_name) AS name_len,
-           substring(p_type, 1, 5) AS type_prefix,
-           concat_ws('#', p_brand, p_type) AS brand_type,
-           CASE WHEN p_name LIKE '%green%' THEN TRUE ELSE FALSE END AS is_green,
-           regexp_extract(p_name, '^(\\w+)', 1) AS first_word,
-           replace(p_brand, 'Brand', 'B') AS brand_short,
-           lpad(CAST(p_size AS VARCHAR), 4, '0') AS size_padded
-    FROM part
-    """,
-    retired=True,
-)
-def string_ops_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = read_table(spark, sf_dir, "part")
-    return part.select(
-        "p_partkey",
-        F.upper("p_name").alias("name_upper"),
-        F.length("p_name").cast("bigint").alias("name_len"),
-        F.substring("p_type", 1, 5).alias("type_prefix"),
-        F.concat_ws("#", "p_brand", "p_type").alias("brand_type"),
-        F.col("p_name").like("%green%").alias("is_green"),
-        F.regexp_extract("p_name", r"^(\w+)", 1).alias("first_word"),
-        F.replace(F.col("p_brand"), F.lit("Brand"), F.lit("B")).alias("brand_short"),
-        F.lpad(F.col("p_size").cast("string"), 4, "0").alias("size_padded"),
-    )
 
 
 @register(
@@ -111,86 +79,4 @@ def orders_per_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(dec("o_totalprice")).cast("double").alias("revenue"),
-    )
-
-
-@register(
-    "melt_lineitem_measures",
-    # Retired r4 (two-round-stable) to free a driver slot for the new
-    # packing surface; the F14 melt op stays locally verified
-    # (test_retired_oracles, oracle_check --retired).
-    """
-    SELECT l_orderkey, l_linenumber, prop_name, value FROM (
-        SELECT l_orderkey, l_linenumber, 'l_quantity' AS prop_name,
-               CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR) AS value FROM lineitem
-        UNION ALL
-        SELECT l_orderkey, l_linenumber, 'l_extendedprice',
-               CAST(CAST(l_extendedprice AS DECIMAL(18,2)) AS VARCHAR) FROM lineitem
-        UNION ALL
-        SELECT l_orderkey, l_linenumber, 'l_discount',
-               CAST(CAST(l_discount AS DECIMAL(18,2)) AS VARCHAR) FROM lineitem
-        UNION ALL
-        SELECT l_orderkey, l_linenumber, 'l_tax',
-               CAST(CAST(l_tax AS DECIMAL(18,2)) AS VARCHAR) FROM lineitem
-    )
-    """,
-    retired=True,
-)
-def melt_lineitem_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native unpivot (reference F14: driver-built ``stack(...)`` string,
-    event_verify.py:186-198). Measures pre-normalized to decimal strings
-    so the value representation is engine-independent."""
-    li = read_table(spark, sf_dir, "lineitem")
-    measures = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
-    normalized = li.select(
-        "l_orderkey",
-        "l_linenumber",
-        *[dec(m).cast("string").alias(m) for m in measures],
-    )
-    return melt(normalized, id_cols=["l_orderkey", "l_linenumber"], value_cols=measures)
-
-
-@register(
-    "embedding_array_ops",
-    # retired round 4 (coverage budget): HOF-on-array evidence stays
-    # active via embedding_predicates_hof and the oracled similarity
-    # queries, whose cosine math is the same transform/aggregate fold
-    retired=True,
-    oracle="""
-    SELECT vec_id, label,
-           len(embedding) AS dim,
-           round(CAST(embedding[1] AS DOUBLE), 6) AS first_elem,
-           round(CAST(list_max(embedding) AS DOUBLE), 6) AS max_elem,
-           round(sqrt(list_aggregate(
-               list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-               'sum')), 6) AS l2_norm,
-           len(list_filter(embedding, x -> x > 0)) AS n_positive
-    FROM embeddings
-    """,
-)
-def embedding_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Higher-order functions over array<float>: transform / filter /
-    aggregate — all JVM-side codegen, the no-UDF path for vector math
-    (elements cast to double pre-multiply on both engines so the
-    summation is the same IEEE sequence)."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    sq_sum = F.aggregate(
-        F.transform(F.col("embedding"), lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return emb.select(
-        "vec_id",
-        "label",
-        F.size("embedding").cast("bigint").alias("dim"),
-        # try_element_at: ANSI element_at throws on an empty array;
-        # DuckDB's embedding[1] yields NULL — try_ keeps parity
-        F.round(F.try_element_at("embedding", F.lit(1)).cast("double"), 6).alias(
-            "first_elem"
-        ),
-        F.round(F.array_max("embedding").cast("double"), 6).alias("max_elem"),
-        F.round(F.sqrt(sq_sum), 6).alias("l2_norm"),
-        F.size(F.filter(F.col("embedding"), lambda x: x > 0)).cast("bigint").alias(
-            "n_positive"
-        ),
     )

@@ -17,25 +17,6 @@ from .registry import register
 
 
 @register(
-    "json_keys_per_type",
-    # Retired r4 (two-round-stable) to free a driver slot for the new
-    # packing surface; JSON introspection keeps driver rows via
-    # json_extract_events / json_value_stats. Still locally verified by
-    # tests/test_retired_oracles.py and tools/oracle_check.py --retired.
-    """
-    SELECT DISTINCT event_type, unnest(json_keys(props)) AS key
-    FROM events
-    """,
-    retired=True,
-)
-def json_keys_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct observed top-level keys per event type — the reference's
-    five-scan key-union pipeline (event_verify.py:51-62) as one scan."""
-    ev = read_table(spark, sf_dir, "events")
-    return J.enumerate_keys(ev, ["props"], group_cols=["event_type"])
-
-
-@register(
     "json_extract_events",
     """
     SELECT event_id, event_type,
@@ -71,44 +52,4 @@ def json_extract_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         absent.alias("missing_value"),
         F.coalesce(absent, k, F.lit("0")).alias("k_coalesced"),
         F.map_contains_key("__m", F.lit("k")).alias("has_k"),
-    )
-
-
-@register(
-    "json_value_stats",
-    # RETIRED r5 (two-round-stable; driver slot freed for the planted
-    # LSH oracle / contract promotion): A1/A2 keep active evidence via
-    # corpus_vocab_topk, A3 null-accounting via the conformance family,
-    # the JSON surface via json_extract_events; this stays
-    # oracle-verified by tests/test_retired_oracles.py.
-    retired=True,
-    oracle="""
-    SELECT event_type,
-           count(*) AS total_records,
-           count(CASE WHEN list_contains(json_keys(props), 'k') THEN 1 END)
-               AS k_key_count,
-           count(nullif(json_extract_string(props, '$.k'), '')) AS k_value_count,
-           CAST(min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT)
-               AS k_min,
-           CAST(max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT)
-               AS k_max
-    FROM events GROUP BY event_type
-    """,
-)
-def json_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Null-accounting aggregation over an extracted JSON value — the
-    count(v)-vs-count(*) reformulation of the reference's
-    collect_list/array_compact/size chain (SURVEY §2.4 A3)."""
-    ev = read_table(spark, sf_dir, "events")
-    staged = ev.select("event_type", J.payload_map("props").alias("__m"))
-    k_val = F.nullif(F.element_at("__m", F.lit("k")), F.lit(""))
-    k_num = k_val.cast("bigint")
-    return staged.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("total_records"),
-        F.count(F.when(F.map_contains_key("__m", F.lit("k")), 1)).alias(
-            "k_key_count"
-        ),
-        F.count(k_val).alias("k_value_count"),
-        F.min(k_num).alias("k_min"),
-        F.max(k_num).alias("k_max"),
     )

@@ -31,207 +31,6 @@ from .registry import dec, register
 _REV_SQL = "SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))))"
 
 
-def _revenue() -> F.Column:
-    return F.sum(dec("l_extendedprice") * (F.lit(1) - dec("l_discount")))
-
-
-@register(
-    "shipping_priority_top10",
-    # RETIRED r7 (rotation policy: three-round-stable; slot funds the
-    # bloom_pruned_urgent_revenue promotion; O1 stays covered by the
-    # retired-tier oracle checks run every pytest + sf0.1 sweep).
-    retired=True,
-    oracle=f"""
-    SELECT l_orderkey,
-           CAST({_REV_SQL} AS DOUBLE) AS revenue,
-           strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
-           o_orderpriority
-    FROM customer
-    JOIN orders   ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
-    WHERE c_mktsegment = 'BUILDING'
-      AND o_orderdate < TIMESTAMP '1998-01-01'
-      AND l_shipdate  > TIMESTAMP '1998-01-01'
-    GROUP BY l_orderkey, o_orderdate, o_orderpriority
-    ORDER BY revenue DESC, l_orderkey ASC
-    LIMIT 10
-    """,
-)
-def shipping_priority_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: segment-filtered customers -> their unshipped
-    orders -> top-10 by open revenue.
-
-    Join order matters at scale: customer is filtered to one segment
-    (~1/5) and broadcast into orders; the surviving (orderkey) set joins
-    lineitem on its natural key. lineitem never shuffles — both hops are
-    broadcast from the fact table's perspective at bench scale, and at
-    100 TB AQE downgrades only the orders⋈lineitem hop to sort-merge on
-    l_orderkey. Final ORDER BY+LIMIT is TakeOrderedAndProject (per-
-    partition top-k, no global sort); revenue ties break on l_orderkey.
-    """
-    customer = read_table(spark, sf_dir, "customer")
-    orders = read_table(spark, sf_dir, "orders")
-    li = read_table(spark, sf_dir, "lineitem")
-    cutoff = F.lit("1998-01-01").cast("timestamp_ntz")
-    return (
-        li.where(F.col("l_shipdate") > cutoff)
-        .join(
-            orders.where(F.col("o_orderdate") < cutoff),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(
-            F.broadcast(customer.where(F.col("c_mktsegment") == "BUILDING")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(_revenue().cast("double").alias("revenue"))
-        .select(
-            "l_orderkey",
-            "revenue",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
-            "o_orderpriority",
-        )
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
-@register(
-    "local_supplier_volume",
-    # retired round 4 (coverage budget): multi-join chain evidence stays
-    # active via shipping_priority_top10 (Q3) and
-    # returned_items_top_customers (Q10)
-    retired=True,
-    oracle=f"""
-    SELECT n_name, CAST({_REV_SQL} AS DOUBLE) AS revenue
-    FROM customer, orders, lineitem, supplier, nation, region
-    WHERE c_custkey = o_custkey
-      AND l_orderkey = o_orderkey
-      AND l_suppkey = s_suppkey
-      AND c_nationkey = s_nationkey
-      AND s_nationkey = n_nationkey
-      AND n_regionkey = r_regionkey
-      AND r_name = 'ASIA'
-      AND o_orderdate >= TIMESTAMP '1996-01-01'
-      AND o_orderdate <  TIMESTAMP '1999-01-01'
-    GROUP BY n_name
-    """,
-)
-def local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: six-table join with the non-key constraint
-    c_nationkey = s_nationkey ("customer and supplier in the same
-    nation"), revenue per nation within one region.
-
-    region -> nation is pre-joined and broadcast (25 rows after the
-    r_name filter); supplier and customer each broadcast-join it, then
-    broadcast into the fact chain. The one genuinely big hop, orders ⋈
-    lineitem, runs on the orderkey both tables already share — at 100 TB
-    bucketing both by orderkey (io.write_bucketed) makes it shuffle-free.
-    The same-nation constraint lands as a post-join filter on two
-    broadcast-carried columns, costing nothing extra.
-    """
-    customer = read_table(spark, sf_dir, "customer")
-    orders = read_table(spark, sf_dir, "orders")
-    li = read_table(spark, sf_dir, "lineitem")
-    supplier = read_table(spark, sf_dir, "supplier")
-    nation = read_table(spark, sf_dir, "nation")
-    region = read_table(spark, sf_dir, "region")
-
-    asia_nations = nation.join(
-        F.broadcast(region.where(F.col("r_name") == "ASIA")),
-        F.col("n_regionkey") == F.col("r_regionkey"),
-    ).select("n_nationkey", "n_name")
-    return (
-        orders.where(
-            (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-            & (F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp_ntz"))
-        )
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(
-            F.broadcast(customer.select("c_custkey", "c_nationkey")),
-            F.col("c_custkey") == F.col("o_custkey"),
-        )
-        .join(
-            F.broadcast(
-                supplier.join(
-                    F.broadcast(asia_nations),
-                    F.col("s_nationkey") == F.col("n_nationkey"),
-                ).select("s_suppkey", "s_nationkey", "n_name")
-            ),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .where(F.col("c_nationkey") == F.col("s_nationkey"))
-        .groupBy("n_name")
-        .agg(_revenue().cast("double").alias("revenue"))
-    )
-
-
-@register(
-    "returned_items_top_customers",
-    # retired r6 (slot rotation): two-round-stable; the TPC-H chain
-    # family keeps driver evidence via shipping_priority_top10
-    retired=True,
-    oracle=f"""
-    SELECT c_custkey, c_name, n_name,
-           CAST({_REV_SQL} AS DOUBLE) AS revenue,
-           CAST(c_acctbal AS DOUBLE) AS c_acctbal
-    FROM customer
-    JOIN orders   ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
-    JOIN nation   ON c_nationkey = n_nationkey
-    WHERE l_returnflag = 'R'
-      AND o_orderdate >= TIMESTAMP '1997-01-01'
-      AND o_orderdate <  TIMESTAMP '1998-01-01'
-    GROUP BY c_custkey, c_name, n_name, c_acctbal
-    ORDER BY revenue DESC, c_custkey ASC
-    LIMIT 20
-    """,
-)
-def returned_items_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: who returned the most revenue in a quarter-ish
-    window — fact-side filter (l_returnflag) + two broadcast dims.
-
-    The l_returnflag predicate is pushed to the lineitem scan (dictionary-
-    encoded column -> whole row groups skip); orders' date range prunes
-    its scan; customer and nation broadcast. Group-by key includes the
-    customer attributes so no second join is needed to re-attach them.
-    """
-    customer = read_table(spark, sf_dir, "customer")
-    orders = read_table(spark, sf_dir, "orders")
-    li = read_table(spark, sf_dir, "lineitem")
-    nation = read_table(spark, sf_dir, "nation")
-    return (
-        li.where(F.col("l_returnflag") == "R")
-        .join(
-            orders.where(
-                (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
-                & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(
-            F.broadcast(
-                customer.join(
-                    F.broadcast(nation),
-                    F.col("c_nationkey") == F.col("n_nationkey"),
-                ).select("c_custkey", "c_name", "n_name", "c_acctbal")
-            ),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .groupBy("c_custkey", "c_name", "n_name", "c_acctbal")
-        .agg(_revenue().cast("double").alias("revenue"))
-        .select(
-            "c_custkey",
-            "c_name",
-            "n_name",
-            "revenue",
-            F.col("c_acctbal").cast("double").alias("c_acctbal"),
-        )
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(20)
-    )
-
-
 @register(
     "open_lineitems_per_day",
     # RETIRED r8 (three-round-stable; slot funds the r8 promotions —
@@ -346,231 +145,6 @@ def large_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
             "orderdate",
             F.col("__qty").cast("double").alias("total_qty"),
-        )
-    )
-
-
-@register(
-    "orders_shipped_before_ordered",
-    """
-    SELECT o_orderpriority, count(*) AS n_orders
-    FROM orders o
-    WHERE EXISTS (
-        SELECT 1 FROM lineitem l
-        WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate < o.o_orderdate
-    )
-    GROUP BY o_orderpriority
-    """,
-    retired=True,
-)
-def orders_shipped_before_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape, repurposed as a data-quality probe: orders with
-    at least one lineitem shipped BEFORE the order date (a timeline
-    anomaly this synthetic corpus actually contains), counted per
-    priority. EXISTS compiles to a LEFT SEMI join with a compound
-    condition — the probe side never duplicates order rows however
-    many lineitems match."""
-    orders = read_table(spark, sf_dir, "orders")
-    lineitem = read_table(spark, sf_dir, "lineitem")
-    return (
-        orders.join(
-            lineitem,
-            (orders.o_orderkey == lineitem.l_orderkey)
-            & (lineitem.l_shipdate < orders.o_orderdate),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
-
-
-@register(
-    "discount_revenue_band",
-    """
-    SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE)
-               AS revenue_delta,
-           count(*) AS n_lineitems
-    FROM lineitem
-    WHERE l_quantity < 24
-      AND l_discount BETWEEN 0.05 AND 0.07
-      AND l_shipdate >= TIMESTAMP '1996-01-01'
-      AND l_shipdate < TIMESTAMP '1997-01-01'
-    """,
-    retired=True,
-)
-def discount_revenue_band(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: a single-row scalar aggregate behind selective
-    range predicates — the pure scan-efficiency query (every predicate
-    pushes to the parquet scan; at scale this is a row-group pruning
-    exercise, no shuffle beyond the final 1-row combine)."""
-    lineitem = read_table(spark, sf_dir, "lineitem")
-    return (
-        lineitem.where(
-            (F.col("l_quantity") < 24)
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp_ntz"))
-        )
-        .agg(
-            F.sum(dec("l_extendedprice") * dec("l_discount"))
-            .cast("double")
-            .alias("revenue_delta"),
-            F.count(F.lit(1)).alias("n_lineitems"),
-        )
-    )
-
-
-@register(
-    "promo_revenue_share",
-    # Retired-tier breadth (TPC-H Q14 shape): conditional-revenue ratio
-    # over a scan-pruned month of lineitem joined to part.
-    retired=True,
-    oracle=f"""
-    SELECT round(100.0 * CAST(
-               SUM(CASE WHEN p_type = 'PROMO'
-                        THEN CAST(l_extendedprice AS DECIMAL(18,2))
-                             * (1 - CAST(l_discount AS DECIMAL(18,2)))
-                        ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE)
-               / CAST({_REV_SQL} AS DOUBLE), 4) AS promo_share_pct
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-      AND l_shipdate < TIMESTAMP '1996-02-01'
-    """,
-)
-def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: what share of one month's revenue came from
-    promo parts — a conditional aggregate RATIO in one pass (never two
-    scans; the CASE splits the revenue term inside the same
-    aggregation). The ship-month predicate prunes the lineitem scan;
-    part joins on its key (broadcast at small SF, shuffle-hash at
-    100 TB); decimal-exact sums make the ratio partitioning-stable."""
-    li = read_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1996-02-01").cast("timestamp_ntz"))
-    )
-    part = read_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))
-    zero = F.lit(0).cast("decimal(18,2)")
-    return (
-        li.join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.round(
-                F.lit(100.0)
-                * F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(zero))
-                .cast("double")
-                / _revenue().cast("double"),
-                4,
-            ).alias("promo_share_pct")
-        )
-    )
-
-
-@register(
-    "late_lines_by_priority",
-    # Retired-tier breadth (TPC-H Q12 shape, adapted: this corpus has
-    # no shipmode/commitdate, so "late" = shipped > 60 days after the
-    # order date): compound-CASE priority counts over the join.
-    retired=True,
-    oracle="""
-    SELECT l_linestatus,
-           CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                    THEN 1 ELSE 0 END) AS BIGINT) AS high_priority_lines,
-           CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                    THEN 1 ELSE 0 END) AS BIGINT) AS low_priority_lines
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    WHERE l_shipdate > o_orderdate + INTERVAL 60 DAY
-    GROUP BY l_linestatus
-    """,
-)
-def late_lines_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape: among lines shipped late (> 60 days after
-    their order date), how many carried urgent/high vs lower order
-    priorities, per line status — the join-then-compound-CASE counting
-    pattern. The lateness predicate references both sides, so it
-    applies post-join (not pushable); the aggregate is map-side
-    combinable on a 2-value group key."""
-    li = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linestatus", "l_shipdate"
-    )
-    orders = read_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority"
-    )
-    # NULL o_orderpriority lands in NEITHER count on BOTH engines:
-    # Spark's sum() skips the NULL produced by isin/~isin, and the
-    # oracle's two CASEs each fall to ELSE 0 when IN/NOT IN is NULL —
-    # identical totals (testdata has no NULL priorities; this keeps
-    # parity if that ever changes)
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .where(F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"))
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(high.cast("bigint")).cast("bigint").alias("high_priority_lines"),
-            F.sum((~high).cast("bigint")).cast("bigint").alias("low_priority_lines"),
-        )
-    )
-
-
-@register(
-    "cross_nation_trade_flows",
-    # Retired-tier breadth (TPC-H Q7 shape): the same dimension table
-    # joined twice under different aliases (customer's nation vs
-    # supplier's nation), revenue per directed nation pair and year.
-    retired=True,
-    oracle=f"""
-    SELECT cn.n_name AS cust_nation, sn.n_name AS supp_nation,
-           CAST(year(l_shipdate) AS BIGINT) AS ship_year,
-           CAST({_REV_SQL} AS DOUBLE) AS revenue,
-           CAST(count(*) AS BIGINT) AS n_lines
-    FROM lineitem
-    JOIN orders ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    JOIN supplier ON l_suppkey = s_suppkey
-    JOIN nation cn ON c_nationkey = cn.n_nationkey
-    JOIN nation sn ON s_nationkey = sn.n_nationkey
-    WHERE cn.n_nationkey <> sn.n_nationkey
-    GROUP BY 1, 2, 3
-    """,
-)
-def cross_nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape: revenue flowing between DIFFERENT customer and
-    supplier nations, per directed pair and ship year — a 5-table
-    chain where the nation dimension broadcasts TWICE under distinct
-    aliases (one per role), the self-aliased-dimension pattern a
-    single-join registry otherwise never exercises. Fact tables join
-    on their keys; both nation copies broadcast at any scale (25
-    rows); the inequality filter applies after both attach."""
-    li = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    cn = nation.select(
-        F.col("n_nationkey").alias("__cn_key"), F.col("n_name").alias("cust_nation")
-    )
-    sn = nation.select(
-        F.col("n_nationkey").alias("__sn_key"), F.col("n_name").alias("supp_nation")
-    )
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("__cn_key"))
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("__sn_key"))
-        .where(F.col("__cn_key") != F.col("__sn_key"))
-        .groupBy(
-            "cust_nation",
-            "supp_nation",
-            F.year("l_shipdate").cast("bigint").alias("ship_year"),
-        )
-        .agg(
-            _revenue().cast("double").alias("revenue"),
-            F.count(F.lit(1)).cast("bigint").alias("n_lines"),
         )
     )
 

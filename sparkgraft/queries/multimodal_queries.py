@@ -212,40 +212,3 @@ def perceptual_near_dup_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is_planted_twin",
         F.col("media_b") == F.col("media_a") + 10_000_000,
     )
-
-
-@register(
-    "multimodal_frame_sample",
-    # RETIRED r7 (rotation: three-round-stable; slot funds the
-    # boilerplate_line_removal promotion; multimodal stays actively
-    # gated via multimodal_features + the perceptual-hash twin).
-    retired=True,
-    oracle=f"""
-    WITH p AS (
-        SELECT doc_id AS media_id, {_PAYLOAD_SQL} AS s FROM documents
-    )
-    SELECT media_id, CAST(t.i AS BIGINT) AS frame_idx,
-           substr(s, CAST(floor(t.i * greatest(length(s) - 16, 1) / 3.0)
-                          AS INT) + 1, 16) AS frame_text
-    FROM p, range(0, 4) t(i)
-    WHERE length(substr(s, CAST(floor(t.i * greatest(length(s) - 16, 1) / 3.0)
-                               AS INT) + 1, 16)) > 0
-    """,
-)
-def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Declarative frame sampling over the same synthetic payloads: 4
-    evenly-spaced 16-byte slices per payload via posexplode over a
-    generated offset sequence — no Python in the plan. Frames decode
-    back to UTF-8 for the value hash (ASCII payloads make the bytes ==
-    chars equivalence exact)."""
-    docs = spread(read_table(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(_payload_col(), "UTF-8").alias("payload"),
-    )
-    frames = M.sample_frames(media, n_frames=4, frame_bytes=16)
-    return frames.select(
-        "media_id",
-        F.col("frame_idx").cast("bigint").alias("frame_idx"),
-        F.decode(F.col("frame"), "UTF-8").alias("frame_text"),
-    )

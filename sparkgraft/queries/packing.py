@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from .. import packing as P
 from .. import text as T
 from ..io import read_table
-from ..relational import spread, tiny_frame
+from ..relational import tiny_frame
 from .duckfrag import TOK as _TOK
 from .registry import register
 
@@ -120,175 +120,6 @@ def domain_mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return P.epoch_replicate(docs, "doc_id", "source", plan).select(
         "doc_id", "source", "epoch"
     )
-
-
-@register(
-    "quality_percentile_filter",
-    # RETIRED r7 (rotation: three-round-stable; slot funds the
-    # doc_hash_embedding promotion; the histogram-percentile machinery
-    # stays actively exercised by corpus_curation_pipeline).
-    retired=True,
-    oracle=f"""
-    WITH base AS (
-        SELECT doc_id, source,
-               coalesce(round(
-                   len(list_filter({_TOK}, t -> list_contains(
-                       ['the','a','and','of','to','in','is','it','you','that'], t)))
-                   / nullif(len({_TOK}), 0), 6), 0.0) AS sw_ratio
-        FROM documents
-    ), hist AS (
-        SELECT source, sw_ratio, count(*) AS cnt
-        FROM base GROUP BY source, sw_ratio
-    ), marks AS (
-        SELECT source, sw_ratio,
-               round((sum(cnt) OVER (PARTITION BY source ORDER BY sw_ratio
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                      - cnt)
-                     / (sum(cnt) OVER (PARTITION BY source)), 6) AS pct_below
-        FROM hist
-    )
-    SELECT b.doc_id, b.source, b.sw_ratio, m.pct_below
-    FROM base b JOIN marks m USING (source, sw_ratio)
-    WHERE m.pct_below >= 0.7
-    """,
-)
-def quality_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adaptive per-source quality gate: keep documents whose stopword
-    ratio is in the top ~30% of their source (fraction-strictly-below
-    >= 0.7, tie-inclusive). Absolute thresholds misfire when sources
-    have different score distributions; the percentile form adapts.
-
-    Scale shape (the point of the operator): NO percent_rank window
-    over corpus-sized source partitions. The full table only sees a
-    map-side-combinable histogram aggregate and a broadcast-join +
-    row-local filter; the ranking window runs over the tiny
-    (source, score) histogram. NULL scores (empty docs) are coalesced
-    to 0.0 so the join key is never NULL."""
-    docs = spread(read_table(spark, sf_dir, "documents"))
-    m = T.quality_metrics("text")
-    staged = docs.select(
-        "doc_id",
-        "source",
-        F.coalesce(m["stopword_ratio"], F.lit(0.0)).alias("sw_ratio"),
-    )
-    return P.percentile_keep(staged, "source", "sw_ratio", 0.7).select(
-        "doc_id", "source", "sw_ratio", "pct_below"
-    )
-
-
-@register(
-    "chunk_documents_sliding",
-    # Retired-tier BREADTH query (registry at its 50-slot cap): the
-    # long-document chunking stage oracle-verified on every pytest run.
-    # chunk=32 / stride=24 tokens so the test corpus exercises many
-    # multi-chunk docs, overlap, and short final chunks.
-    retired=True,
-    oracle=f"""
-    WITH tok AS (SELECT doc_id, {_TOK} AS tok FROM documents),
-    starts AS (
-        SELECT doc_id, tok, unnest(range(0, len(tok), 24)) AS chunk_start
-        FROM tok
-    )
-    SELECT doc_id,
-           CAST(chunk_start // 24 AS BIGINT) AS chunk_idx,
-           CAST(chunk_start AS BIGINT) AS chunk_start,
-           CAST(len(tok[chunk_start + 1 : chunk_start + 32]) AS BIGINT)
-               AS n_chunk_tokens,
-           array_to_string(tok[chunk_start + 1 : chunk_start + 32], ' ')
-               AS chunk_text
-    FROM starts
-    """,
-)
-def chunk_documents_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """packing.chunk_documents with a sliding window (32-token chunks
-    every 24 tokens — 8-token overlap, the long-context training
-    recipe) over the documents table. Entirely row-local (tokenize +
-    sequence + explode + slice — zero shuffles at any corpus size);
-    the oracle recomputes every chunk boundary and text from the same
-    token arrays."""
-    docs = read_table(spark, sf_dir, "documents")
-    return P.chunk_documents(
-        docs, "text", "doc_id", chunk_tokens=32, stride=24
-    )
-
-
-@register(
-    "doc_length_deciles",
-    # Retired-tier BREADTH query (registry at its 50-slot cap):
-    # histogram-based equi-depth binning oracle-verified on every
-    # pytest run — every tile assignment recomputed in SQL from the
-    # same cumulative-histogram math.
-    retired=True,
-    oracle="""
-    WITH hist AS (
-        SELECT source, n_chars, count(*) AS cnt
-        FROM documents GROUP BY 1, 2
-    ),
-    t AS (
-        SELECT source, n_chars,
-               least(CAST(floor(round(
-                   (sum(cnt) OVER (PARTITION BY source ORDER BY n_chars
-                        ROWS UNBOUNDED PRECEDING) - cnt)
-                   / sum(cnt) OVER (PARTITION BY source), 9) * 10) AS INT),
-                   9) AS tile
-        FROM hist
-    )
-    SELECT d.doc_id, d.source, d.n_chars, t.tile
-    FROM documents d JOIN t USING (source, n_chars)
-    """,
-)
-def doc_length_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """packing.ntile_by_histogram: per-source length DECILES of the
-    documents table — equal lengths always share a tile (deterministic,
-    unlike SQL NTILE's order-dependent tie splitting), and the corpus
-    is never sorted globally: a map-side histogram, a window over the
-    tiny distinct-score table, a broadcast join back."""
-    docs = read_table(spark, sf_dir, "documents")
-    return P.ntile_by_histogram(docs, "source", "n_chars", n=10).select(
-        "doc_id", "source", "n_chars", "tile"
-    )
-
-
-@register(
-    "doc_length_winsorized",
-    # Retired-tier BREADTH query: histogram winsorization verified on
-    # every pytest run — both quantile bounds and every clamped value
-    # recomputed in SQL from the same inclusive-cumulative-share rule.
-    retired=True,
-    oracle="""
-    WITH hist AS (
-        SELECT source, n_chars, count(*) AS cnt
-        FROM documents GROUP BY 1, 2
-    ),
-    shares AS (
-        SELECT source, n_chars,
-               round(sum(cnt) OVER (PARTITION BY source ORDER BY n_chars
-                     ROWS UNBOUNDED PRECEDING)
-                     / sum(cnt) OVER (PARTITION BY source), 9) AS share
-        FROM hist
-    ),
-    bounds AS (
-        SELECT source,
-               min(CASE WHEN share >= 0.05 THEN n_chars END) AS lo,
-               min(CASE WHEN share >= 0.95 THEN n_chars END) AS hi
-        FROM shares GROUP BY 1
-    )
-    SELECT d.doc_id, d.source, d.n_chars,
-           least(greatest(d.n_chars, b.lo), b.hi) AS n_chars_w
-    FROM documents d JOIN bounds b USING (source)
-    """,
-)
-def doc_length_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """packing.winsorize: document lengths clamped to each source's
-    [p5, p95] — the outlier cap before mean/std-based quality scoring.
-    Quantiles are the smallest value whose inclusive cumulative share
-    reaches the target (no interpolation: bounds are actual data
-    values, identical cross-engine); the corpus sees one map-side
-    histogram and a broadcast bounds join, never a global sort."""
-    docs = read_table(spark, sf_dir, "documents")
-    return P.winsorize(
-        docs, "source", "n_chars", lo_frac=0.05, hi_frac=0.95
-    ).select("doc_id", "source", "n_chars", "n_chars_w")
 
 
 # Temperature for the multilingual/multi-domain sampling rebalance
@@ -458,79 +289,4 @@ def temperature_resampled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.sequence(F.lit(1), F.col("__ne"))).alias("epoch"),
         )
         .select("doc_id", "source", F.col("epoch").cast("bigint").alias("epoch"))
-    )
-
-
-@register(
-    "doc_quality_quantile_normalized",
-    # NEW r6 retired tier: cross-source quantile calibration with both
-    # domains, both histograms, both CDFs, the non-equi bin mapping,
-    # and the rounded output recomputed in SQL.
-    retired=True,
-    oracle="""
-    WITH v AS (
-        SELECT doc_id, source, CAST(n_chars AS DOUBLE) AS s FROM documents
-    ),
-    g AS (
-        SELECT min(s) AS glo,
-               greatest(max(s) - min(s), 1e-300) / 16 AS gw
-        FROM v
-    ),
-    sg AS (
-        SELECT source, min(s) AS slo,
-               greatest(max(s) - min(s), 1e-300) / 16 AS sw
-        FROM v GROUP BY 1
-    ),
-    b AS (
-        SELECT v.doc_id, v.source, v.s, g.glo, g.gw,
-               CAST(least(greatest(floor((s - glo) / gw), 0), 15) AS INT)
-                   AS gbin,
-               CAST(least(greatest(floor((s - slo) / sw), 0), 15) AS INT)
-                   AS sbin
-        FROM v CROSS JOIN g JOIN sg USING (source)
-    ),
-    gh AS (SELECT gbin, count(*) AS c FROM b GROUP BY 1),
-    gc AS (
-        SELECT gbin,
-               CAST(sum(c) OVER (ORDER BY gbin) AS DOUBLE)
-                   / CAST(sum(c) OVER () AS DOUBLE) AS gcdf
-        FROM gh
-    ),
-    sh AS (SELECT source, sbin, count(*) AS c FROM b GROUP BY 1, 2),
-    sc AS (
-        SELECT source, sbin,
-               CAST(sum(c) OVER (PARTITION BY source ORDER BY sbin)
-                    AS DOUBLE)
-                   / CAST(sum(c) OVER (PARTITION BY source) AS DOUBLE)
-                   AS scdf
-        FROM sh
-    ),
-    m AS (
-        SELECT source, sbin, min(gbin) AS tgt
-        FROM sc JOIN gc ON gcdf >= scdf - 1e-12
-        GROUP BY 1, 2
-    )
-    SELECT b.doc_id, b.source,
-           CAST(b.s AS BIGINT) AS n_chars,
-           round(b.glo + (m.tgt + 1) * b.gw, 6) AS norm_score
-    FROM b JOIN m ON b.source = m.source AND b.sbin = m.sbin
-    """,
-)
-def doc_quality_quantile_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """packing.quantile_normalize over documents: each document's
-    length score is mapped to the GLOBAL length distribution's value at
-    the document's within-SOURCE quantile (16 bins) — after which one
-    corpus-wide threshold treats every source fairly even though their
-    raw length distributions differ. Histogram CDFs on both axes,
-    per-group domains (a shared domain collapses narrow-scaled groups
-    to a bin or two — the failure the unit test pins), a broadcast
-    non-equi bin mapping, never a per-group sort."""
-    from ..packing import quantile_normalize
-
-    docs = read_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    scored = docs.withColumn("__s", F.col("n_chars").cast("double"))
-    return quantile_normalize(scored, "__s", "source", bins=16).select(
-        "doc_id", "source", "n_chars", "norm_score"
     )

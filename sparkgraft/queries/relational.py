@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import read_table
-from ..relational import missing_in, present_in
 from .registry import dec, register
 
 # ---------------------------------------------------------------------------
@@ -81,92 +80,6 @@ def revenue_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# J2/J3: left outer join with null accounting (the conformance join shape)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "orders_per_customer_left",
-    # retired r6 continuation (slot rotation for doc_gopher_quality_gate):
-    # two-round-stable; the left-outer + null-accounting family keeps
-    # driver evidence via conformance_flagship's ghost-row join, and
-    # this stays locally oracled every pytest run
-    retired=True,
-    oracle="""
-    SELECT c.c_custkey, c.c_name,
-           count(o.o_orderkey) AS n_orders,
-           CAST(COALESCE(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))), 0)
-                AS DOUBLE) AS total_spend
-    FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
-    GROUP BY c.c_custkey, c.c_name
-    """,
-)
-def orders_per_customer_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customers with zero orders survive with count 0 — the reference's
-    left-join + ``na.fill(0)`` idiom (event_verify.py:120-129, :222).
-    ``count(col)`` counts only matched rows; no fill needed for counts."""
-    customer = read_table(spark, sf_dir, "customer")
-    orders = read_table(spark, sf_dir, "orders")
-    return (
-        customer.join(orders, customer.c_custkey == orders.o_custkey, "left")
-        .groupBy("c_custkey", "c_name")
-        .agg(
-            F.count("o_orderkey").alias("n_orders"),
-            F.coalesce(F.sum(dec("o_totalprice")), F.lit(0).cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_spend"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Semi / anti joins: the natural spec-vs-observed diff operators
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "customers_without_orders",
-    # retired round 4 (coverage budget, made room for weighted
-    # sampling): at testdata SF every customer has orders, so the
-    # active row hashed an empty result — near-zero signal. Anti-join
-    # evidence stays verified here in the retired tier and in
-    # tests/test_relational.py's missing_in cases.
-    retired=True,
-    oracle="""
-    SELECT c_custkey, c_name, c_mktsegment FROM customer
-    WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_custkey IS NOT NULL)
-    """,
-)
-def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anti join ('expected but never observed'); shuffle-free when the
-    distinct key set of the right side is broadcastable."""
-    customer = read_table(spark, sf_dir, "customer")
-    orders = read_table(spark, sf_dir, "orders")
-    return missing_in(customer, orders.withColumnRenamed("o_custkey", "c_custkey"),
-                      ["c_custkey"]).select("c_custkey", "c_name", "c_mktsegment")
-
-
-@register(
-    "parts_with_lineitems",
-    """
-    SELECT p_partkey, p_name, p_brand FROM part
-    WHERE p_partkey IN (SELECT l_partkey FROM lineitem)
-    """,
-    # retired r6 (slot rotation): two-round-stable; the semi/anti join
-    # family keeps driver evidence via orders_per_customer_left +
-    # user_funnel_set_ops, and this stays locally oracled every run
-    retired=True,
-)
-def parts_with_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi join: existence check with no column pollution / duplication
-    from the probe side."""
-    part = read_table(spark, sf_dir, "part")
-    li = read_table(spark, sf_dir, "lineitem")
-    return present_in(part, li.withColumnRenamed("l_partkey", "p_partkey"),
-                      ["p_partkey"]).select("p_partkey", "p_name", "p_brand")
-
-
-# ---------------------------------------------------------------------------
 # U1-U3 + intersect/except (SURVEY §2.7)
 # ---------------------------------------------------------------------------
 
@@ -202,70 +115,8 @@ def user_funnel_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# O1-O3: global sort + top-k with deterministic tiebreak
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "top_orders_global",
-    """
-    SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority
-    FROM orders
-    ORDER BY o_totalprice DESC, o_orderkey ASC
-    LIMIT 25
-    """,
-    retired=True,
-)
-def top_orders_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global top-k: Spark executes sort+limit as TakeOrderedAndProject —
-    each partition keeps k rows, the driver merges k*partitions — no full
-    sort at any scale. Tiebreak on the key makes the result set stable."""
-    orders = read_table(spark, sf_dir, "orders")
-    return (
-        orders.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
-        .limit(25)
-    )
-
-
-# ---------------------------------------------------------------------------
 # Grouping sets: rollup / cube (engine surface beyond the reference — §2.4)
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "lineitem_rollup",
-    """
-    SELECT l_returnflag, l_linestatus,
-           count(*) AS n_items,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-    FROM lineitem
-    GROUP BY ROLLUP (l_returnflag, l_linestatus)
-    """,
-    retired=True,
-)
-def lineitem_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.count(F.lit(1)).alias("n_items"),
-        F.sum(dec("l_quantity")).cast("double").alias("sum_qty"),
-    )
-
-
-@register(
-    "lineitem_cube",
-    """
-    SELECT l_returnflag, l_linestatus, count(*) AS n_items
-    FROM lineitem
-    GROUP BY CUBE (l_returnflag, l_linestatus)
-    """,
-    retired=True,
-)
-def lineitem_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem")
-    return li.cube("l_returnflag", "l_linestatus").agg(
-        F.count(F.lit(1)).alias("n_items")
-    )
 
 
 @register(
@@ -283,8 +134,8 @@ def lineitem_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lineitem_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS — the general form that subsumes the
-    retired lineitem_rollup / lineitem_cube queries (this set list IS
+    """Explicit GROUPING SETS — the general form that subsumes
+    ROLLUP and CUBE (this set list IS
     the cube of the two columns and a superset of the rollup). One
     pass, one shuffle: Spark expands the sets map-side (Expand node),
     so at 100 TB the cost is the scan plus one combinable aggregation,
@@ -297,162 +148,6 @@ def lineitem_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.count(F.lit(1)).alias("n_items"),
         F.sum(dec("l_quantity")).cast("double").alias("sum_qty"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Pivot (wide aggregation; inverse of the melt the reference string-builds)
-# ---------------------------------------------------------------------------
-
-_EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
-
-
-@register(
-    "events_pivot_by_type",
-    """
-    SELECT user_id,
-           count(CASE WHEN event_type = 'click' THEN 1 END) AS click,
-           count(CASE WHEN event_type = 'error' THEN 1 END) AS error,
-           count(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase,
-           count(CASE WHEN event_type = 'signup' THEN 1 END) AS signup,
-           count(CASE WHEN event_type = 'view' THEN 1 END) AS view
-    FROM events GROUP BY user_id
-    """,
-    retired=True,
-)
-def events_pivot_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot with EXPLICIT value list: without it Spark runs an extra
-    distinct job to discover values and the output schema becomes
-    data-dependent — never acceptable at scale."""
-    ev = read_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id")
-        .pivot("event_type", list(_EVENT_TYPES))
-        .agg(F.count(F.lit(1)))
-        .na.fill(0, subset=list(_EVENT_TYPES))
-    )
-
-
-# ---------------------------------------------------------------------------
-# A4/A5: distinct and multi-distinct aggregation
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "distinct_users_per_type",
-    """
-    SELECT event_type,
-           count(DISTINCT user_id) AS exact_users,
-           count(*) AS n_events
-    FROM events GROUP BY event_type
-    """,
-    retired=True,
-)
-def distinct_users_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = read_table(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("exact_users"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-
-
-@register(
-    "approx_distinct_users",
-    # retired round 4 (coverage budget, made room for the corpus tier):
-    # the sketch-accuracy assertion stays verified here and in
-    # tests/test_relational.py; exact distinct-count evidence stays
-    # active in user_funnel_set_ops
-    retired=True,
-    oracle="""
-    SELECT event_type,
-           COUNT(DISTINCT user_id) AS exact_users,
-           TRUE AS approx_ok
-    FROM events GROUP BY event_type
-    """,
-)
-def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperLogLog++ distinct estimate — the scale path when exact
-    distinct's per-group hash sets would spill (SURVEY §2.4). The raw
-    sketch value is engine-specific, so the driver-checked columns are
-    the exact count plus ``approx_ok`` = |approx-exact|/exact <= 5%
-    (rsd=0.02): the oracle's literal TRUE makes the sketch's accuracy
-    bound itself the cross-engine assertion. The raw estimate stays a
-    pytest assertion (tests/test_relational.py)."""
-    ev = read_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            F.count_distinct("user_id").alias("exact_users"),
-            F.approx_count_distinct("user_id", rsd=0.02).alias("__approx"),
-        )
-        .select(
-            "event_type",
-            "exact_users",
-            (
-                F.abs(F.col("__approx") - F.col("exact_users"))
-                / F.col("exact_users")
-                <= F.lit(0.05)
-            ).alias("approx_ok"),
-        )
-    )
-
-
-@register(
-    "orders_rollup_incremental",
-    # Retired-tier BREADTH query (registry at its 50-slot cap): the
-    # incremental-aggregate-maintenance invariant
-    # merge(partial(A), partial(B), partial(C)) == direct(A u B u C)
-    # hash-verified on every pytest run — the oracle IS the direct
-    # aggregation, so any merge defect (double count, lost key,
-    # order-dependent sum) breaks the comparison.
-    retired=True,
-    oracle="""
-    SELECT o_custkey AS custkey,
-           CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE)
-               AS total_spend,
-           min(o_orderdate) AS first_order,
-           max(o_orderdate) AS last_order
-    FROM orders GROUP BY o_custkey
-    """,
-)
-def orders_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """incremental.partial_aggregate + merge_aggregates: the orders
-    table arrives as three deterministic hash-split batches (mimicking
-    three daily loads); each batch is partially aggregated alone and
-    the states are FOLDED — two merges, exercising associativity —
-    never re-scanning earlier batches. Decimal-exact sums make the
-    folded state bit-identical to the direct aggregation, which is
-    exactly what the oracle computes."""
-    from ..incremental import merge_aggregates, partial_aggregate
-    from ..packing import hex_bucket
-
-    orders = read_table(spark, sf_dir, "orders")
-    specs = {
-        "n_orders": ("count", None),
-        "total_spend": ("sum", "o_totalprice"),
-        "first_order": ("min", "o_orderdate"),
-        "last_order": ("max", "o_orderdate"),
-    }
-    # three "arrival days": a deterministic hash split of the keyspace
-    day = F.conv(hex_bucket(F.col("o_orderkey"), 1), 16, 10) % 3
-    batches = [
-        partial_aggregate(
-            orders.where(day == i), ["o_custkey"], specs
-        )
-        for i in range(3)
-    ]
-    state = merge_aggregates(
-        [merge_aggregates(batches[:2], ["o_custkey"], specs), batches[2]],
-        ["o_custkey"],
-        specs,
-    )
-    return state.select(
-        F.col("o_custkey").alias("custkey"),
-        "n_orders",
-        F.col("total_spend").cast("double").alias("total_spend"),
-        "first_order",
-        "last_order",
     )
 
 
@@ -715,95 +410,6 @@ def customer_monthly_spend_interpolated(
     )
 
 
-def _zorder_oracle_sql() -> str:
-    """Unrolled Morton-interleave SQL (16 bits x 2 cols) mirroring
-    io.zorder_key bit-for-bit with DuckDB's >> << & | operators."""
-    terms = []
-    for i in range(16):
-        for j, c in enumerate(("na", "nb")):
-            terms.append(f"((({c} >> {i}) & 1) << {i * 2 + j})")
-    interleave = " | ".join(terms)
-    return f"""
-    WITH stats AS (
-        SELECT min(l_partkey) AS lo_a, max(l_partkey) AS hi_a,
-               min(l_suppkey) AS lo_b, max(l_suppkey) AS hi_b
-        FROM lineitem
-    ),
-    norm AS (
-        SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-               least(greatest(CAST(floor(
-                   (CAST(l_partkey AS DOUBLE) - CAST(lo_a AS DOUBLE))
-                   / (CAST(hi_a AS DOUBLE) - CAST(lo_a AS DOUBLE)) * 65535
-               ) AS BIGINT), 0), 65535) AS na,
-               least(greatest(CAST(floor(
-                   (CAST(l_suppkey AS DOUBLE) - CAST(lo_b AS DOUBLE))
-                   / (CAST(hi_b AS DOUBLE) - CAST(lo_b AS DOUBLE)) * 65535
-               ) AS BIGINT), 0), 65535) AS nb
-        FROM lineitem, stats
-        WHERE l_orderkey < 3000
-    )
-    SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-           CAST({interleave} AS BIGINT) AS zkey
-    FROM norm
-    """
-
-
-@register(
-    "lineitem_zorder_keys",
-    # Retired-tier BREADTH query: the Morton-key math behind
-    # io.zorder_write verified on every pytest run — min/max
-    # normalization and all 32 interleaved bit positions recomputed in
-    # SQL (the interleave is the same unrolled expression, engine
-    # operators only).
-    retired=True,
-    oracle=_zorder_oracle_sql(),
-)
-def lineitem_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Z-order (Morton) clustering key over (l_partkey, l_suppkey)
-    — the multi-dimensional data-layout primitive behind
-    io.zorder_write (Delta OPTIMIZE ZORDER shape): each column min/max
-    -normalized to 16 bits, bits interleaved so files range-partitioned
-    by the key keep BOTH columns' per-file min/max narrow, giving
-    parquet footer skipping on either predicate. Stats join is a 1-row
-    broadcast; the interleave is pure codegen bit math."""
-    from ..io import zorder_key
-
-    li = read_table(spark, sf_dir, "lineitem")
-    stats = li.agg(
-        F.min("l_partkey").alias("lo_a"),
-        F.max("l_partkey").alias("hi_a"),
-        F.min("l_suppkey").alias("lo_b"),
-        F.max("l_suppkey").alias("hi_b"),
-    )
-    top = 65535
-
-    def norm(col, lo, hi):
-        scaled = F.floor(
-            (F.col(col).cast("double") - F.col(lo).cast("double"))
-            / (F.col(hi).cast("double") - F.col(lo).cast("double"))
-            * top
-        )
-        return F.least(F.greatest(scaled, F.lit(0)), F.lit(top)).cast("long")
-
-    return (
-        li.where(F.col("l_orderkey") < 3000)
-        .join(F.broadcast(stats))
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            "l_partkey",
-            "l_suppkey",
-            zorder_key(
-                [
-                    norm("l_partkey", "lo_a", "hi_a"),
-                    norm("l_suppkey", "lo_b", "hi_b"),
-                ],
-                bits=16,
-            ).alias("zkey"),
-        )
-    )
-
-
 @register(
     "customer_snapshot_diff",
     # PROMOTED to a driver slot r6 (rotation policy): snapshot
@@ -968,65 +574,6 @@ def trade_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = fwd.unionByName(back)
     return pagerank(edges, weight_col="w", iters=3)
-
-
-@register(
-    "customer_ring_triangles",
-    # Retired-tier BREADTH query: triangle counting under a real
-    # oracle — the degree-oriented wedge join verified against a
-    # direct a<b<c three-way self-join in SQL. The graph is synthesized
-    # deterministically from customer keys: two ring strides (c+1,
-    # c+2) make a triangle at every key, and a block-hub edge
-    # (c -> c - c%100) adds hub triangles (c, c+1, hub) plus real
-    # degree skew (each hub has ~99 spokes), so the orientation's
-    # skew-bounding is exercised, not just its correctness.
-    retired=True,
-    oracle="""
-    WITH raw AS (SELECT c_custkey AS c FROM customer),
-    ed AS (
-        SELECT c AS s, c + 1 AS t FROM raw
-        UNION ALL SELECT c, c + 2 FROM raw
-        UNION ALL SELECT c, c - (c % 100) FROM raw WHERE c % 100 != 0
-    ),
-    e AS (
-        SELECT DISTINCT least(s, t) AS u, greatest(s, t) AS v
-        FROM ed WHERE s != t
-    ),
-    tri AS (
-        SELECT t1.u AS a, t1.v AS b, t2.v AS c
-        FROM e t1
-        JOIN e t2 ON t2.u = t1.u AND t2.v > t1.v
-        JOIN e t3 ON t3.u = t1.v AND t3.v = t2.v
-    ),
-    corners AS (
-        SELECT a AS node FROM tri
-        UNION ALL SELECT b FROM tri
-        UNION ALL SELECT c FROM tri
-    )
-    SELECT node, count(*) AS n_triangles FROM corners GROUP BY node
-    """,
-)
-def customer_ring_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """graph.triangle_count over a ring+hub graph on customer keys:
-    the oriented wedge join enumerates each triangle once from its
-    unique low-(degree, id) corner, so the SQL oracle's exhaustive
-    ordered three-way join must produce identical per-node counts."""
-    from ..graph import triangle_count
-
-    c = F.col("c")
-    cust = read_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("c")
-    )
-    edges = (
-        cust.select(c.alias("src"), (c + 1).alias("dst"))
-        .unionByName(cust.select(c.alias("src"), (c + 2).alias("dst")))
-        .unionByName(
-            cust.where(c % 100 != 0).select(
-                c.alias("src"), (c - c % 100).alias("dst")
-            )
-        )
-    )
-    return triangle_count(edges)
 
 
 @register(

@@ -71,8 +71,7 @@ def stratified_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_train_split",
     # retired r6 (slot rotation): two-round-stable; sampling keeps
-    # driver evidence via quality_percentile_filter + doc_train_split's
-    # retired-tier oracle on every pytest run
+    # evidence via this retired-tier oracle on every pytest run
     retired=True,
     oracle=f"""
     SELECT doc_id, source, {_BUCKET} AS bucket,
@@ -155,129 +154,4 @@ def weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars",
         "bucket",
         F.round(F.col("__w"), 6).alias("weight"),
-    )
-
-
-@register(
-    "docs_exact_n_per_source",
-    # Retired-tier BREADTH query: exact-N stratified sampling
-    # (distributed reservoir equivalent) verified on every pytest run
-    # — seeded-hash draw order and the per-stratum cutoff recomputed
-    # in SQL.
-    retired=True,
-    oracle="""
-    SELECT doc_id, source FROM (
-        SELECT doc_id, source,
-               row_number() OVER (
-                   PARTITION BY source
-                   ORDER BY md5('n:' || CAST(doc_id AS VARCHAR)), doc_id
-               ) AS rn
-        FROM documents
-    ) WHERE rn <= 10
-    """,
-)
-def docs_exact_n_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACTLY-N-per-stratum sampling: rate-based draws (hash-bucket
-    thresholds) give each stratum a BINOMIAL sample size; when the
-    contract is 'exactly 10 docs per source' (eval set assembly,
-    per-domain quotas) the draw must be a top-N over a seeded-hash
-    order — the deterministic, distributed equivalent of per-stratum
-    reservoir sampling. One shuffle on the stratum key; the hash
-    order makes the sample identical on any partitioning and
-    re-drawable forever from the seed."""
-    from ..relational import top_k_per_group
-
-    docs = read_table(spark, sf_dir, "documents")
-    draw = F.md5(F.concat(F.lit("n:"), F.col("doc_id").cast("string")))
-    picked = top_k_per_group(
-        docs.select("doc_id", "source", draw.alias("__draw")),
-        ["source"],
-        [F.asc("__draw"), F.asc("doc_id")],
-        k=10,
-    )
-    return picked.select("doc_id", "source")
-
-
-@register(
-    "doc_leakage_safe_split",
-    # Retired-tier BREADTH query: the dedup-aware split — every doc is
-    # bucketed by its exact-dup CLUSTER canonical id, so duplicate
-    # texts can never straddle the train/eval boundary. The oracle
-    # recomputes the content fingerprint, the per-fingerprint min id,
-    # the hex bucket, and the threshold mapping from scratch.
-    retired=True,
-    oracle="""
-    WITH fp AS (
-        SELECT doc_id,
-               md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS f
-        FROM documents
-    ),
-    cl AS (
-        SELECT doc_id, min(doc_id) OVER (PARTITION BY f) AS cluster_id
-        FROM fp
-    )
-    SELECT doc_id, cluster_id,
-           substr(md5(CAST(cluster_id AS VARCHAR)), 1, 4) AS bucket,
-           CASE WHEN substr(md5(CAST(cluster_id AS VARCHAR)), 1, 4) < 'cccc'
-                THEN 'train'
-                WHEN substr(md5(CAST(cluster_id AS VARCHAR)), 1, 4) < 'e666'
-                THEN 'val'
-                ELSE 'test' END AS split
-    FROM cl
-    """,
-)
-def doc_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """packing.leakage_safe_split over documents: same 80/10/10 hex
-    thresholds as doc_train_split, but keyed on the exact-dup cluster
-    canonical id so no duplicated text leaks across splits."""
-    from ..packing import leakage_safe_split
-
-    docs = read_table(spark, sf_dir, "documents")
-    return leakage_safe_split(docs)
-
-
-@register(
-    "weighted_exact_k_docs",
-    # NEW r6 retired tier: A-ES exactly-k weighted sampling — keys,
-    # ranking, and the cutoff all recomputed in SQL. r7: key moved to
-    # the LOG form ln(u)/w over a 32-bit u (the 16-bit power form
-    # saturated at 1.000000000 for weights above ~2e2, degrading the
-    # draw to id-ascending ties); rounded to 9 on both engines so libm
-    # ulp differences cannot reorder ranks.
-    retired=True,
-    oracle="""
-    SELECT doc_id, source, n_chars, aes_key FROM (
-        SELECT doc_id, source, n_chars,
-               round(ln((CAST(CAST('0x' || substr(md5('aes:'
-                              || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-                          AS DOUBLE) + 0.5) / 4294967296.0)
-                     / least(1.0, CAST(n_chars AS DOUBLE) / 500.0),
-                     9) AS aes_key
-        FROM documents
-        WHERE least(1.0, CAST(n_chars AS DOUBLE) / 500.0) > 0
-    )
-    ORDER BY aes_key DESC, doc_id ASC
-    LIMIT 20
-    """,
-)
-def weighted_exact_k_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """packing.weighted_sample_exact_k over documents: EXACTLY 20 docs
-    drawn with inclusion probability proportional to the length-ramp
-    quality weight (Efraimidis-Spirakis keys in the non-saturating
-    log form ln(u)/w) — the sampler
-    that is both weighted AND exactly sized, where the hash-threshold
-    draw is weighted-but-binomial and the exact-N draw is unweighted.
-    Row-local keys; the global top-k compiles to TakeOrdered (partial
-    per-partition top-k, never a full sort)."""
-    docs = read_table(spark, sf_dir, "documents")
-    weighted = docs.select(
-        "doc_id",
-        "source",
-        "n_chars",
-        F.least(F.lit(1.0), F.col("n_chars").cast("double") / 500.0).alias("__w"),
-    )
-    from ..packing import weighted_sample_exact_k
-
-    return weighted_sample_exact_k(weighted, "__w", 20).select(
-        "doc_id", "source", "n_chars", "aes_key"
     )

@@ -327,54 +327,6 @@ def label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "knn_label_vote",
-    # Retired-tier BREADTH query (registry at its 50-slot cap): kNN
-    # classification oracle-verified on every pytest run — neighbor
-    # ranking, vote counts, and the smallest-label tiebreak all
-    # recomputed in SQL.
-    retired=True,
-    oracle=f"""
-    WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-               FROM embeddings WHERE vec_id < 20),
-    scored AS (
-        SELECT q.query_id, e.vec_id, e.label,
-               {_cos('e.embedding', 'q.qv')} AS cos_sim
-        FROM embeddings e CROSS JOIN q
-        WHERE e.vec_id != q.query_id
-    ),
-    topk AS (
-        SELECT * FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY query_id
-                ORDER BY cos_sim DESC, vec_id ASC) AS rnk
-            FROM scored
-        ) WHERE rnk <= 10
-    ),
-    votes AS (
-        SELECT query_id, label AS predicted_label,
-               CAST(count(*) AS BIGINT) AS votes,
-               max(cos_sim) AS top_cos
-        FROM topk GROUP BY query_id, label
-    )
-    SELECT query_id, predicted_label, votes, top_cos FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id
-            ORDER BY votes DESC, predicted_label ASC) AS vr
-        FROM votes
-    ) WHERE vr = 1
-    """,
-)
-def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """similarity.knn_label_vote for 20 query vectors against the full
-    corpus: majority label among the exact top-10 cosine neighbors
-    (self excluded), smallest label winning ties — the weak-labeling /
-    embedding-audit operator, fully reproduced by the SQL oracle."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 20)
-    return S.knn_label_vote(emb, queries, k=10)
-
-
-@register(
     "embedding_standardized",
     # Retired-tier BREADTH query: per-dimension whitening verified on
     # every pytest run — decimal-exact means/second-moments, population
@@ -758,46 +710,6 @@ def semantic_dedup_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "semantic_decontaminate_docs",
-    # Retired-tier BREADTH query: embedding-space decontamination
-    # verified on every pytest run — per-row max eval cosine, the
-    # lowest-id tiebreak, and the threshold verdict all recomputed
-    # in SQL.
-    retired=True,
-    oracle=f"""
-    WITH ev AS (SELECT vec_id AS eval_id, embedding AS evec
-                FROM embeddings WHERE vec_id % 97 = 0),
-    scored AS (
-        SELECT e.vec_id, ev.eval_id,
-               {_cos('e.embedding', 'ev.evec')} AS sim
-        FROM embeddings e CROSS JOIN ev
-    )
-    SELECT vec_id, max_eval_sim, nearest_eval_id,
-           max_eval_sim >= 0.5 AS contaminated
-    FROM (
-        SELECT vec_id, max(sim) AS max_eval_sim,
-               min(CASE WHEN sim = mx THEN eval_id END) AS nearest_eval_id
-        FROM (SELECT vec_id, eval_id, sim,
-                     max(sim) OVER (PARTITION BY vec_id) AS mx
-              FROM scored)
-        GROUP BY vec_id
-    )
-    """,
-)
-def semantic_decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """similarity.semantic_decontaminate over the embedding corpus:
-    every 97th vector stands in as the (broadcast) eval set, and every
-    corpus vector reports its closest eval item and the >= 0.5 verdict
-    — the paraphrase-robust complement to n-gram decontamination
-    (a reworded eval leak defeats shingle matching; its embedding
-    barely moves). Eval members themselves hit cosine 1.0 — the exact
-    leak is flagged too. Linear scan, broadcast evals, map-side max."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    ev = emb.where(F.col("vec_id") % 97 == 0)
-    return S.semantic_decontaminate(emb, ev, threshold=0.5)
-
-
-@register(
     "hard_negative_mining",
     retired=True,
     oracle=f"""
@@ -874,109 +786,6 @@ def contrastive_training_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5)
     return S.contrastive_pairs(emb, queries, k_pos=1, k_neg=5)
-
-
-@register(
-    "label_noise_audit",
-    retired=True,
-    oracle=f"""
-    WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label AS qlabel
-               FROM embeddings WHERE vec_id < 50),
-    scored AS (
-        SELECT q.query_id, q.qlabel, e.vec_id, e.label,
-               {_cos('e.embedding', 'q.qv')} AS cos_sim
-        FROM embeddings e CROSS JOIN q
-        WHERE e.vec_id != q.query_id
-    ),
-    topk AS (
-        SELECT * FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY query_id
-                ORDER BY cos_sim DESC, vec_id ASC) AS rnk
-            FROM scored
-        ) WHERE rnk <= 10
-    ),
-    votes AS (
-        SELECT query_id, qlabel, label AS predicted_label,
-               CAST(count(*) AS BIGINT) AS votes,
-               max(cos_sim) AS top_cos
-        FROM topk GROUP BY query_id, qlabel, label
-    )
-    SELECT query_id,
-           CAST(qlabel AS INT) AS assigned_label,
-           CAST(predicted_label AS INT) AS predicted_label,
-           votes, top_cos,
-           predicted_label != qlabel AND votes >= 7 AS is_suspect
-    FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id
-            ORDER BY votes DESC, predicted_label ASC) AS vr
-        FROM votes
-    ) WHERE vr = 1
-    """,
-)
-def label_noise_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """similarity.label_noise_candidates over 50 labeled query vectors:
-    rows whose assigned label loses a strong-majority (>= 7 of 10)
-    neighborhood vote are flagged as mislabel candidates; the oracle
-    recomputes the ranking, the vote, the tiebreak, and the flag."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 50)
-    return S.label_noise_candidates(emb, queries, k=10, min_votes=7)
-
-
-@register(
-    "embedding_centroid_drift",
-    retired=True,
-    oracle="""
-    WITH exploded AS (
-        SELECT vec_id, label, vec_id % 2 AS half,
-               CAST(t.i - 1 AS BIGINT) AS pos,
-               CAST(embedding[CAST(t.i AS INT)] AS DOUBLE) AS v
-        FROM embeddings, range(1, 65) t(i)
-    ),
-    dimstats AS (
-        SELECT label, pos,
-               CAST(round(CAST(sum(CASE WHEN half = 0
-                       THEN CAST(v AS DECIMAL(38,28)) END) AS DOUBLE)
-                     / nullif(sum(CASE WHEN half = 0 THEN 1 ELSE 0 END), 0),
-                   6) AS DECIMAL(18,6)) AS ma,
-               CAST(round(CAST(sum(CASE WHEN half = 1
-                       THEN CAST(v AS DECIMAL(38,28)) END) AS DOUBLE)
-                     / nullif(sum(CASE WHEN half = 1 THEN 1 ELSE 0 END), 0),
-                   6) AS DECIMAL(18,6)) AS mb
-        FROM exploded GROUP BY label, pos
-    ),
-    dots AS (
-        SELECT label,
-               CAST(sum(ma * mb) AS DOUBLE) AS dab,
-               CAST(sum(ma * ma) AS DOUBLE) AS daa,
-               CAST(sum(mb * mb) AS DOUBLE) AS dbb
-        FROM dimstats GROUP BY label
-    ),
-    counts AS (
-        SELECT label,
-               CAST(sum(CASE WHEN vec_id % 2 = 0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_a,
-               CAST(sum(CASE WHEN vec_id % 2 = 1 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_b
-        FROM embeddings GROUP BY label
-    )
-    SELECT c.label, c.n_a, c.n_b,
-           round(dab / nullif(sqrt(daa) * sqrt(dbb), 0), 6) AS centroid_cos,
-           coalesce(round(dab / nullif(sqrt(daa) * sqrt(dbb), 0), 6) < 0.8,
-                    false) AS drifted
-    FROM counts c JOIN dots USING (label)
-    """,
-)
-def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """similarity.centroid_drift over the labeled embeddings (even vs
-    odd vec_id as the two snapshots): per-label centroid cosine with
-    decimal-exact per-dimension means, drift flag below 0.8. The
-    oracle recomputes the explode, both halves' rounded means, the
-    exact-decimal dot products, and the flag."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    return S.centroid_drift(emb, dim=64, min_cos=0.8)
 
 
 @register(
@@ -1482,7 +1291,7 @@ def bm25_pruned_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``bm25_doc_retrieval`` with the r8 term-skew guard engaged
     (``max_df_ratio=0.79``, splitting this tiny synthetic vocabulary's
     0.776-0.804 df band — see text.bm25_topk and
-    tools/bm25_skew_probe.py): hot terms are excluded from candidate
+    artifacts/BM25_SKEW_PROBE_r08.json): hot terms are excluded from candidate
     generation only, survivors score exactly. On this stopword-heavy
     corpus the prune genuinely drops terms and (for some queries)
     candidates, so the DuckDB hash match verifies the pruned plan's

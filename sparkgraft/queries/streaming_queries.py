@@ -15,38 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import streaming as ST
-from .duckfrag import TOK as _TOK
 from .registry import register
-
-
-@register(
-    "stream_windowed_counts",
-    # RETIRED r7 (rotation: three-round-stable; slot funds the
-    # user_event_cms_counts promotion; the streaming surface stays
-    # actively gated via stream_windowed_conformance).
-    retired=True,
-    oracle="""
-    SELECT time_bucket(INTERVAL '6 hours', ts) AS window_start,
-           time_bucket(INTERVAL '6 hours', ts) + INTERVAL '6 hours' AS window_end,
-           event_type,
-           count(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-    FROM events
-    GROUP BY 1, 2, 3
-    """,
-)
-def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 6-hour event counts computed BY THE STREAMING ENGINE —
-    hash-matched against batch SQL by the oracle. ``split_files=4`` +
-    ``maxFilesPerTrigger=1`` re-stages the table as 4 parquet files so
-    the bounded stream runs >= 4 micro-batches: the oracle then verifies
-    CROSS-BATCH window state (partial aggregates carried and merged
-    across triggers), not a degenerate single-batch run."""
-    stream = ST.stream_table(spark, sf_dir, "events", split_files=4)
-    return ST.run_stream_to_memory(
-        ST.windowed_event_counts(stream, window="6 hours"),
-        "q_stream_windowed_counts",
-    )
 
 
 @register(
@@ -74,8 +43,7 @@ def stream_windowed_conformance(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's daily batch job recast as a continuous query whose
     output the oracle verifies against batch SQL. ``split_files=4``
     drives >= 4 micro-batches so the verified state is genuinely
-    merged across triggers (same discipline as
-    ``stream_windowed_counts``)."""
+    merged across triggers."""
     from .core import _event_spec
 
     stream = ST.stream_table(
@@ -84,74 +52,4 @@ def stream_windowed_conformance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ST.run_stream_to_memory(
         ST.windowed_conformance(stream, _event_spec(spark), window="12 hours"),
         "q_stream_windowed_conformance",
-    )
-
-
-@register(
-    "stream_quality_gate",
-    # retired tier (r6): the Gopher gate run BY THE STREAMING ENGINE —
-    # the filter-on-ingest shape (gate documents as they arrive, before
-    # they ever land in the corpus store). Stateless projection, so the
-    # parity claim is that the gate's HOF expression bundle behaves
-    # identically under the microbatch engine across >= 4 triggers.
-    retired=True,
-    oracle=f"""
-    WITH base AS (
-        SELECT doc_id, source, text, {{tok}} AS tok FROM documents
-    ), m AS (
-        SELECT doc_id, source,
-               CAST(len(tok) AS BIGINT) AS n_words,
-               round(list_sum(list_transform(tok, t -> length(t)))
-                     / nullif(len(tok), 0), 6) AS mean_word_len,
-               CAST(len(list_filter(
-                   ['the','be','to','of','and','that','have','with'],
-                   w -> list_contains(tok, w))) AS BIGINT) AS stop_hits,
-               round(len(list_filter(tok, x -> regexp_matches(x, '[a-z]')))
-                     / nullif(len(tok), 0), 6) AS alpha_frac,
-               round((
-                 (coalesce(length(text), 0)
-                    - coalesce(length(replace(text, '#', '')), 0))
-                 + CAST((coalesce(length(text), 0)
-                    - coalesce(length(replace(text, '...', '')), 0)) / 3
-                   AS BIGINT)
-               ) / nullif(len(tok), 0), 6) AS symbol_ratio,
-               CASE WHEN text IS NULL OR text = '' THEN []::VARCHAR[]
-                    ELSE string_split(text, chr(10)) END AS ls
-        FROM base
-    )
-    SELECT doc_id, source, n_words, stop_hits,
-           coalesce(n_words >= 30 AND n_words <= 100000, false)
-           AND coalesce(mean_word_len BETWEEN 3.0 AND 10.0, false)
-           AND coalesce(symbol_ratio <= 0.1, false)
-           AND coalesce(round(len(list_filter(ls, l ->
-                    starts_with(trim(l), '-') OR starts_with(trim(l), '*')
-                    OR starts_with(trim(l), '•')))
-                  / nullif(len(ls), 0), 6) <= 0.9, false)
-           AND coalesce(round(len(list_filter(ls, l ->
-                    ends_with(trim(l), '...')))
-                  / nullif(len(ls), 0), 6) <= 0.3, false)
-           AND coalesce(alpha_frac >= 0.8, false)
-           AND coalesce(stop_hits >= 1, false) AS keep
-    FROM m
-    """.replace("{tok}", _TOK),
-)
-def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """text.gopher_rules applied inside the microbatch engine
-    (filter-on-ingest): documents stream in over >= 4 triggers and the
-    gate's verdict columns land in an append sink; the oracle
-    recomputes every signal and the conjunction in batch SQL — the
-    batch/stream parity guarantee for the curation gate tier."""
-    from .. import text as T
-
-    stream = ST.stream_table(spark, sf_dir, "documents", split_files=4)
-    g = T.gopher_rules("text", min_words=30, min_stop_hits=1)
-    gated = stream.select(
-        "doc_id",
-        "source",
-        g["n_words"].alias("n_words"),
-        g["stop_hits"].alias("stop_hits"),
-        g["keep"].alias("keep"),
-    )
-    return ST.run_stream_to_memory(
-        gated, "q_stream_quality_gate", output_mode="append"
     )

@@ -25,49 +25,6 @@ _FR = "['le','la','et','les','des','un','une','du','est','que']"
 _DE = "['der','die','das','und','ist','ein','eine','zu','den','von']"
 
 
-@register(
-    "doc_quality_metrics",
-    # retired r6 continuation (slot rotation for
-    # doc_importance_resampling): two-round-stable; the quality-metric
-    # expressions keep driver exercise inside corpus_curation_pipeline
-    # (and the gopher gate recomputes the same signal family), and this
-    # stays locally oracled every pytest run
-    retired=True,
-    oracle=f"""
-    WITH base AS (
-        SELECT doc_id, source, {_TOK} AS tok,
-               coalesce(length(text), 0) AS n_chars,
-               coalesce(length(text), 0)
-                 - coalesce(length(regexp_replace(text, '[^\\w\\s]', '', 'g')), 0)
-                 AS n_punct
-        FROM documents
-    )
-    SELECT doc_id, source, n_chars,
-           len(tok) AS n_tokens,
-           round(n_punct / nullif(n_chars, 0), 6) AS punct_ratio,
-           round(len(list_filter(tok, t -> list_contains({_EN}, t)))
-                 / nullif(len(tok), 0), 6) AS stopword_ratio,
-           round(list_sum(list_transform(tok, t -> length(t)))
-                 / nullif(len(tok), 0), 6) AS mean_token_len
-    FROM base
-    """,
-)
-def doc_quality_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality scoring: char/token counts, punctuation + stopword
-    ratios, mean token length — all codegen'd expressions, one scan."""
-    docs = spread(read_table(spark, sf_dir, "documents"))
-    m = T.quality_metrics("text")
-    return docs.select(
-        "doc_id",
-        "source",
-        m["n_chars"].alias("n_chars"),
-        m["n_tokens"].alias("n_tokens"),
-        m["punct_ratio"].alias("punct_ratio"),
-        m["stopword_ratio"].alias("stopword_ratio"),
-        m["mean_token_len"].alias("mean_token_len"),
-    )
-
-
 # The r13 multilingual plant (VERDICT r12 #7): once the charset decode
 # tier landed, the corpus stopped being ASCII-by-construction, so the
 # quality tier's whitespace/tokenizer classes must agree between Java
@@ -88,7 +45,7 @@ _ML_SUFFIX_SQL = (
 
 @register(
     "doc_quality_multilingual",
-    # NEW r13 retired tier: the doc_quality_metrics contract re-proved
+    # NEW r13 retired tier: the text.quality_metrics contract re-proved
     # on non-ASCII text — same metric expressions, same oracle shape,
     # over text || the multilingual suffix. Any Java-vs-RE2 class
     # divergence (\x0b in \s, unicode whitespace, \w width) shifts
@@ -120,7 +77,7 @@ _ML_SUFFIX_SQL = (
 def doc_quality_multilingual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality metrics over multilingual text: every document's text
     carries the planted non-ASCII suffix, and the SAME codegen
-    expressions as doc_quality_metrics must produce the SAME counts
+    expressions as text.quality_metrics must produce the SAME counts
     the DuckDB (RE2) twin computes — the proof that the explicit
     whitespace classes hold off Java's \\x0b divergence and that
     unicode spaces (U+3000, U+00A0) are data, not separators, in both
@@ -137,212 +94,7 @@ def doc_quality_multilingual(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "doc_lang_id",
-    # RETIRED r5 (two-round-stable; slot freed for ann_lsh_top1_planted,
-    # which converts the ANN-top-k rows-only evidence class into a
-    # hash-checked driver row): lang-id keeps active driver exercise
-    # inside corpus_curation_pipeline's lang stage, and stays
-    # oracle-verified here via tests/test_retired_oracles.py.
-    retired=True,
-    oracle=f"""
-    WITH scored AS (
-        SELECT doc_id, lang,
-               len(list_filter({_TOK}, t -> list_contains({_DE}, t))) AS s_de,
-               len(list_filter({_TOK}, t -> list_contains({_EN}, t))) AS s_en,
-               len(list_filter({_TOK}, t -> list_contains({_ES}, t))) AS s_es,
-               len(list_filter({_TOK}, t -> list_contains({_FR}, t))) AS s_fr,
-               coalesce(length(text), 0)
-                 - coalesce(length(regexp_replace(text, '[一-鿿]', '', 'g')), 0)
-                 AS s_zh
-        FROM documents
-    )
-    SELECT doc_id, lang,
-           CAST(s_de AS BIGINT) AS s_de, CAST(s_en AS BIGINT) AS s_en,
-           CAST(s_es AS BIGINT) AS s_es, CAST(s_fr AS BIGINT) AS s_fr,
-           CAST(s_zh AS BIGINT) AS s_zh,
-           CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
-                WHEN s_de = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'de'
-                WHEN s_en = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'en'
-                WHEN s_es = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'es'
-                WHEN s_fr = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'fr'
-                ELSE 'zh' END AS lang_pred
-    FROM scored
-    """,
-)
-def doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword/CJK-heuristic language ID with deterministic argmax
-    (first language alphabetically wins ties; all-zero -> 'und').
-    ``lang`` (ground truth) rides along for accuracy eyeballing."""
-    docs = spread(read_table(spark, sf_dir, "documents"))
-    scores = T.lang_scores("text")
-    return docs.select(
-        "doc_id",
-        "lang",
-        *[scores[lang].alias(f"s_{lang}") for lang in sorted(scores)],
-        T.lang_id("text").alias("lang_pred"),
-    )
-
-
-@register(
-    "doc_fingerprints",
-    # retired round 4 (coverage budget): the md5 fingerprint is actively
-    # exercised inside dedup_exact_keep_first and the curation pipeline;
-    # winnowing covers the substring-fingerprint surface
-    retired=True,
-    oracle="""
-    SELECT doc_id,
-           md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint,
-           count(*) OVER (
-               PARTITION BY md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))
-           ) AS n_same
-    FROM documents
-    """,
-)
-def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content fingerprint per document + collision count (exact-dedup
-    key; this corpus has no exact dups, so n_same == 1 everywhere —
-    the interesting near-dup cases live in the dedup queries)."""
-    from pyspark.sql import Window
-
-    docs = spread(read_table(spark, sf_dir, "documents"))
-    with_fp = docs.select("doc_id", T.fingerprint("text").alias("fingerprint"))
-    w = Window.partitionBy("fingerprint")
-    return with_fp.withColumn("n_same", F.count(F.lit(1)).over(w))
-
-
-@register(
-    "token_counts_bpe",
-    # retired round 4 (coverage budget, made room for the corpus tier):
-    # BPE-ish token counting stays verified here in the retired tier
-    # and actively inside pack_training_sequences' token budgets and
-    # corpus_curation_pipeline
-    retired=True,
-    oracle=r"""
-    SELECT doc_id,
-           CASE WHEN text IS NULL THEN 0
-                ELSE len(regexp_extract_all(lower(text), '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+'))
-           END AS n_bpe_tokens,
-           CASE WHEN text IS NULL THEN 0
-                ELSE len(list_distinct(regexp_extract_all(lower(text), '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+')))
-           END AS n_distinct_tokens
-    FROM documents
-    """,
-)
-def token_counts_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-ish regex token counts (letter runs / digit runs / symbol
-    runs) — the model-token-budget proxy next to whitespace counts
-    (token_counts_by_source). Pattern restricted to classes Java regex
-    and RE2 agree on."""
-    docs = spread(read_table(spark, sf_dir, "documents"))
-    tok = T.regex_tokens("text")
-    staged = docs.select("doc_id", "text", tok.alias("__t"))
-    return staged.select(
-        "doc_id",
-        F.when(F.col("text").isNull(), F.lit(0))
-        .otherwise(F.size("__t"))
-        .cast("bigint")
-        .alias("n_bpe_tokens"),
-        F.when(F.col("text").isNull(), F.lit(0))
-        .otherwise(F.size(F.array_distinct("__t")))
-        .cast("bigint")
-        .alias("n_distinct_tokens"),
-    )
-
-
 _NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-
-
-@register(
-    "winnowing_shared_fingerprints",
-    # RETIRED r5 (two-round-stable, green r3+r4; slot freed for
-    # dedup_repeated_spans, which carries the span-fingerprinting
-    # concept into the driver gate as the Lee-et-al-style
-    # repeated-span REMOVAL operator): winnowing stays
-    # oracle-verified here via tests/test_retired_oracles.py.
-    retired=True,
-    oracle=f"""
-    WITH norm AS MATERIALIZED (
-        -- MATERIALIZED + exploded window-min instead of per-position
-        -- list lambdas: the lambda form re-ran the regexp normalize
-        -- inside every list_transform call (O(len^2) regex per doc,
-        -- ~23s at sf0.01 — it starved the round-1 driver gate); this
-        -- form is ~150x faster with identical output
-        SELECT doc_id, {_NORM} AS nt
-        FROM documents
-        WHERE text IS NOT NULL
-    ), kgrams AS (
-        SELECT doc_id,
-               unnest(range(1, greatest(length(nt) - 8 + 1, 1) + 1)) AS pos,
-               nt
-        FROM norm
-        WHERE length(nt) >= 8
-    ), hashed AS (
-        SELECT doc_id, pos, md5(substr(nt, CAST(pos AS INT), 8)) AS h
-        FROM kgrams
-    ), winmin AS (
-        SELECT doc_id, pos,
-               min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                            ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
-               count(*) OVER (PARTITION BY doc_id) AS n
-        FROM hashed
-    ), fp_all AS (
-        SELECT DISTINCT doc_id, fp FROM winmin WHERE pos <= greatest(n - 3, 1)
-    ), rare AS (
-        SELECT fp FROM fp_all GROUP BY fp HAVING count(*) <= 10
-    ), fp AS (
-        SELECT doc_id, fp FROM fp_all JOIN rare USING (fp)
-    )
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
-    FROM fp a JOIN fp b USING (fp)
-    WHERE a.doc_id < b.doc_id
-    GROUP BY 1, 2
-    HAVING count(*) >= 20
-    """,
-)
-def winnowing_shared_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling-hash document fingerprinting (MOSS winnowing, k=8
-    char-grams, window=4): documents sharing >= 20 winnowed
-    fingerprints share long verbatim substrings — the substring-level
-    near-dup signal word-shingle Jaccard misses. (Threshold 20 + df<=10
-    fingerprint pruning: this tiny-vocab corpus shares short substrings
-    ubiquitously; pruning ubiquitous prints before the join keeps the
-    candidate set linear, the standard winnowing-index practice.) The
-    oracle recomputes the full winnow in SQL (same md5 rolling hashes,
-    same window minima).
-
-    The fingerprint table is persisted before the explode: the explode
-    makes the optimizer infer a ``size(fps) > 0`` filter and push it
-    below the staged Projects, re-inlining the whole winnow chain into
-    the filter — O(n^2) md5 per document, measured ~90x slower. The
-    cache is also read 3x downstream (df-pruning + both self-join
-    sides)."""
-    from pyspark import StorageLevel
-
-    docs = spread(read_table(spark, sf_dir, "documents"))
-    winnowed = T.winnow_fingerprints(
-        docs.select("doc_id", "text"), "text", k=8, window=4, out="__fps"
-    ).select("doc_id", "__fps").persist(StorageLevel.MEMORY_AND_DISK)
-    fp_all = winnowed.select("doc_id", F.explode("__fps").alias("fp"))
-    # df-cap pruning: ubiquitous fingerprints (this corpus's tiny vocab
-    # makes many 8-grams near-universal) generate quadratic join output
-    # for zero signal — drop them BEFORE the self-join, like jaccard's
-    # max_df. Mirrored exactly in the oracle SQL.
-    rare = (
-        fp_all.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .where(F.col("__df") <= 10)
-        .select("fp")
-    )
-    fp = fp_all.join(rare, "fp")
-    a, b = fp.alias("a"), fp.alias("b")
-    return (
-        a.join(b, "fp")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= 20)
-    )
 
 
 @register(
@@ -447,30 +199,6 @@ def doc_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("__dup_big") / nz(F.col("n_bigrams")), 6)
             .alias("dup_bigram_frac"),
         )
-    )
-
-
-@register(
-    "token_counts_by_source",
-    f"""
-    WITH base AS (SELECT source, lang, {_TOK} AS tok FROM documents)
-    SELECT source, lang,
-           count(*) AS n_docs,
-           CAST(sum(len(tok)) AS BIGINT) AS total_tokens,
-           CAST(max(len(tok)) AS BIGINT) AS max_tokens
-    FROM base GROUP BY source, lang
-    """,
-    retired=True,
-)
-def token_counts_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus token accounting per (source, lang) — the budgeting query
-    every training-data pipeline runs first."""
-    docs = spread(read_table(spark, sf_dir, "documents"))
-    n_tok = F.size(T.tokens("text")).cast("bigint")
-    return docs.groupBy("source", "lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(n_tok).alias("total_tokens"),
-        F.max(n_tok).alias("max_tokens"),
     )
 
 
@@ -792,51 +520,6 @@ def doc_cdc_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "doc_char_entropy",
-    # Retired-tier BREADTH query: the character-entropy quality signal
-    # verified on every pytest run — normalization, the sorted-distinct
-    # fold, and the ln() math all recomputed in SQL.
-    retired=True,
-    oracle="""
-    WITH nt AS (
-        SELECT doc_id,
-               trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS s
-        FROM documents
-    ),
-    ch AS (
-        SELECT doc_id, s,
-               list_transform(range(1, length(s) + 1),
-                              i -> substr(s, CAST(i AS INT), 1)) AS chars
-        FROM nt
-    )
-    SELECT doc_id,
-           CAST(coalesce(length(s), 0) AS BIGINT) AS n_norm_chars,
-           CASE WHEN s IS NULL OR length(s) = 0 THEN NULL
-                ELSE round(-list_sum(list_transform(
-                         list_sort(list_distinct(chars)), c ->
-                         (CAST(len(list_filter(chars, x -> x = c)) AS DOUBLE)
-                          / length(s))
-                         * ln(CAST(len(list_filter(chars, x -> x = c))
-                                   AS DOUBLE) / length(s)))), 6)
-           END AS entropy
-    FROM ch
-    """,
-)
-def doc_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """text.char_entropy per document plus the normalized length — the
-    gibberish/boilerplate band filter. Sorted-distinct character fold
-    keeps the double summation order-identical on both engines."""
-    docs = read_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.coalesce(F.length(T.normalize_text("text")), F.lit(0))
-        .cast("bigint")
-        .alias("n_norm_chars"),
-        T.char_entropy("text").alias("entropy"),
-    )
-
-
-@register(
     "doc_quality_logistic",
     # Retired-tier BREADTH query: the quality-CLASSIFIER stage (CCNet
     # fastText-filter shape) verified on every pytest run — feature
@@ -905,116 +588,6 @@ def doc_quality_logistic(spark: SparkSession, sf_dir: str) -> DataFrame:
         "*",
         score.alias("quality_score"),
         (score >= 0.5).alias("keep"),
-    )
-
-
-# Planted PII fixture shared by both engines (pure ASCII, every PII
-# token space-isolated and letter-bounded — the adjacency class where
-# Java-regex lookarounds and DuckDB/RE2 capture-group emulation agree
-# exactly; RE2 has no lookarounds, so the oracle re-emits the captured
-# boundary characters instead).
-_PII_TEXT_SQL = """
-    'doc ' || CAST(doc_id AS VARCHAR)
-    || CASE WHEN doc_id % 7 = 0
-            THEN ' mail user' || CAST(doc_id AS VARCHAR) || '@example.org ok'
-            ELSE '' END
-    || CASE WHEN doc_id % 5 = 0 THEN ' ssn 123-45-6789 x' ELSE '' END
-    || CASE WHEN doc_id % 11 = 0
-            THEN ' ip 10.' || CAST(doc_id % 200 AS VARCHAR) || '.0.1 y'
-            ELSE '' END
-    || CASE WHEN doc_id % 13 = 0 THEN ' call 555-867-5309 z' ELSE '' END
-    || CASE WHEN doc_id % 17 = 0 THEN ' card 4111111111111111 w' ELSE '' END
-    || ' tail'
-"""
-
-
-@register(
-    "doc_pii_redaction",
-    # Retired-tier BREADTH query: the PII scrub pass (redact_pii +
-    # pii_counts — the cheap always-on tier under any NER layer) with
-    # the REDACTED STRING ITSELF oracle-verified. DuckDB applies the
-    # same pattern chain in the same order with lookarounds emulated
-    # by boundary captures re-emitted in the replacement ('\\1<K>\\2'),
-    # which is exact on the planted fixture's isolated matches.
-    retired=True,
-    oracle=f"""
-    WITH p AS (SELECT doc_id, {_PII_TEXT_SQL} AS s FROM documents),
-    red AS (
-        SELECT doc_id, s,
-          regexp_replace(
-            regexp_replace(
-              regexp_replace(
-                regexp_replace(
-                  regexp_replace(
-                    s,
-                    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{{2,}}',
-                    '<EMAIL>', 'g'),
-                  '([^0-9]|^)[0-9]{{3}}-[0-9]{{2}}-[0-9]{{4}}([^0-9]|$)',
-                  '\\1<SSN>\\2', 'g'),
-                '([^0-9]|^)(\\+?[0-9]{{1,3}}[-. ])?(\\([0-9]{{3}}\\)[-. ]?|[0-9]{{3}}[-. ])[0-9]{{3}}[-. ][0-9]{{4}}([^0-9]|$)',
-                '\\1<PHONE>\\4', 'g'),
-              '([^0-9.]|^)([0-9]{{1,3}}\\.){{3}}[0-9]{{1,3}}([^0-9.]|$)',
-              '\\1<IPV4>\\3', 'g'),
-            '([^0-9]|^)[0-9]{{13,19}}([^0-9]|$)', '\\1<CARD>\\2', 'g')
-            AS redacted
-        FROM p
-    )
-    SELECT doc_id, redacted,
-           CAST(length(redacted) AS BIGINT) AS redacted_len,
-           CAST(len(regexp_extract_all(s,
-               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{{2,}}'))
-               AS BIGINT) AS n_email,
-           CAST(len(regexp_extract_all(s,
-               '([^0-9]|^)[0-9]{{3}}-[0-9]{{2}}-[0-9]{{4}}([^0-9]|$)'))
-               AS BIGINT) AS n_ssn,
-           CAST(len(regexp_extract_all(s,
-               '([^0-9]|^)(\\+?[0-9]{{1,3}}[-. ])?(\\([0-9]{{3}}\\)[-. ]?|[0-9]{{3}}[-. ])[0-9]{{3}}[-. ][0-9]{{4}}([^0-9]|$)'))
-               AS BIGINT) AS n_phone,
-           CAST(len(regexp_extract_all(s,
-               '([^0-9.]|^)([0-9]{{1,3}}\\.){{3}}[0-9]{{1,3}}([^0-9.]|$)'))
-               AS BIGINT) AS n_ipv4,
-           CAST(len(regexp_extract_all(s,
-               '([^0-9]|^)[0-9]{{13,19}}([^0-9]|$)'))
-               AS BIGINT) AS n_card
-    FROM red
-    """,
-)
-def doc_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """redact_pii over a planted-PII corpus with the redacted text as
-    the verified value: emails, SSNs, phones, IPv4s and card numbers
-    are appended deterministically by doc_id residue, counts audit the
-    ORIGINAL text, and the chained in-order replacement must match the
-    oracle byte-for-byte."""
-    docs = spread(read_table(spark, sf_dir, "documents"))
-    did = F.col("doc_id").cast("string")
-    piece = lambda mod, mk: F.when(  # noqa: E731
-        F.col("doc_id") % mod == 0, mk
-    ).otherwise("")
-    s = F.concat(
-        F.lit("doc "), did,
-        piece(7, F.concat(F.lit(" mail user"), did, F.lit("@example.org ok"))),
-        piece(5, F.lit(" ssn 123-45-6789 x")),
-        piece(11, F.concat(
-            F.lit(" ip 10."),
-            (F.col("doc_id") % 200).cast("string"),
-            F.lit(".0.1 y"),
-        )),
-        piece(13, F.lit(" call 555-867-5309 z")),
-        piece(17, F.lit(" card 4111111111111111 w")),
-        F.lit(" tail"),
-    )
-    planted = docs.select("doc_id", s.alias("s"))
-    red = T.redact_pii("s")
-    counts = T.pii_counts("s")
-    return planted.select(
-        "doc_id",
-        red.alias("redacted"),
-        F.length(red).cast("bigint").alias("redacted_len"),
-        counts["n_email"].alias("n_email"),
-        counts["n_ssn"].alias("n_ssn"),
-        counts["n_phone"].alias("n_phone"),
-        counts["n_ipv4"].alias("n_ipv4"),
-        counts["n_card"].alias("n_card"),
     )
 
 
@@ -1422,43 +995,6 @@ def pretrain_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("epoch").cast("bigint").alias("epoch"),
         )
     )
-
-
-@register(
-    "vocab_shift_topk",
-    retired=True,
-    oracle=f"""
-    WITH terms AS (
-        SELECT doc_id % 2 AS half, unnest({_TOK}) AS term FROM documents
-    ), counts AS (
-        SELECT term,
-               CAST(sum(CASE WHEN half = 0 THEN 1 ELSE 0 END) AS BIGINT)
-                 AS c_a,
-               CAST(sum(CASE WHEN half = 1 THEN 1 ELSE 0 END) AS BIGINT)
-                 AS c_b
-        FROM terms GROUP BY term
-    ), tot AS (
-        SELECT CAST(sum(c_a) AS DOUBLE) AS ta,
-               CAST(sum(c_b) AS DOUBLE) AS tb,
-               CAST(count(*) AS DOUBLE) AS v
-        FROM counts
-    )
-    SELECT term, c_a, c_b,
-           round(((c_a + 1) / (ta + v))
-                 * ln(((c_a + 1) / (ta + v)) / ((c_b + 1) / (tb + v))), 6)
-             AS kl_contrib
-    FROM counts CROSS JOIN tot
-    ORDER BY kl_contrib DESC, term ASC
-    LIMIT 20
-    """,
-)
-def vocab_shift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """text.vocab_shift_topk over the corpus (even vs odd doc_id as
-    the two crawls): top-20 terms by smoothed KL contribution — the
-    token-distribution drift report. The oracle recomputes both
-    smoothed distributions, the ln ratio, and the rounded ranking."""
-    docs = read_table(spark, sf_dir, "documents")
-    return T.vocab_shift_topk(docs, k=20)
 
 
 @register(

@@ -51,7 +51,7 @@ def _ts(s: str) -> F.Column:
 @register(
     "nation_market_share",
     # TPC-H Q8 shape (retired tier: relational breadth; the active
-    # multi-join evidence stays with shipping_priority_top10 / Q10).
+    # multi-join evidence is large_order_customers, the Q18 shape).
     retired=True,
     oracle="""
     SELECT o_year,

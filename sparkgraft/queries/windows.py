@@ -17,144 +17,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import read_table
-from ..relational import as_of_join, counts_with_total, epoch_us, sessionize
+from ..relational import as_of_join, epoch_us, sessionize
 from .registry import dec, register
-
-
-@register(
-    "rank_family",
-    # RETIRED r5 (two-round-stable; slot freed for ann_ivf_top1_planted,
-    # which converts the IVF-ANN rows-only evidence class into a
-    # hash-checked driver row): W2 keeps active evidence via
-    # user_sessions, the sort/top-k family via shipping_priority_top10;
-    # this stays oracle-verified via tests/test_retired_oracles.py.
-    retired=True,
-    oracle="""
-    SELECT o_orderkey, o_custkey, o_totalprice,
-           rank()       OVER w AS rnk,
-           dense_rank() OVER w AS drnk,
-           row_number() OVER (PARTITION BY o_custkey
-                              ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn,
-           ntile(4)     OVER (PARTITION BY o_custkey
-                              ORDER BY o_totalprice DESC, o_orderkey ASC) AS quartile
-    FROM orders
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC)
-    """,
-)
-def rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = read_table(spark, sf_dir, "orders")
-    by_price = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"))
-    strict = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    # ranks cast to bigint: DuckDB's rank family returns BIGINT, Spark INT
-    return orders.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_totalprice",
-        F.rank().over(by_price).cast("bigint").alias("rnk"),
-        F.dense_rank().over(by_price).cast("bigint").alias("drnk"),
-        F.row_number().over(strict).cast("bigint").alias("rn"),
-        F.ntile(4).over(strict).cast("bigint").alias("quartile"),
-    )
-
-
-@register(
-    "running_spend",
-    """
-    SELECT o_custkey, o_orderkey, o_orderdate,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-                OVER (PARTITION BY o_custkey
-                      ORDER BY o_orderdate ASC, o_orderkey ASC
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS DOUBLE) AS running_spend,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-                OVER (PARTITION BY o_custkey
-                      ORDER BY o_orderdate ASC, o_orderkey ASC
-                      ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-                AS DOUBLE)
-             / count(*) OVER (PARTITION BY o_custkey
-                      ORDER BY o_orderdate ASC, o_orderkey ASC
-                      ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-             AS moving_avg_3
-    FROM orders
-    """,
-    retired=True,
-)
-def running_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame specs: cumulative sum + 3-row moving average. Decimal-exact
-    accumulation so the result is independent of partition layout."""
-    orders = read_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.asc("o_orderdate"), F.asc("o_orderkey")
-    )
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderdate",
-        F.sum(dec("o_totalprice"))
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .cast("double")
-        .alias("running_spend"),
-        # exact decimal sum / count, divided in DOUBLE: decimal AVG would
-        # round at its result scale, which DuckDB's double avg does not
-        (
-            F.sum(dec("o_totalprice")).over(w.rowsBetween(-2, 0)).cast("double")
-            / F.count(F.lit(1)).over(w.rowsBetween(-2, 0))
-        ).alias("moving_avg_3"),
-    )
-
-
-@register(
-    "order_gaps_lag_lead",
-    """
-    SELECT o_custkey, o_orderkey, o_orderdate,
-           lag(o_orderkey)  OVER w AS prev_orderkey,
-           lead(o_orderkey) OVER w AS next_orderkey,
-           epoch_us(o_orderdate) - epoch_us(lag(o_orderdate) OVER w)
-               AS micros_since_prev
-    FROM orders
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)
-    """,
-    retired=True,
-)
-def order_gaps_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = read_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.asc("o_orderdate"), F.asc("o_orderkey")
-    )
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderdate",
-        F.lag("o_orderkey").over(w).alias("prev_orderkey"),
-        F.lead("o_orderkey").over(w).alias("next_orderkey"),
-        (epoch_us("o_orderdate") - F.lag(epoch_us("o_orderdate")).over(w)).alias(
-            "micros_since_prev"
-        ),
-    )
-
-
-@register(
-    "counts_with_global_total",
-    # Retired r4 to free a driver slot for open_lineitems_per_day: the
-    # A5 in-plan-denominator discipline keeps active driver evidence
-    # via conformance_flagship's join fan-out denominators; this query
-    # stays locally verified (tests/test_retired_oracles.py).
-    """
-    SELECT event_type, n_events,
-           CAST(SUM(n_events) OVER () AS BIGINT) AS total_records
-    FROM (SELECT event_type, count(*) AS n_events FROM events GROUP BY event_type)
-    """,
-    retired=True,
-)
-def counts_with_global_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """In-plan denominator (SURVEY §4.2.2): the reference recomputes
-    totals as repeated ``df.count()`` driver actions; here one window
-    over the aggregate — the post-agg rowset is tiny, the window free."""
-    ev = read_table(spark, sf_dir, "events")
-    out = counts_with_total(ev, ["event_type"], total_over=[], count_name="n_events")
-    return out
 
 
 @register(
@@ -233,56 +97,6 @@ def last_order_asof_event(spark: SparkSession, sf_dir: str) -> DataFrame:
         value_cols=["last_orderkey", "last_orderdate"],
         right_tiebreak="last_orderkey",
     ).select("event_id", "user_id", "ts", "last_orderkey", "last_orderdate")
-
-
-@register(
-    "distribution_window_family",
-    # Retired-tier breadth: the distribution/value window functions the
-    # active rank_family doesn't cover (cume_dist, percent_rank,
-    # first/last/nth value over explicit frames).
-    retired=True,
-    oracle="""
-    SELECT o_orderkey, o_custkey,
-           round(cume_dist() OVER w, 6) AS cdist,
-           round(percent_rank() OVER w, 6) AS prank,
-           CAST(first_value(o_orderkey) OVER ws AS BIGINT) AS cheapest_key,
-           CAST(last_value(o_orderkey) OVER (
-               PARTITION BY o_custkey ORDER BY o_totalprice ASC, o_orderkey ASC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING
-           ) AS BIGINT) AS priciest_key,
-           CAST(nth_value(o_orderkey, 2) OVER (
-               PARTITION BY o_custkey ORDER BY o_totalprice ASC, o_orderkey ASC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING
-           ) AS BIGINT) AS second_cheapest_key
-    FROM orders
-    WINDOW w  AS (PARTITION BY o_custkey ORDER BY o_totalprice ASC),
-           ws AS (PARTITION BY o_custkey ORDER BY o_totalprice ASC, o_orderkey ASC)
-    """,
-)
-def distribution_window_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """cume_dist / percent_rank (rounded to 6 on both engines — their
-    quotients are the only float surface) plus first/last/nth value
-    over an explicit full-partition frame; last_value needs the
-    UNBOUNDED FOLLOWING frame on BOTH engines or it degenerates to the
-    current row under the default frame. Strict (price, key) ordering
-    makes every value column deterministic."""
-    orders = read_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(F.asc("o_totalprice"))
-    strict = Window.partitionBy("o_custkey").orderBy(
-        F.asc("o_totalprice"), F.asc("o_orderkey")
-    )
-    full = strict.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return orders.select(
-        "o_orderkey",
-        "o_custkey",
-        F.round(F.cume_dist().over(w), 6).alias("cdist"),
-        F.round(F.percent_rank().over(w), 6).alias("prank"),
-        F.first("o_orderkey").over(full).cast("bigint").alias("cheapest_key"),
-        F.last("o_orderkey").over(full).cast("bigint").alias("priciest_key"),
-        F.nth_value("o_orderkey", 2).over(full).cast("bigint").alias(
-            "second_cheapest_key"
-        ),
-    )
 
 
 @register(

@@ -2563,7 +2563,7 @@ def quantizer_stale(
       centroids sized for a smaller world (auto_n_centroids doubles
       every 4x), so 4.0 is the default trip point.
     - **distribution drift**: ``drift_df`` is the output of
-      :func:`centroid_drift` (the ``embedding_centroid_drift``
+      :func:`centroid_drift` (the per-label centroid-drift
       operator) over the corpus — any label whose snapshot-halves
       centroid cosine falls below ``min_cos`` (its ``drifted`` verdict)
       means the quantizer was trained on vectors that no longer look

@@ -1384,7 +1384,7 @@ def bm25_topk(
     and the ranking among them is rank-neutral by construction (the
     naive alternative, dropping hot terms from scoring, measurably
     reorders top-10s: a df/N = 0.5 term still carries idf = ln 2 —
-    see tools/bm25_skew_probe.py, which scans thresholds on a planted
+    see artifacts/BM25_SKEW_PROBE_r08.json, a threshold scan on a planted
     Zipfian corpus; the probe also quantifies the one semantic
     difference, documents sharing ONLY above-threshold terms with the
     query, which score far below any content-term match). Scoring

@@ -7,52 +7,17 @@ sorted column names, and cell values (rows sorted by all columns).
 
 from __future__ import annotations
 
-import math
+import json
+import os
 
-import duckdb
-import pandas as pd
 import pytest
 
 from sparkgraft import queries as Q
-from sparkgraft.io import TPCH_TABLES
+from tools.oracle_check import compare
 
-from conftest import SF_DIR
+from conftest import REPO_ROOT, SF_DIR
 
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    import os
-
-    for t in TPCH_TABLES:
-        path = os.path.join(SF_DIR, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
-    yield con
-    con.close()
-
-
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    out = df[sorted(df.columns)].copy()
-    for c in out.columns:
-        if str(out[c].dtype).startswith("datetime64"):
-            out[c] = out[c].astype("datetime64[us]")
-    return out.sort_values(by=list(out.columns), ignore_index=True)
-
-
-def _cells_equal(a, b) -> bool:
-    if a is None and b is None:
-        return True
-    try:
-        if pd.isna(a) and pd.isna(b):
-            return True
-        if pd.isna(a) != pd.isna(b):
-            return False
-    except (TypeError, ValueError):
-        pass
-    if isinstance(a, float) or isinstance(b, float):
-        return a == b or math.isclose(float(a), float(b), rel_tol=1e-12, abs_tol=1e-12)
-    return a == b
+REACH_REPORT = os.path.join(REPO_ROOT, "artifacts", "RETIRED_REACH.json")
 
 
 # The two queries that were BORN rows-only (engine-specific ANN
@@ -93,20 +58,17 @@ def test_retired_tier_is_fully_oracled():
 def test_retired_query_matches_oracle(spark, name, duck):
     sdf = Q.RETIRED_QUERIES[name](spark, SF_DIR).toPandas()
     odf = duck.sql(Q.RETIRED_ORACLES[name]).df()
+    problems = compare(name, sdf, odf)
+    assert not problems, f"{name}: {problems}"
 
-    assert sorted(sdf.columns) == sorted(odf.columns), name
-    assert len(sdf) == len(odf), name
-    s, o = _canon(sdf), _canon(odf)
-    for c in s.columns:
-        sc, oc = s[c], o[c]
-        try:
-            ok = bool(((sc.values == oc.values) | (sc.isna().values & oc.isna().values)).all())
-        except (TypeError, ValueError):
-            ok = False
-        if not ok:
-            bad = [
-                (i, sc.iloc[i], oc.iloc[i])
-                for i in range(len(s))
-                if not _cells_equal(sc.iloc[i], oc.iloc[i])
-            ]
-            assert not bad, f"{name}.{c}: first mismatches {bad[:3]}"
+
+def test_retired_tier_is_what_the_reach_report_keeps():
+    # tools/reach_report.py decides which retired queries stay: the
+    # registry holds exactly its `kept` entries and none it deleted
+    with open(REACH_REPORT) as f:
+        verdict = json.load(f)["retired"]
+    kept = {n for n, v in verdict.items() if v.startswith("kept: ")}
+    deleted = {n for n, v in verdict.items() if v.startswith("deleted: ")}
+    assert kept | deleted == set(verdict)
+    assert set(Q.RETIRED_QUERIES) == kept
+    assert not deleted & (set(Q.QUERIES) | set(Q.RETIRED_QUERIES))

@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import math
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from sparkgraft import text as T
@@ -114,6 +117,47 @@ def test_word_bigrams(spark):
     assert out[1] == ["a b", "b c"]
     assert out[2] == []
     assert out[3] == []
+
+
+def test_collocations_pmi_against_python(spark):
+    texts = [
+        "new york rocks",
+        "new york rocks",
+        "new york rocks",
+        "alpha beta and gamma delta",
+        "alpha beta and gamma delta",
+        "of the cat of the dog",
+        "the cat sat on the mat of the dog",
+        "rare pair",
+    ]
+    uni, bi = Counter(), Counter()
+    for t in texts:
+        w = t.split()
+        uni.update(w)
+        bi.update(f"{a} {b}" for a, b in zip(w, w[1:]))
+    n1, n2 = sum(uni.values()), sum(bi.values())
+
+    def pmi(bigram):
+        a, b = bigram.split()
+        return math.log((bi[bigram] / n2) / ((uni[a] / n1) * (uni[b] / n1)))
+
+    scored = sorted(
+        ((g, c, round(pmi(g), 6)) for g, c in bi.items() if c >= 2),
+        key=lambda r: (-r[2], r[0]),
+    )
+    want = scored[:5]
+    # the planted corpus exercises every clause: the two top-PMI pairs
+    # occur once (min_count cut), four pairs tie on pmi (bigram asc),
+    # and "york rocks" ties "new york" just past the k limit
+    assert pmi("rare pair") > want[0][2] and bi["rare pair"] == 1
+    assert [g for g, _, _ in want[:4]] == ["alpha beta", "and gamma", "beta and", "gamma delta"]
+    assert want[4][0] == "new york" and scored[5][0] == "york rocks"
+
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id int, text string")
+    got = [tuple(r) for r in T.collocations(df, "text", min_count=2, k=5).collect()]
+    assert [(g, c) for g, c, _ in got] == [(g, c) for g, c, _ in want]
+    for (_, _, p), (_, _, q) in zip(got, want):
+        assert math.isclose(p, q, abs_tol=1e-6)
 
 
 def test_doc_repetition_metrics(spark, tmp_path):

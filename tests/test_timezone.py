@@ -14,9 +14,9 @@ from __future__ import annotations
 import pytest
 
 from sparkgraft import queries as Q
+from tools.oracle_check import compare
 
 from conftest import SF_DIR
-from test_retired_oracles import _canon, duck  # noqa: F401  (fixture)
 
 # timestamp arithmetic, month bucketing, as-of joins, sessionization —
 # the shapes a wrong session TZ would corrupt
@@ -51,14 +51,10 @@ def ny_session(spark):
 
 
 @pytest.mark.parametrize("name", _TZ_SENSITIVE)
-def test_matches_oracle_under_non_utc_session(ny_session, name, duck):  # noqa: F811
+def test_matches_oracle_under_non_utc_session(ny_session, name, duck):
     queries = {**Q.QUERIES, **Q.RETIRED_QUERIES}
     oracles = {**Q.ORACLES, **Q.RETIRED_ORACLES}
     sdf = queries[name](ny_session, SF_DIR).toPandas()
     odf = duck.sql(oracles[name]).df()
-    assert sorted(sdf.columns) == sorted(odf.columns), name
-    assert len(sdf) == len(odf), name
-    s, o = _canon(sdf), _canon(odf)
-    for c in s.columns:
-        same = (s[c].values == o[c].values) | (s[c].isna().values & o[c].isna().values)
-        assert bool(same.all()), f"{name}.{c}: first diff at row {same.argmin()}"
+    problems = compare(name, sdf, odf)
+    assert not problems, f"{name}: {problems}"

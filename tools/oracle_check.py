@@ -11,6 +11,9 @@ Usage: python tools/oracle_check.py [--retired] [sf_dir] [query ...]
 ``--retired`` also checks the retired tier (queries dropped from the
 driver gate under the coverage budget — queries/__init__.py policy —
 but still oracle-paired).
+
+The unit tests compare with this module's ``compare`` and ``duckdb_con``
+(tests/conftest.py, test_retired_oracles.py, test_timezone.py).
 """
 
 from __future__ import annotations
