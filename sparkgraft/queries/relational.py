@@ -120,6 +120,41 @@ def user_funnel_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
+    "lineitem_rollup",
+    """
+    SELECT l_returnflag, l_linestatus,
+           count(*) AS n_items,
+           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+    FROM lineitem
+    GROUP BY ROLLUP (l_returnflag, l_linestatus)
+    """,
+    retired=True,
+)
+def lineitem_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = read_table(spark, sf_dir, "lineitem")
+    return li.rollup("l_returnflag", "l_linestatus").agg(
+        F.count(F.lit(1)).alias("n_items"),
+        F.sum(dec("l_quantity")).cast("double").alias("sum_qty"),
+    )
+
+
+@register(
+    "lineitem_cube",
+    """
+    SELECT l_returnflag, l_linestatus, count(*) AS n_items
+    FROM lineitem
+    GROUP BY CUBE (l_returnflag, l_linestatus)
+    """,
+    retired=True,
+)
+def lineitem_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = read_table(spark, sf_dir, "lineitem")
+    return li.cube("l_returnflag", "l_linestatus").agg(
+        F.count(F.lit(1)).alias("n_items")
+    )
+
+
+@register(
     "lineitem_grouping_sets",
     # RETIRED r8 (three-round-stable; slot funds the r8 promotions —
     # rotation policy; oracle intact, verified every pytest run)
@@ -134,8 +169,8 @@ def user_funnel_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lineitem_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS — the general form that subsumes
-    ROLLUP and CUBE (this set list IS
+    """Explicit GROUPING SETS — the general form that subsumes the
+    retired lineitem_rollup / lineitem_cube queries (this set list IS
     the cube of the two columns and a superset of the rollup). One
     pass, one shuffle: Spark expands the sets map-side (Expand node),
     so at 100 TB the cost is the scan plus one combinable aggregation,
@@ -148,6 +183,29 @@ def lineitem_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.count(F.lit(1)).alias("n_items"),
         F.sum(dec("l_quantity")).cast("double").alias("sum_qty"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# A4/A5: distinct and multi-distinct aggregation
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "distinct_users_per_type",
+    """
+    SELECT event_type,
+           count(DISTINCT user_id) AS exact_users,
+           count(*) AS n_events
+    FROM events GROUP BY event_type
+    """,
+    retired=True,
+)
+def distinct_users_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = read_table(spark, sf_dir, "events")
+    return ev.groupBy("event_type").agg(
+        F.countDistinct("user_id").alias("exact_users"),
+        F.count(F.lit(1)).alias("n_events"),
     )
 
 
