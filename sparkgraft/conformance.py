@@ -38,14 +38,6 @@ __all__ = [
     "verify_pipeline",
 ]
 
-_COUNT_COLS = (
-    "value_null_count",
-    "value_not_null_count",
-    "keys_not_null_count",
-    "total_records",
-    "key_null_count",
-)
-
 
 def melt_spec(
     spec_wide: DataFrame,
@@ -82,15 +74,21 @@ def verify_events(
     """Per ``(group.., event, prop)`` key-presence + value-completeness.
 
     ``spec_long`` columns: ``[*group_cols, event_col, prop_col]`` (use
-    ``melt_spec`` to produce it). ``catalog`` must carry ``event_col``,
-    ``group_cols`` and the JSON-string ``payload_cols``.
+    ``melt_spec`` to produce it), one row per DISTINCT pair — ``melt_spec``
+    guarantees this. A duplicated spec row fans each matching catalog
+    row out twice, so its pair comes back as one row with doubled
+    counts. ``catalog`` must carry ``event_col``, ``group_cols`` and the
+    JSON-string ``payload_cols``.
 
     Output schema (reference output, SURVEY §1.3 / FIXTURES.md §3):
     ``[*group_cols, event_name, prop_name, total_records,
     keys_not_null_count, key_null_count, key_null_count_percentage,
     value_not_null_count, value_null_count, value_null_count_percentage]``
-    with spec pairs never observed kept at 0 (reference's left join +
-    ``na.fill(0)``, event_verify.py:120-129, :222).
+    with spec pairs never observed kept at 0 (the reference's left join +
+    ``na.fill(0)``, event_verify.py:120-129, :222). Here the spec rows
+    enter the one aggregate as marker rows that count nowhere, so every
+    spec pair has a group — a NULL group key included — without a
+    second broadcast and join back.
 
     Null semantics are uniform: a value counts as present iff it is
     extractable AND non-empty-string (the reference is inconsistent
@@ -111,8 +109,9 @@ def verify_events(
     )
 
     # One broadcast fan-out: each catalog row appears once per expected
-    # prop of its event; per-(event,prop) count(*) therefore equals the
-    # event's total record count — the denominator lives in the plan.
+    # prop of its event; per-(event,prop) count_if(__obs) therefore
+    # equals the event's total record count — the denominator lives in
+    # the plan.
     joined = parsed.join(F.broadcast(spec_long), join_keys, "inner")
 
     prop = F.col(prop_col)
@@ -126,50 +125,48 @@ def verify_events(
     for term in present_terms[1:]:
         present = present | term
 
-    agg = joined.groupBy(*join_keys, prop_col).agg(
-        F.count(F.lit(1)).alias("total_records"),
-        F.count(F.when(present, F.lit(1))).alias("keys_not_null_count"),
-        F.count(value).alias("value_not_null_count"),
-    )
-
-    # Keep spec pairs with zero observed rows (tiny x tiny broadcast join).
-    full = spec_long.join(F.broadcast(agg), [*join_keys, prop_col], "left")
-
-    pct = lambda num: (F.col(num) * 100.0 / F.col("total_records"))  # noqa: E731
-    if round_pct is not None:
-        pct_expr = lambda num: F.round(pct(num), round_pct)  # noqa: E731
-    else:
-        pct_expr = pct
-
-    out = (
-        full.na.fill(0, subset=["total_records", "keys_not_null_count",
-                                "value_not_null_count"])
-        .withColumn("value_null_count",
-                    F.col("total_records") - F.col("value_not_null_count"))
-        .withColumn("key_null_count",
-                    F.col("total_records") - F.col("keys_not_null_count"))
-        .withColumn(
-            "value_null_count_percentage",
-            F.when(F.col("total_records") > 0, pct_expr("value_null_count"))
-            .otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "key_null_count_percentage",
-            F.when(F.col("total_records") > 0, pct_expr("key_null_count"))
-            .otherwise(F.lit(0.0)),
+    # Zero-fill inside the one aggregate: each spec row joins the input
+    # as a marker row whose three flags are false, so it opens its
+    # pair's group and counts nowhere. One partition: a spec
+    # LocalRelation would otherwise split into one task per row, up to
+    # the core count, in the aggregate's map stage.
+    keys = [*join_keys, prop_col]
+    observed = joined.select(*keys, F.lit(True), present, value.isNotNull())
+    markers = spec_long.select(
+        *keys, F.lit(False), F.lit(False), F.lit(False)
+    ).coalesce(1)
+    agg = (
+        observed.union(markers)
+        .toDF(*keys, "__obs", "__present", "__value")
+        .groupBy(*keys)
+        .agg(
+            F.count_if("__obs").alias("total_records"),
+            F.count_if("__present").alias("keys_not_null_count"),
+            F.count_if("__value").alias("value_not_null_count"),
         )
     )
-    return out.select(
+
+    total = F.col("total_records")
+    key_null = total - F.col("keys_not_null_count")
+    value_null = total - F.col("value_not_null_count")
+
+    def pct(num):
+        share = num * 100.0 / total
+        if round_pct is not None:
+            share = F.round(share, round_pct)
+        return F.when(total > 0, share).otherwise(F.lit(0.0))
+
+    return agg.select(
         *group_cols,
         F.col(event_col).alias("event_name"),
         F.col(prop_col).alias("prop_name"),
         "total_records",
         "keys_not_null_count",
-        "key_null_count",
-        "key_null_count_percentage",
+        key_null.alias("key_null_count"),
+        pct(key_null).alias("key_null_count_percentage"),
         "value_not_null_count",
-        "value_null_count",
-        "value_null_count_percentage",
+        value_null.alias("value_null_count"),
+        pct(value_null).alias("value_null_count_percentage"),
     )
 
 

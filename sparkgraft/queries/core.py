@@ -95,7 +95,7 @@ def conformance_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (context / traits / properties, event_verify.py:51-61). The events
 # table carries one JSON column, so context and traits are derived
 # in-plan by identical string construction on both engines; the point
-# is to drive verify_events' payload_cols loop (conformance.py:108-127)
+# is to drive verify_events' payload_cols loop (conformance.py:106-126)
 # three-wide: key presence is an OR across three parsed maps, value
 # completeness a coalesce across them in payload order.
 # ---------------------------------------------------------------------------

@@ -1,8 +1,10 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sparkgraft import conformance as C
+from sparkgraft.relational import tiny_frame
 
 
 def fixture_catalog(spark):
@@ -40,8 +42,26 @@ def test_verify_events_metrics(spark):
     assert got[("signup", "k")] == (3, 2, 1, 2)
     assert got[("signup", "s")] == (3, 3, 3, 0)
     assert got[("click", "k")] == (1, 1, 1, 0)
-    # spec'd but never observed -> kept at 0 (reference left join + fill)
-    assert got[("ghost", "k")] == (0, 0, 0, 0)
+    # spec'd but never observed -> kept at 0 (reference left join + fill):
+    # bigint 0 counts and 0.0 percentages, never NULL
+    types = dict(out.dtypes)
+    for c in ("total_records", "keys_not_null_count", "key_null_count",
+              "value_not_null_count", "value_null_count"):
+        assert types[c] == "bigint", c
+    for c in ("key_null_count_percentage", "value_null_count_percentage"):
+        assert types[c] == "double", c
+    [ghost] = out.where(F.col("event_name") == "ghost").collect()
+    assert ghost.asDict() == {
+        "event_name": "ghost",
+        "prop_name": "k",
+        "total_records": 0,
+        "keys_not_null_count": 0,
+        "key_null_count": 0,
+        "key_null_count_percentage": 0.0,
+        "value_not_null_count": 0,
+        "value_null_count": 0,
+        "value_null_count_percentage": 0.0,
+    }
 
 
 def test_verify_events_invariants(spark):
@@ -60,7 +80,7 @@ def test_verify_events_invariants(spark):
 def test_verify_events_malformed_payloads(spark):
     """Non-object / invalid JSON payloads must count as absent, never
     crash or miscount — from_json(map) and key membership both yield
-    NULL for them, which count(when(...)) treats as 0."""
+    NULL for them, which count_if treats as false."""
     catalog = spark.createDataFrame(
         [
             ("e", '{"k": "1"}'),  # valid
@@ -77,6 +97,48 @@ def test_verify_events_malformed_payloads(spark):
     assert r.keys_not_null_count == 1
     assert r.value_not_null_count == 1
     assert r.value_null_count == 4
+
+
+@pytest.mark.parametrize(
+    "spec_rows,expected",
+    [
+        # a (group, event) the spec names but the catalog never carries
+        # is kept at zero, beside the observed group
+        (
+            [("web", "signup", "k"), ("ios", "signup", "k")],
+            [("ios", "signup", "k", 0, 0, 0), ("web", "signup", "k", 2, 2, 1)],
+        ),
+        # a NULL group key joins no catalog row (NULL never equals NULL)
+        # and still yields exactly one zero row
+        (
+            [("web", "signup", "k"), (None, "signup", "k")],
+            [(None, "signup", "k", 0, 0, 0), ("web", "signup", "k", 2, 2, 1)],
+        ),
+        # spec_long must hold distinct pairs (melt_spec guarantees it): a
+        # duplicated spec row fans each catalog row out twice, and its
+        # pair comes back as ONE row with doubled counts
+        ([("web", "signup", "k")] * 2, [("web", "signup", "k", 4, 4, 2)]),
+    ],
+    ids=["group_without_catalog_rows", "null_group_key", "duplicate_spec_rows"],
+)
+def test_verify_events_grouped_zero_fill(spark, spec_rows, expected):
+    catalog = tiny_frame(
+        spark,
+        [("web", "signup", '{"k": "1"}'), ("web", "signup", '{"k": ""}')],
+        "channel string, event_name string, props string",
+    )
+    spec = tiny_frame(
+        spark, spec_rows, "channel string, event_name string, prop_name string"
+    )
+    out = C.verify_events(
+        catalog, spec, payload_cols=["props"], group_cols=["channel"]
+    )
+    got = [
+        (r.channel, r.event_name, r.prop_name,
+         r.total_records, r.keys_not_null_count, r.value_not_null_count)
+        for r in out.collect()
+    ]
+    assert sorted(got, key=lambda r: r[0] or "") == expected
 
 
 def test_melt_spec(spark):

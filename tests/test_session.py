@@ -160,3 +160,41 @@ def test_workers_import_sparkgraft_from_any_cwd(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "RULES [('a.com', '*', '/x')]" in proc.stdout
+
+
+def test_default_tungsten_page_is_2_mib(spark):
+    """Kilobyte state takes a 2 MiB page, not Spark's default of
+    nextPow2(execution memory / cores / 16) (16-64 MB)."""
+    mm = spark._jvm.org.apache.spark.SparkEnv.get().memoryManager()
+    assert mm.pageSizeBytes() == 2 * 2**20
+
+
+def test_extra_conf_page_size_wins(tmp_path):
+    """``extra_conf`` overrides the page size like every other default."""
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO_ROOT!r})
+        from sparkgraft.session import get_spark
+
+        spark = get_spark(
+            "page-probe",
+            master="local[1]",
+            extra_conf={{"spark.buffer.pageSize": "1m"}},
+        )
+        mm = spark._jvm.org.apache.spark.SparkEnv.get().memoryManager()
+        print("PAGE", mm.pageSizeBytes())
+        spark.stop()
+        """
+    )
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert f"PAGE {2**20}" in proc.stdout

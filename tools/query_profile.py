@@ -8,6 +8,11 @@ This is the stage-level view the Spark UI would give (the UI is
 disabled in this environment), so optimization targets are named by
 STAGE, not guessed from the plan.
 
+Each measured pass also prints the driver JVM's CPU by thread class
+(C2 and C1 JIT compilers, task threads, py4j/driver threads, GC,
+other), read from ``/proc/<jvm>/task/*/{comm,stat}``, so it launches
+no Spark action.
+
 Usage: python tools/query_profile.py <query> [query ...] [--sf DIR]
        [--passes N] [--warm K]
 """
@@ -19,6 +24,55 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+_TICK = os.sysconf("SC_CLK_TCK")
+# JVM thread classes by thread-name prefix (``comm`` keeps 15 chars);
+# unmatched threads are "other"
+THREAD_CLASSES = (
+    ("C2", ("C2 Compiler",)),
+    ("C1", ("C1 Compiler",)),
+    ("task", ("Executor task",)),
+    # py4j connections are "Thread-N"; "java" is the JVM's main thread
+    ("py4j/driver", ("Thread-", "java", "dag-scheduler", "broadcast-exch",
+                     "shuffle-exchang", "ResultQueryStag", "QueryStageCreat",
+                     "task-result-get", "spark-listener")),
+    ("GC", ("GC Thread", "G1 ", "VM Thread")),
+)
+
+
+def _cpu_ticks(stat_path: str) -> int:
+    with open(stat_path) as fh:
+        rest = fh.read().rsplit(")", 1)[1].split()
+    return int(rest[11]) + int(rest[12])  # utime + stime
+
+
+def thread_cpu(pid: int) -> tuple[int, dict[int, tuple[str, int]]]:
+    """The JVM's total CPU ticks and ``{tid: (class, CPU ticks)}``."""
+    threads = {}
+    for tid in os.listdir(f"/proc/{pid}/task"):
+        try:
+            with open(f"/proc/{pid}/task/{tid}/comm") as fh:
+                comm = fh.read().rstrip("\n")
+            ticks = _cpu_ticks(f"/proc/{pid}/task/{tid}/stat")
+        except OSError:  # the thread ended between listing and reading
+            continue
+        cls = next(
+            (c for c, prefixes in THREAD_CLASSES if comm.startswith(prefixes)),
+            "other",
+        )
+        threads[int(tid)] = (cls, ticks)
+    return _cpu_ticks(f"/proc/{pid}/stat"), threads
+
+
+def thread_cpu_line(before, after) -> str:
+    """CPU seconds per thread class between two ``thread_cpu`` readings.
+    Threads that ended in between are counted only in the total."""
+    (total0, threads0), (total1, threads1) = before, after
+    cpu = dict.fromkeys([c for c, _ in THREAD_CLASSES] + ["other"], 0)
+    for tid, (cls, ticks) in threads1.items():
+        cpu[cls] += ticks - threads0.get(tid, (cls, 0))[1]
+    parts = " ".join(f"{c}={t / _TICK:.2f}s" for c, t in cpu.items())
+    return f"  jvm threads: {parts} (total {(total1 - total0) / _TICK:.2f}s)"
 
 
 def stage_reader(spark):
@@ -91,6 +145,7 @@ def main() -> int:
 
     spark = get_spark("query-profile")
     read = stage_reader(spark)
+    jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
     # session warm-up: JVM + parquet footers
     spark.range(1000).selectExpr("sum(id)").collect()
     all_q = dict(Q.QUERIES)
@@ -106,10 +161,12 @@ def main() -> int:
             read()  # discard warm stages
         for p in range(passes):
             spark.catalog.clearCache()
+            cpu0 = thread_cpu(jvm_pid)
             t0 = time.time()
             fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
             wall = time.time() - t0
             stages = read()
+            cpu1 = thread_cpu(jvm_pid)
             print(f"\n[{name}] pass {p}: wall {wall:.3f}s, "
                   f"{len(stages)} stages")
             tot_run = sum(s["run_ms"] for s in stages)
@@ -123,6 +180,7 @@ def main() -> int:
                 )
             print(f"  total executor-run {tot_run}ms across stages "
                   f"(wall includes driver/planning gaps)")
+            print(thread_cpu_line(cpu0, cpu1))
         spark.sparkContext.setJobDescription(None)
     spark.stop()
     return 0
