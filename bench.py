@@ -77,52 +77,23 @@ BENCH_EXCLUDED_ACTIVE = {
 
 
 def _stage_metrics_reader(spark):
-    """Per-query executor-metric deltas from the JVM AppStatusStore.
+    """Per-query executor-metric deltas: a closure that, on each call,
+    sums shuffle read/write and spill bytes over the stages run since
+    the previous call (``obs.stage_reader``)."""
+    from sparkgraft.obs import stage_reader
 
-    Returns a closure that, on each call, sums shuffle read/write and
-    spill bytes over every stage whose stageId is above the previous
-    call's watermark — i.e. the stages the just-finished query ran.
-    Stage IDs are monotonic, so UI stage eviction (which only drops the
-    oldest entries) cannot corrupt the deltas the way a cumulative-sum
-    snapshot would. The listener bus is drained first so task-end
-    metric updates are not attributed to the next query.
-    """
-    sc = spark.sparkContext
-    gw = sc._gateway
-    jsc = sc._jsc.sc()
-    store = jsc.statusStore()
-    watermark = -1
+    read_stages = stage_reader(spark)
 
     def read() -> dict[str, int]:
-        nonlocal watermark
         try:
-            jsc.listenerBus().waitUntilEmpty()
-            seq = store.stageList(
-                gw.jvm.java.util.ArrayList(),  # all statuses
-                False,  # no task details
-                False,  # no summaries
-                gw.new_array(gw.jvm.double, 0),
-                gw.jvm.java.util.ArrayList(),
-            )
-            totals = {"shuffle_read": 0, "shuffle_write": 0,
-                      "spill_mem": 0, "spill_disk": 0}
-            top = watermark
-            it = seq.iterator()
-            while it.hasNext():
-                s = it.next()
-                sid = s.stageId()
-                if sid <= watermark:
-                    continue
-                top = max(top, sid)
-                totals["shuffle_read"] += s.shuffleReadBytes()
-                totals["shuffle_write"] += s.shuffleWriteBytes()
-                totals["spill_mem"] += s.memoryBytesSpilled()
-                totals["spill_disk"] += s.diskBytesSpilled()
-            watermark = top
-            return totals
+            stages = read_stages()
         except Exception:
             # metrics are diagnostics, never a bench failure
             return {}
+        return {
+            k: sum(s[k] for s in stages)
+            for k in ("shuffle_read", "shuffle_write", "spill_mem", "spill_disk")
+        }
 
     return read
 

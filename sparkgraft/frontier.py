@@ -24,13 +24,13 @@ per-URL lastmod fold over duplicate announcements) plus one key join
 against the snapshot — the minimum any staleness check must pay; the
 verdict is row-local. ``fetch_schedule`` pays one broadcast join (the
 delay table is per-host-per-agent, tiny by construction) plus ONE
-window over the host key. The window needs the exact per-host rank, so
-it cannot use the salted two-stage trick ``web.domain_cap_sample``
-uses — run the frontier through the domain cap FIRST so per-host row
-counts are bounded by policy. (A mega-host frontier is a policy bug
-before it is a skew bug: 1e8 sequential fetches at even 1s/fetch is
-three years of wall-clock — no correct scheduler output is useful for
-that input.)
+window over the host key. The window needs every row's per-host rank,
+not a top-k, so Spark cannot pre-limit it before the shuffle the way
+it does ``web.domain_cap_sample``'s window — run the frontier through
+the domain cap FIRST so per-host row counts are bounded by policy. (A
+mega-host frontier is a policy bug before it is a skew bug: 1e8
+sequential fetches at even 1s/fetch is three years of wall-clock — no
+correct scheduler output is useful for that input.)
 
 Extension surface beyond the reference (event_verify.py has no crawl
 tier); protocol semantics follow sitemaps.org (lastmod = W3C

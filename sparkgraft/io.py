@@ -47,12 +47,10 @@ def _footer_schema(path: str) -> tuple[list[str], StructType | None]:
     when Arrow cannot map a type, and the result is ``([], None)`` when
     the footer is unreadable (a directory, a remote path): Spark then
     infers."""
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
-    except ImportError:  # pragma: no cover
-        return [], None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
     try:
         schema = pq.read_schema(path)
     except Exception:  # directory / remote path: caller handles explicitly
@@ -320,39 +318,31 @@ def write_training_shards(
     contents, which the tests assert."""
     import json
 
+    import pyarrow.parquet as pq
+
     from .packing import deterministic_shuffle
 
     shuffled = deterministic_shuffle(
         df, id_col, seed, num_partitions=num_shards, order_col=order_col
     )
     shuffled.write.mode("overwrite").parquet(path)
-    try:
-        import pyarrow.parquet as pq
-
-        entries = []
-        for name in sorted(os.listdir(path)):
-            if not name.endswith(".parquet"):
-                continue
-            full = os.path.join(path, name)
-            meta = pq.ParquetFile(full).metadata
-            entries.append(
-                {
-                    "file": name,
-                    "n_rows": meta.num_rows,
-                    "n_bytes": os.path.getsize(full),
-                }
-            )
-    except ImportError:  # pragma: no cover
-        entries = [
-            {"file": n, "n_rows": None, "n_bytes": os.path.getsize(os.path.join(path, n))}
-            for n in sorted(os.listdir(path))
-            if n.endswith(".parquet")
-        ]
+    entries = []
+    for name in sorted(os.listdir(path)):
+        if not name.endswith(".parquet"):
+            continue
+        full = os.path.join(path, name)
+        entries.append(
+            {
+                "file": name,
+                "n_rows": pq.ParquetFile(full).metadata.num_rows,
+                "n_bytes": os.path.getsize(full),
+            }
+        )
     manifest = {
         "seed": seed,
         "num_shards": num_shards,
         "order_col": order_col,
-        "total_rows": sum(e["n_rows"] or 0 for e in entries),
+        "total_rows": sum(e["n_rows"] for e in entries),
         "shards": entries,
     }
     with open(os.path.join(path, "_MANIFEST.json"), "w") as fh:

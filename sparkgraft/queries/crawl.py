@@ -12,8 +12,8 @@ document becomes one real gzip-member WARC file whose record URL,
 robots verdict, gate verdict, dedup partner, domain, and quality all
 derive from doc_id arithmetic — the DuckDB oracle states the surviving
 corpus rows directly, knowing nothing about WARC framing, HTTP wire
-codings, HTML, robots parsing, URL canonicalization, or the salted cap
-implementation.
+codings, HTML, robots parsing, URL canonicalization, or the cap's
+window.
 
 Plant geometry:
 - page id ``pid = doc_id // 2``: docs ``2k``/``2k+1`` are the SAME
@@ -39,9 +39,9 @@ Plant geometry:
 Scale shape: three Arrow passes (build — fixture only, crack,
 extract), a broadcast rules join, row-local gate/canonical
 expressions, then the only shuffles in the whole plan: the dedup
-groupBy and the cap's two bounded-rank windows (the salted two-stage
-shape that caps mega-domain skew). Zero URL-side shuffles otherwise;
-no collect anywhere.
+groupBy and the cap's one rank window (its Partial
+``WindowGroupLimit`` bounds what a mega-domain sends to one reducer).
+Zero URL-side shuffles otherwise; no collect anywhere.
 """
 
 from __future__ import annotations
@@ -287,7 +287,7 @@ def crawl_to_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min_by("text", "doc_id").alias("text"),
         )
     )
-    # per-domain diversity cap (salted two-stage rank inside)
+    # per-domain diversity cap (one rank window)
     capped = W.domain_cap_sample(
         deduped,
         host_col=W.parse_url("canonical_url")["host"],

@@ -366,9 +366,8 @@ def web_registrable_domain_groups(
     # NEW r12 retired tier: the host-diversity cap — keep at most 3
     # docs per REGISTRABLE domain over the mixed ccTLD/wildcard/
     # exception plant (the curation rule the PSL tier exists for). The
-    # Spark side runs the skew-safe salted two-level ranking; the
-    # oracle proves it EQUALS the plain one-window answer (row_number
-    # over md5(id) per domain, PSL algorithm recomputed inline).
+    # oracle recomputes the same one-window answer (row_number over
+    # md5(id) per domain, PSL algorithm recomputed inline).
     retired=True,
     oracle=f"""
     WITH hosts AS (
@@ -430,13 +429,11 @@ def web_registrable_domain_groups(
 )
 def web_domain_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``web.domain_cap_sample`` at cap=3 over the mixed-TLD plant:
-    the per-registrable-domain diversity cap, computed as the
-    skew-safe salted two-level ranking (each salted bucket pre-keeps
-    its local top-3, the final rank sees at most ``salt_buckets * 3``
-    rows per domain however large the domain) — and proved EXACTLY
-    equal to the naive one-window answer by the oracle. The kept set
-    is the 3 smallest md5(doc_id) per domain, deterministic across
-    engines and reruns."""
+    the per-registrable-domain diversity cap, one ``row_number``
+    window per domain whose Partial ``WindowGroupLimit`` sends at most
+    3 rows per domain from each map task. The kept set is the 3
+    smallest md5(doc_id) per domain, deterministic across engines and
+    reruns."""
     did = F.col("doc_id")
     host = (
         F.when(did % 11 == 0, F.lit("www.ck"))

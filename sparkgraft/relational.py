@@ -218,9 +218,14 @@ def top_k_per_group(
     full determinism (e.g. the primary key) — ``row_number`` over a
     non-unique ordering picks an arbitrary row among ties.
 
-    Scale note: one shuffle on ``partition_by``; skewed groups are
-    handled by AQE. For k==1 with a single max column where ties must
-    all survive, use ``latest_per_group`` (a max window, no sort).
+    Scale note: one shuffle on ``partition_by``. AQE does not split a
+    skewed window partition; for ``k`` <= 1000
+    (``spark.sql.optimizer.windowGroupLimitThreshold``) Spark's
+    ``WindowGroupLimit`` pre-limits each map task to its local top-k
+    per group before the shuffle, so a hot group's reducer receives
+    at most ``map tasks * k`` rows. For k==1 with a single max column
+    where ties must all survive, use ``latest_per_group`` (a max
+    window, no sort).
     """
     w = Window.partitionBy(*partition_by).orderBy(*order_by)
     out = df.withColumn(rank_col, F.row_number().over(w)).filter(

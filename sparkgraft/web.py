@@ -22,6 +22,8 @@ import re as _re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .relational import top_k_per_group
+
 # Hosts/path-segments a curation run drops outright. Deliberately tiny
 # and embedded (broadcast as literals into the plan); a production run
 # swaps in a broadcast-joined blocklist table — the gate's shape is the
@@ -541,7 +543,6 @@ def domain_cap_sample(
     id_col: str = "doc_id",
     rules: tuple[str, ...] = PSL_SNAPSHOT,
     out_col: str = "registrable_domain",
-    salt_buckets: int = 16,
 ):
     """Host-diversity cap — keep at most ``cap`` documents per
     REGISTRABLE DOMAIN (the RefinedWeb/C4-style rule the PSL tier
@@ -551,38 +552,21 @@ def domain_cap_sample(
     smallest ``md5(id)`` values per domain, tie-broken by id — both
     engines and every rerun agree.
 
-    Scale shape (the 100 TB point): a naive single window partitioned
-    by domain puts EVERY row of a mega-domain (wikipedia.org at ~1e8
-    pages) on one reducer — the classic window skew AQE cannot split.
-    This runs the EXACT same selection as two bounded rankings:
-
-    1. pre-rank within ``(domain, salt)`` where salt = pmod(hash(id),
-       ``salt_buckets``): each salted partition holds ~1/S of the
-       domain, keep its local top-``cap`` by the same order;
-    2. final rank over the survivors — at most ``S * cap`` rows per
-       domain reach the skewed key, regardless of domain size.
-
-    Top-``cap``-of-union-of-bucket-top-``cap``s equals the global
-    top-``cap`` (every globally-kept row is kept in its own bucket),
-    so the result is EXACTLY the one-window answer — an oracle
-    recomputes it with one plain ``row_number``. NULL registrable
-    domains (bare public suffixes, unparseable hosts) form their own
-    capped group; drop them upstream with ``url_filter`` if they
-    should not spend budget. Returns the input rows + ``out_col``,
-    capped."""
-    from pyspark.sql import Window
-
+    One ``row_number`` window per domain
+    (:func:`relational.top_k_per_group`). A mega-domain (wikipedia.org
+    at ~1e8 pages) does not land whole on one reducer: Spark's
+    ``InferWindowGroupLimit`` puts a Partial ``WindowGroupLimit``
+    below the domain shuffle, so each map task sends at most ``cap``
+    rows per domain and the reducer sees at most ``map tasks * cap``.
+    That bound holds while ``cap`` <=
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000)
+    and the rank is the window's only function; above it the whole
+    domain is shuffled to one task. NULL registrable domains (bare
+    public suffixes, unparseable hosts) form their own capped group;
+    drop them upstream with ``url_filter`` if they should not spend
+    budget. Returns the input rows + ``out_col``, capped."""
     rd = registrable_domain(host_col, rules=rules)
-    order_key = F.md5(F.col(id_col).cast("string"))
-    salted = Window.partitionBy(
-        out_col, F.pmod(F.hash(F.col(id_col)), F.lit(salt_buckets))
-    ).orderBy(order_key, F.col(id_col))
-    final = Window.partitionBy(out_col).orderBy(order_key, F.col(id_col))
-    return (
-        df.withColumn(out_col, rd)
-        .withColumn("__bucket_rank", F.row_number().over(salted))
-        .where(F.col("__bucket_rank") <= cap)
-        .withColumn("__rank", F.row_number().over(final))
-        .where(F.col("__rank") <= cap)
-        .drop("__bucket_rank", "__rank")
+    order = [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
+    return top_k_per_group(
+        df.withColumn(out_col, rd), [out_col], order, k=cap, rank_col="__rank"
     )

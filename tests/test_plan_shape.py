@@ -223,7 +223,7 @@ PLAN_PINS: dict[str, tuple[int, int]] = {
     # NEW r13 flagship: the full crawl chain in one plan — spread +
     # the rules-side effective-group aggregate and its broadcast, then
     # the ONLY corpus-side shuffles: the canonical-dedup groupBy and the
-    # cap's bounded-rank windows; the one BHJ is the broadcast
+    # cap's one rank window; the one BHJ is the broadcast
     # rules-onto-URLs gate join (the rules-side has-exact join is gone,
     # was (8, 2)). r14 (guide §4, VERDICT r13
     # #4): build/crack/extract are FUSED into ONE Arrow MapInPandas
@@ -231,8 +231,11 @@ PLAN_PINS: dict[str, tuple[int, int]] = {
     # the WARC payload and HTML string no longer round-trip through
     # Arrow twice each, and only doc_id/url/text cross back) — the
     # remaining MapInPandas print is the tiny rules-side parse.
-    # Never BatchEvalPython.
-    "crawl_to_corpus": (5, 1),
+    # Never BatchEvalPython. The cap is one rank window, not a salted
+    # pre-rank plus a final rank: Spark's Partial WindowGroupLimit
+    # already keeps at most cap rows per domain per map task, so the
+    # salted shuffle bounded nothing more (5, 1) -> (4, 1).
+    "crawl_to_corpus": (4, 1),
 }
 
 # Exact tiers that legitimately broadcast a bounded side against every
@@ -566,10 +569,11 @@ R6_OP_PINS = [
     # the group aggregate + countDistinct's second phase; the whole
     # PSL match is row-local array expressions over plan literals
     ("web_registrable_domain_groups", 3, False),
-    # NEW r12 retired tier: host-diversity cap — spread + the salted
-    # pre-rank window + the final (bounded-per-domain) rank window;
+    # NEW r12 retired tier: host-diversity cap — spread + the one rank
+    # window, whose Partial WindowGroupLimit bounds each domain's
+    # shuffle (the salted pre-rank window is gone: 3 -> 2);
     # registrable_domain itself is row-local
-    ("web_domain_cap_sample", 3, False),
+    ("web_domain_cap_sample", 2, False),
     # NEW r12 retired tier: WARC build+crack round trip — spread only;
     # the build and crack stages are two Arrow MapInPandas passes
     # (never BatchEvalPython), no shuffle after the spread

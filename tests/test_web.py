@@ -201,11 +201,12 @@ def test_registrable_domain_psl(spark):
 
 
 def test_domain_cap_sample_exact_and_skew_safe(spark):
-    """domain_cap_sample's salted two-level ranking must EQUAL the
-    naive one-window top-cap (cap smallest md5(id) per registrable
-    domain) on a fixture with one mega-domain (the skew case the
-    salting exists for), cap NULL-domain rows as their own group, and
-    be deterministic across salt_buckets settings."""
+    """domain_cap_sample must EQUAL the naive one-window top-cap (cap
+    smallest md5(id) per registrable domain) on a fixture with one
+    mega-domain, cap NULL-domain rows as their own group, and bound the
+    mega-domain's shuffle with Spark's map-side WindowGroupLimit."""
+    import re
+
     from pyspark.sql import Window, functions as F
 
     rows = (
@@ -237,13 +238,22 @@ def test_domain_cap_sample_exact_and_skew_safe(spark):
     key = lambda r: (r.registrable_domain or "", r.doc_id)  # noqa: E731
     got_rows = sorted(map(key, got.collect()))
     assert got_rows == sorted(map(key, naive.collect()))
-    # every bucket variant of the salted ranking agrees (exactness is
-    # independent of the salt fan-out)
-    for s in (1, 4, 64):
-        alt = W.domain_cap_sample(
-            df, "host", cap=3, id_col="doc_id", salt_buckets=s
-        )
-        assert sorted(map(key, alt.collect())) == got_rows, s
+    # skew bound: ONE shuffle on the domain, with a Partial
+    # WindowGroupLimit below it, so each map task sends at most cap
+    # rows per domain to the reducer
+    plan = (
+        W.domain_cap_sample(df, "host", cap=3, id_col="doc_id")
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    domain_shuffle = r"Exchange hashpartitioning\(registrable_domain"
+    partial_limit = r"WindowGroupLimit .*, 3, Partial"
+    assert len(re.findall(domain_shuffle, plan)) == 1, plan
+    assert len(re.findall(partial_limit, plan)) == 1, plan
+    # a child prints after its parent: the limit runs before the shuffle
+    below = plan[re.search(domain_shuffle, plan).end():]
+    assert re.search(partial_limit, below), plan
     # the mega-domain contributed exactly cap rows; the 5 one-page
     # sites all survive; the NULL group is capped like any other
     by_rd = {}

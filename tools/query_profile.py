@@ -75,51 +75,6 @@ def thread_cpu_line(before, after) -> str:
     return f"  jvm threads: {parts} (total {(total1 - total0) / _TICK:.2f}s)"
 
 
-def stage_reader(spark):
-    sc = spark.sparkContext
-    gw = sc._gateway
-    jsc = sc._jsc.sc()
-    store = jsc.statusStore()
-    watermark = -1
-
-    def read() -> list[dict]:
-        nonlocal watermark
-        jsc.listenerBus().waitUntilEmpty()
-        seq = store.stageList(
-            gw.jvm.java.util.ArrayList(),
-            False,
-            False,
-            gw.new_array(gw.jvm.double, 0),
-            gw.jvm.java.util.ArrayList(),
-        )
-        out = []
-        top = watermark
-        it = seq.iterator()
-        while it.hasNext():
-            s = it.next()
-            sid = s.stageId()
-            if sid <= watermark:
-                continue
-            top = max(top, sid)
-            out.append(
-                {
-                    "id": sid,
-                    "name": str(s.name())[:90],
-                    "tasks": s.numCompleteTasks(),
-                    "run_ms": s.executorRunTime(),
-                    "cpu_ms": s.executorCpuTime() // 1_000_000,
-                    "sh_read": s.shuffleReadBytes(),
-                    "sh_write": s.shuffleWriteBytes(),
-                    "spill": s.memoryBytesSpilled() + s.diskBytesSpilled(),
-                    "in_bytes": s.inputBytes(),
-                }
-            )
-        watermark = top
-        return sorted(out, key=lambda d: d["id"])
-
-    return read
-
-
 def main() -> int:
     args = [a for a in sys.argv[1:]]
     sf_dir = "/root/testdata/sf0.1"
@@ -141,6 +96,7 @@ def main() -> int:
             i += 1
 
     from sparkgraft import queries as Q
+    from sparkgraft.obs import stage_reader
     from sparkgraft.session import get_spark
 
     spark = get_spark("query-profile")
@@ -174,9 +130,10 @@ def main() -> int:
                 print(
                     f"  stage {s['id']:4d} tasks={s['tasks']:3d} "
                     f"run={s['run_ms']:6d}ms cpu={s['cpu_ms']:6d}ms "
-                    f"shR={s['sh_read']:>9d} shW={s['sh_write']:>9d} "
-                    f"in={s['in_bytes']:>9d} spill={s['spill']} "
-                    f" {s['name']}"
+                    f"shR={s['shuffle_read']:>9d} shW={s['shuffle_write']:>9d} "
+                    f"in={s['in_bytes']:>9d} "
+                    f"spill={s['spill_mem'] + s['spill_disk']} "
+                    f" {s['name'][:90]}"
                 )
             print(f"  total executor-run {tot_run}ms across stages "
                   f"(wall includes driver/planning gaps)")

@@ -14,15 +14,13 @@ A retired query is cleared for deletion when both hold:
     ``sparkgraft/queries/`` is also reached by an active query, or by a
     unit test that runs no retired query's body;
 (b) no code token in ``tests/`` (but ``test_retired_oracles.py``),
-    ``tools/`` (but this tool), ``bench.py`` or ``__spark_entry__.py``
-    names it: a string literal, a ``from sparkgraft.queries... import
-    name``, or an attribute of a ``sparkgraft.queries`` module such as
-    ``Q.name``.
+    ``tools/``, ``bench.py`` or ``__spark_entry__.py`` names it: a
+    string literal, a ``from sparkgraft.queries... import name``, or an
+    attribute of a ``sparkgraft.queries`` module such as ``Q.name``.
 
 Writes ``artifacts/RETIRED_REACH.json``: one entry per retired query,
 ``deleted: ...``, ``kept: named by <files>`` and/or ``kept: unique lines
-[file:line, ...]``, or ``kept: deferred`` for a cleared query in
-``DEFERRED``. Entries of queries already deleted are carried over
+[file:line, ...]``. Entries of queries already deleted are carried over
 from the previous report; ``tests/test_retired_oracles.py`` checks that
 the registry keeps exactly the ``kept`` entries.
 
@@ -57,12 +55,8 @@ DAEMON_MODULE = "tools.reach_report"
 MARKER_ENV = "SPARK_GRAFT_REACH_MARKER"
 DUMP_ENV = "SPARK_GRAFT_REACH_DUMPS"
 NAMING_FILES = ("tests/**/*.py", "tools/**/*.py", "bench.py", "__spark_entry__.py")
-# the oracle test is parametrized over the registry, and this tool names
-# only the queries it defers
-NOT_NAMING = {"tests/test_retired_oracles.py", "tools/reach_report.py"}
-# cleared by rules (a) and (b), but kept as ``kept: deferred`` until the
-# next pruning pass: one pass deletes at most 72 queries
-DEFERRED = frozenset({"distinct_users_per_type", "lineitem_cube", "lineitem_rollup"})
+# the oracle test is parametrized over the registry
+NOT_NAMING = {"tests/test_retired_oracles.py"}
 # the per-query oracle cases run retired queries, and the registry check
 # reads this tool's report
 DESELECT = [
@@ -302,11 +296,6 @@ def judge(raw: dict, named: dict[str, set[str]], previous: dict[str, str]) -> di
             reasons.append("named by " + ", ".join(sorted(named[name])))
         if unique:
             reasons.append(f"unique lines [{', '.join(unique)}]")
-        if not reasons and name in DEFERRED:
-            reasons.append(
-                f"deferred; its {len(mine)} library lines are all reached by "
-                "active queries or unit tests"
-            )
         verdict[name] = (
             "kept: " + "; ".join(reasons)
             if reasons
