@@ -11,8 +11,8 @@ lazy Catalyst plan:
   rank window + .first() per channel (:36-41) in-plan max window (ties kept)
   driver loop over spec rows, createDataFrame ``melt`` of the wide spec
     (:107-119)
-  regex key presence (:69-76)                 exact ``json_object_keys``
-                                                membership
+  regex key presence (:69-76)                 exact ``map_keys`` membership
+                                                in the one ``from_json`` map
   per-event filter + stack + collect_list +   one broadcast spec join +
     repeated count() actions (:134-208)         one groupBy
   union folds (:212-214, :227-229)            nothing to fold — one plan
@@ -26,10 +26,12 @@ map-side-combinable aggregation; there are no O(channels x events) jobs.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .json_ops import payload_map
 from .relational import latest_per_group, melt
 
 __all__ = [
@@ -60,6 +62,35 @@ def melt_spec(
         .select(*id_cols, "prop_name")
         .distinct()
     )
+
+
+def _parse_payloads(
+    df: DataFrame, payload_cols: Sequence[str], prop_col: str
+) -> tuple[DataFrame, Column, Column]:
+    """The paper's two per-property flags from ONE parse per payload.
+
+    Returns ``df`` with each payload parsed once to a
+    ``map<string,string>`` column (a staged projection), plus two flags
+    over those maps for the per-row property ``prop_col``, which the
+    spec join brings in: ``present`` (the key is in ANY payload's
+    ``map_keys``) and ``value`` (the first non-empty-string value).
+    Both flags read the same maps; ``json_object_keys`` plus a second
+    ``from_json`` would parse every payload twice per fanned row.
+    ``verify_events`` and ``streaming.windowed_conformance`` share this,
+    so batch and stream count the same thing."""
+    aliases = [f"__m{i}" for i in range(len(payload_cols))]
+    parsed = df.select(
+        "*", *[payload_map(c).alias(a) for c, a in zip(payload_cols, aliases)]
+    )
+    prop = F.col(prop_col)
+    value = F.coalesce(
+        *[F.nullif(F.try_element_at(F.col(a), prop), F.lit("")) for a in aliases]
+    )
+    present = reduce(
+        lambda a, b: a | b,
+        [F.array_contains(F.map_keys(F.col(a)), prop) for a in aliases],
+    )
+    return parsed, present, value
 
 
 def verify_events(
@@ -97,33 +128,13 @@ def verify_events(
     group_cols = list(group_cols)
     join_keys = [*group_cols, event_col]
 
-    # Parse each payload ONCE per row (staged projection): both the key
-    # membership test and the value extraction read the same
-    # map<string,string> — json_object_keys + a second from_json would
-    # parse every payload twice per fanned row.
-    from .json_ops import payload_map
-
-    map_aliases = [f"__m{i}" for i in range(len(payload_cols))]
-    parsed = catalog.select(
-        "*", *[payload_map(c).alias(a) for c, a in zip(payload_cols, map_aliases)]
-    )
+    parsed, present, value = _parse_payloads(catalog, payload_cols, prop_col)
 
     # One broadcast fan-out: each catalog row appears once per expected
     # prop of its event; per-(event,prop) count_if(__obs) therefore
     # equals the event's total record count — the denominator lives in
     # the plan.
     joined = parsed.join(F.broadcast(spec_long), join_keys, "inner")
-
-    prop = F.col(prop_col)
-    value = F.coalesce(
-        *[F.nullif(F.try_element_at(F.col(a), prop), F.lit("")) for a in map_aliases]
-    )
-    present_terms = [
-        F.array_contains(F.map_keys(F.col(a)), prop) for a in map_aliases
-    ]
-    present = present_terms[0]
-    for term in present_terms[1:]:
-        present = present | term
 
     # Zero-fill inside the one aggregate: each spec row joins the input
     # as a marker row whose three flags are false, so it opens its

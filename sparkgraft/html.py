@@ -12,9 +12,10 @@ the real web's unclosed tags and attribute soup, where a regex
 stripper silently corrupts).
 
 Scale shape: all three extractors are row-local Python over Arrow
-batches (``mapInPandas`` — never row-at-a-time ``BatchEvalPython``),
-the same seam as the codec tier: one pass, no shuffle, a malformed
-document dead-letters as NULL instead of killing the scan.
+batches (``relational.map_rows`` — never row-at-a-time
+``BatchEvalPython``), the same seam as the codec tier: one pass, no
+shuffle, a malformed document dead-letters as NULL instead of killing
+the scan.
 
 Whitespace contract (what the oracle reproduces): every whitespace run
 collapses to one space and the result is stripped — a deterministic,
@@ -27,9 +28,10 @@ from __future__ import annotations
 
 import re
 from html.parser import HTMLParser
-from typing import Iterator
 
 from pyspark.sql import DataFrame
+
+from .relational import map_rows
 
 __all__ = [
     "html_to_text",
@@ -257,57 +259,40 @@ def extract_html(
     text-quality / dedup tiers, with ``resolved_links`` feeding
     ``web.url_filter`` / ``web.canonical_url`` as the next crawl
     frontier."""
-    import pandas as pd
 
-    resolved = url_col is not None
-    # arrow column order must match the declared schema
-    _meta_cols = ["canonical_href", "meta_robots", "meta_description"]
-    out_cols = (
-        ["doc_id", "url", "text", "title", "links", "base_href",
-         *_meta_cols, "resolved_links"]
-        if resolved
-        else ["doc_id", "text", "title", "links", "base_href", *_meta_cols]
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in out_cols}
-            for i, (did, html) in enumerate(zip(pdf[id_col], pdf[html_col])):
-                out["doc_id"].append(int(did))
-                url = pdf[url_col].iloc[i] if resolved else None
-                if resolved:
-                    out["url"].append(url)
-                if html is None:
-                    for k in ("text", "title", "links", "base_href",
-                              *_meta_cols):
-                        out[k].append(None)
-                    if resolved:
-                        out["resolved_links"].append(None)
-                    continue
-                p = _parse(str(html))
-                out["text"].append(_norm(" ".join(p.chunks)))
-                out["title"].append(
-                    _norm(p.title) if p.title is not None else None
-                )
-                out["links"].append(p.links)
-                out["base_href"].append(p.base_href)
-                out["canonical_href"].append(p.canonical_href)
-                out["meta_robots"].append(p.meta_robots)
-                out["meta_description"].append(p.meta_description)
-                if resolved:
-                    out["resolved_links"].append(
-                        resolve_links(
-                            None if url is None else str(url),
-                            p.links,
-                            p.base_href,
-                        )
-                    )
-            yield pd.DataFrame(out)[out_cols]
-
-    if resolved:
-        return docs.select(id_col, url_col, html_col).mapInPandas(
-            run, HTML_EXTRACT_RESOLVED_SCHEMA
+    def fields(html):
+        """The parse and the seven extracted columns (all NULL for a
+        NULL document)."""
+        if html is None:
+            return None, (None,) * 7
+        p = _parse(str(html))
+        return p, (
+            _norm(" ".join(p.chunks)),
+            _norm(p.title) if p.title is not None else None,
+            p.links,
+            p.base_href,
+            p.canonical_href,
+            p.meta_robots,
+            p.meta_description,
         )
-    return docs.select(id_col, html_col).mapInPandas(
-        run, HTML_EXTRACT_SCHEMA
+
+    def extract(did, html):
+        return [(int(did), *fields(html)[1])]
+
+    if url_col is None:
+        return map_rows(docs.select(id_col, html_col), extract, HTML_EXTRACT_SCHEMA)
+
+    def extract_resolved(did, url, html):
+        p, cols = fields(html)
+        links = (
+            None
+            if p is None
+            else resolve_links(None if url is None else str(url), p.links, p.base_href)
+        )
+        return [(int(did), url, *cols, links)]
+
+    return map_rows(
+        docs.select(id_col, url_col, html_col),
+        extract_resolved,
+        HTML_EXTRACT_RESOLVED_SCHEMA,
     )

@@ -5,9 +5,9 @@ The Spark-side pattern for multimodal training data at 100 TB:
 - payloads are ``binary`` columns with a typed metadata struct
   alongside (modality, format, width/height/duration, ...);
 - decode / feature-extract / resize / frame-sample run as Arrow-batched
-  ``mapInPandas`` stages — Python touches each batch once, schema in /
-  schema out, so the operator composes with any DataFrame plan and
-  partitioning carries through;
+  ``relational.map_rows`` stages — Python touches each batch once,
+  schema in / schema out, so the operator composes with any DataFrame
+  plan and partitioning carries through;
 - the DEFAULT codec calls are deterministic fakes ("decode" byte
   statistics / stride-sample bytes) because this environment has no
   image/audio libraries; swap in a real decoder (PIL, torchaudio, ...)
@@ -35,11 +35,13 @@ The Spark-side pattern for multimodal training data at 100 TB:
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .relational import map_rows
 
 __all__ = [
     "MEDIA_SCHEMA",
@@ -110,7 +112,7 @@ def extract_features(
     decode_fn: Callable[[bytes], dict[str, Any]] = fake_decode_stats,
     batch_size_hint: int = 256,
 ) -> DataFrame:
-    """Decode + featurize via Arrow-batched ``mapInPandas``.
+    """Decode + featurize via Arrow-batched ``relational.map_rows``.
 
     Contract: input carries (media_id, payload); output is
     ``media_id, feat_n_bytes, feat_mean_byte, feat_first_byte`` — one
@@ -119,33 +121,22 @@ def extract_features(
     Python cost is per-BATCH, not per-row: Arrow moves each partition's
     rows in vectorized batches.
     """
-    import pandas as pd
 
-    out_schema = (
+    def featurize(media_id, payload):
+        try:
+            s = decode_fn(bytes(payload) if payload is not None else None)
+            return [
+                (media_id, s["n_bytes"], float(s["mean_byte"]), int(s["first_byte"]))
+            ]
+        except (NotImplementedError, ValueError):
+            return [(media_id, None, None, None)]
+
+    return map_rows(
+        media.select("media_id", "payload"),
+        featurize,
         "media_id long, feat_n_bytes long, feat_mean_byte double, "
-        "feat_first_byte long"
+        "feat_first_byte long",
     )
-
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    s = decode_fn(bytes(payload) if payload is not None else None)
-                    rows.append(
-                        (media_id, s["n_bytes"], float(s["mean_byte"]),
-                         int(s["first_byte"]))
-                    )
-                except (NotImplementedError, ValueError):
-                    rows.append((media_id, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "feat_n_bytes", "feat_mean_byte", "feat_first_byte"
-                ],
-            )
-
-    return media.select("media_id", "payload").mapInPandas(featurize, out_schema)
 
 
 def fake_resize(payload: bytes, width: int, height: int) -> bytes:
@@ -172,9 +163,9 @@ def resize_media(
     height: int = 8,
     resize_fn: Callable[[bytes, int, int], bytes] = fake_resize,
 ) -> DataFrame:
-    """Resize via Arrow-batched ``mapInPandas`` — the normalization
-    stage of an image pipeline (every payload to a fixed target
-    resolution before featurization/training).
+    """Resize via Arrow-batched ``relational.map_rows`` — the
+    normalization stage of an image pipeline (every payload to a fixed
+    target resolution before featurization/training).
 
     Contract: (media_id, payload) in; ``media_id, width, height,
     payload`` out — the payload REPLACED by its resized form, exactly
@@ -184,28 +175,21 @@ def resize_media(
     per-batch, partitioning carries through, and the stage composes
     with any downstream plan (e.g. ``extract_features`` over the
     resized output)."""
-    import pandas as pd
 
-    out_schema = "media_id long, width int, height int, payload binary"
-
-    def do_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    out = resize_fn(
-                        bytes(payload) if payload is not None else None,
-                        width,
-                        height,
-                    )
-                    rows.append((media_id, width, height, out))
-                except (NotImplementedError, ValueError):
-                    rows.append((media_id, width, height, None))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "payload"]
+    def do_resize(media_id, payload):
+        try:
+            out = resize_fn(
+                bytes(payload) if payload is not None else None, width, height
             )
+        except (NotImplementedError, ValueError):
+            out = None
+        return [(media_id, width, height, out)]
 
-    return media.select("media_id", "payload").mapInPandas(do_resize, out_schema)
+    return map_rows(
+        media.select("media_id", "payload"),
+        do_resize,
+        "media_id long, width int, height int, payload binary",
+    )
 
 
 def sample_frames(
@@ -257,32 +241,24 @@ def embed_media(media: DataFrame, dim: int = 16) -> DataFrame:
     plans compose untouched.
     """
     import numpy as np
-    import pandas as pd
 
-    out_schema = "media_id long, embedding array<float>"
+    def encode(media_id, payload):
+        # empty payloads dead-letter like None: a zero-norm vector is
+        # not unit-norm and would silently skew any downstream
+        # centroid/cosine math instead of being dropped by the NULL
+        # guards every similarity operator already has
+        if payload is None or len(payload) == 0:
+            return [(media_id, None)]
+        b = np.frombuffer(bytes(payload), dtype=np.uint8)
+        hist = np.bincount(b % dim, minlength=dim).astype(np.float64)
+        v = (hist / float(np.linalg.norm(hist))).astype(np.float32)
+        return [(media_id, v.tolist())]
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, vecs = [], []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                # empty payloads dead-letter like None: a zero-norm
-                # vector is not unit-norm and would silently skew any
-                # downstream centroid/cosine math instead of being
-                # dropped by the NULL guards every similarity operator
-                # already has
-                if payload is None or len(payload) == 0:
-                    ids.append(media_id)
-                    vecs.append(None)
-                    continue
-                b = np.frombuffer(bytes(payload), dtype=np.uint8)
-                hist = np.bincount(b % dim, minlength=dim).astype(np.float64)
-                norm = float(np.linalg.norm(hist))
-                v = (hist / norm).astype(np.float32)
-                ids.append(media_id)
-                vecs.append(v.tolist())
-            yield pd.DataFrame({"media_id": ids, "embedding": vecs})
-
-    return media.select("media_id", "payload").mapInPandas(encode, out_schema)
+    return map_rows(
+        media.select("media_id", "payload"),
+        encode,
+        "media_id long, embedding array<float>",
+    )
 
 
 def perceptual_hash(
@@ -302,7 +278,7 @@ def perceptual_hash(
     multimodal operator (``resize_fn``: bytes -> fixed-size bytes —
     swap in PIL/cv2 grayscale downsampling in a real deployment; the
     deterministic stride-sampler stands in here). Arrow-batched
-    mapInPandas, NULL payloads dead-lettered as NULL hashes.
+    ``relational.map_rows``, NULL payloads dead-lettered as NULL hashes.
 
     Returns ``(media_id, phash bigint)``. Downstream pairing is the
     SimHash machinery unchanged: band the bits for candidates, verify
@@ -310,43 +286,35 @@ def perceptual_hash(
     near-dups land within a few bits.
     """
     import numpy as np
-    import pandas as pd
 
     w, h = grid + 1, grid
 
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                ids.append(media_id)
-                if payload is None or len(payload) == 0:
-                    hashes.append(None)
-                    continue
-                try:
-                    grid_bytes = resize_fn(bytes(payload), w, h)
-                except (NotImplementedError, ValueError):
-                    # corrupt/undecodable payload: dead-letter as NULL
-                    # like every other codec stage — a broken file
-                    # must never kill a 100 TB job (the fake resizer
-                    # never raised on non-None bytes, so this path
-                    # only became reachable with real codecs)
-                    hashes.append(None)
-                    continue
-                cells = np.frombuffer(grid_bytes, dtype=np.uint8).astype(
-                    np.int16
-                ).reshape(h, w)
-                bits = (cells[:, 1:] > cells[:, :-1]).flatten()
-                v = 0
-                for bit in bits:
-                    v = (v << 1) | int(bit)
-                # two's-complement into signed 64-bit for a BIGINT column
-                if v >= 1 << 63:
-                    v -= 1 << 64
-                hashes.append(v)
-            yield pd.DataFrame({"media_id": ids, "phash": hashes})
+    def phash(media_id, payload):
+        if payload is None or len(payload) == 0:
+            return [(media_id, None)]
+        try:
+            grid_bytes = resize_fn(bytes(payload), w, h)
+        except (NotImplementedError, ValueError):
+            # corrupt/undecodable payload: dead-letter as NULL like
+            # every other codec stage — a broken file must never kill
+            # a 100 TB job (the fake resizer never raised on non-None
+            # bytes, so this path only became reachable with real
+            # codecs)
+            return [(media_id, None)]
+        cells = np.frombuffer(grid_bytes, dtype=np.uint8).astype(
+            np.int16
+        ).reshape(h, w)
+        bits = (cells[:, 1:] > cells[:, :-1]).flatten()
+        v = 0
+        for bit in bits:
+            v = (v << 1) | int(bit)
+        # two's-complement into signed 64-bit for a BIGINT column
+        if v >= 1 << 63:
+            v -= 1 << 64
+        return [(media_id, v)]
 
-    return media.select("media_id", "payload").mapInPandas(
-        hash_batches, "media_id long, phash long"
+    return map_rows(
+        media.select("media_id", "payload"), phash, "media_id long, phash long"
     )
 
 
@@ -689,35 +657,29 @@ def embed_audio(media: DataFrame, n_windows: int = 8) -> DataFrame:
     next to the original (caught by cosine distance downstream exactly
     like text/image near-dups — asserted with planted pairs in
     tests/test_multimodal.py), where md5 sees an unrelated blob."""
+
     import numpy as np
-    import pandas as pd
 
-    out_schema = "media_id long, embedding array<float>"
+    def encode(media_id, payload):
+        try:
+            v = np.asarray(
+                audio_feature_vector(
+                    bytes(payload) if payload is not None else None, n_windows
+                ),
+                dtype=np.float64,
+            )
+        except (NotImplementedError, ValueError):
+            return [(media_id, None)]
+        norm = float(np.linalg.norm(v))
+        if norm == 0.0:
+            return [(media_id, None)]  # silence: no direction to keep
+        return [(media_id, (v / norm).astype(np.float32).tolist())]
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, vecs = [], []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                ids.append(media_id)
-                try:
-                    v = np.asarray(
-                        audio_feature_vector(
-                            bytes(payload) if payload is not None else None,
-                            n_windows,
-                        ),
-                        dtype=np.float64,
-                    )
-                except (NotImplementedError, ValueError):
-                    vecs.append(None)
-                    continue
-                norm = float(np.linalg.norm(v))
-                if norm == 0.0:
-                    vecs.append(None)  # silence: no direction to keep
-                    continue
-                vecs.append((v / norm).astype(np.float32).tolist())
-            yield pd.DataFrame({"media_id": ids, "embedding": vecs})
-
-    return media.select("media_id", "payload").mapInPandas(encode, out_schema)
+    return map_rows(
+        media.select("media_id", "payload"),
+        encode,
+        "media_id long, embedding array<float>",
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -12,7 +12,10 @@ from pyspark.sql import SparkSession
 def stage_reader(spark: SparkSession) -> Callable[[], list[dict]]:
     """A closure that, on each call, returns one row per stage whose id
     is above the previous call's watermark — the stages launched since
-    the last read — sorted by id.
+    the last read — sorted by id. A stage Spark skipped (its shuffle
+    output already existed, e.g. a re-run frame or an AQE-reused
+    exchange) ran no task and is left out, but still moves the
+    watermark.
 
     Stage ids only grow, so the status store evicting its oldest
     entries cannot corrupt a delta the way a cumulative-sum snapshot
@@ -38,10 +41,14 @@ def stage_reader(spark: SparkSession) -> Callable[[], list[dict]]:
             gw.jvm.java.util.ArrayList(),
         )
         out = []
+        top = watermark
         it = seq.iterator()
         while it.hasNext():
             s = it.next()
             if s.stageId() <= watermark:
+                continue
+            top = max(top, s.stageId())
+            if s.status().toString() == "SKIPPED":
                 continue
             out.append(
                 {
@@ -58,8 +65,7 @@ def stage_reader(spark: SparkSession) -> Callable[[], list[dict]]:
                 }
             )
         out.sort(key=lambda d: d["id"])
-        if out:
-            watermark = out[-1]["id"]
+        watermark = top
         return out
 
     return read

@@ -36,8 +36,8 @@ Plant geometry:
   ``md5(doc_id)`` (DuckDB recomputes the same hash); quality: >= 10
   whitespace words of EXTRACTED text.
 
-Scale shape: three Arrow passes (build — fixture only, crack,
-extract), a broadcast rules join, row-local gate/canonical
+Scale shape: one fused Arrow pass (fixture build, crack, extract), a
+broadcast rules join, row-local gate/canonical
 expressions, then the only shuffles in the whole plan: the dedup
 groupBy and the cap's one rank window (its Partial
 ``WindowGroupLimit`` bounds what a mega-domain sends to one reducer).
@@ -45,8 +45,6 @@ Zero URL-side shuffles otherwise; no collect anywhere.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,7 +54,7 @@ from .. import robots as R
 from .. import warc as WC
 from .. import web as W
 from ..io import read_table
-from ..relational import spread
+from ..relational import map_rows, spread
 from .registry import register
 
 _ROBOTS = (
@@ -68,6 +66,46 @@ _ROBOTS = (
 
 _CAP = 25
 _MIN_WORDS = 10
+
+
+def _fixture_warc_file(did: int, text: str | None) -> bytes:
+    """Document ``did`` as one gzip-member WARC file holding one
+    response record, planted per the module docstring's geometry."""
+    pid = did // 2
+    host = f"h{pid % 4}.site{pid % 3}.co.uk"
+    c = pid % 4
+    if c == 0:
+        path, query = f"/private/x{pid}", ""
+    elif c == 1:
+        path, query = f"/private/public/x{pid}", ""
+    elif c == 2:
+        path, query = "/search", f"q={pid}"
+    elif pid % 8 == 7:
+        path, query = f"/ads/x{pid}", ""
+    else:
+        path, query = f"/ok/x{pid}", ""
+    if did % 2 == 0:  # canonical noise variant
+        q = query + ("&" if query else "") + "utm_source=x"
+        url = f"http://www.{host}:80{path}?{q}"
+    else:
+        url = f"http://{host}{path}" + (f"?{query}" if query else "")
+    body_text = str(text) if text is not None else ""
+    esc = body_text.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
+    page = (
+        f"<html><head><title>p{pid}</title>"
+        "<style>p{x}</style></head>"
+        f"<body><p>{esc}</p></body></html>"
+    ).encode("utf-8")
+    enc = did % 3
+    resp = WC.build_http_response(
+        status=404 if did % 13 == 0 else 200,
+        body=page,
+        content_encoding="gzip" if enc == 1 else None,
+        chunked=enc == 2,
+    )
+    return WC.build_warc_file(
+        [WC.build_warc_record("response", resp, url=url)], gzip_members=True
+    )
 
 
 @register(
@@ -146,112 +184,33 @@ def crawl_to_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r14 optimization (guide §4, VERDICT r13 #4): the three Python
     passes — fixture WARC build, ``warc.warc_responses`` crack, and
-    ``html.extract_html`` — are FUSED into one ``mapInPandas``
-    iterator composing the SAME per-record library functions
-    (``parse_warc_recover`` -> ``parse_http_response`` ->
-    ``decode_http_payload``/``decode_text_body`` -> ``html_to_text``),
-    applying the identical ``warc_error IS NULL AND status = 200``
-    drop in place. One JVM<->Python boundary crossing instead of
-    three: the WARC payload bytes and the HTML string no longer
+    ``html.extract_html`` — are FUSED into one ``relational.map_rows``
+    pass: each document's fixture file goes through
+    ``warc.response_rows`` (the crack/decode/dead-letter loop
+    ``warc_responses`` runs), the pass keeps the rows where
+    ``warc_error IS NULL AND status = 200`` and applies
+    ``html.html_to_text``. One JVM<->Python boundary crossing instead
+    of three: the WARC payload bytes and the HTML string no longer
     round-trip through Arrow twice each, and only the three columns
     downstream actually reads (doc_id, url, text — the query's own
     r13 comment: 'the frontier columns exist but are unused') cross
     back, instead of the 10-column response row plus the 10-column
     extract row with links/resolved_links nobody consumes."""
-    import pandas as pd
 
-    def build_crack_extract(
-        batches: Iterator["pd.DataFrame"],
-    ) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, urls, texts = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(doc_id)
-                pid = did // 2
-                host = f"h{pid % 4}.site{pid % 3}.co.uk"
-                c = pid % 4
-                if c == 0:
-                    path, query = f"/private/x{pid}", ""
-                elif c == 1:
-                    path, query = f"/private/public/x{pid}", ""
-                elif c == 2:
-                    path, query = "/search", f"q={pid}"
-                elif pid % 8 == 7:
-                    path, query = f"/ads/x{pid}", ""
-                else:
-                    path, query = f"/ok/x{pid}", ""
-                if did % 2 == 0:  # canonical noise variant
-                    q = query + ("&" if query else "") + "utm_source=x"
-                    url = f"http://www.{host}:80{path}?{q}"
-                else:
-                    url = f"http://{host}{path}" + (
-                        f"?{query}" if query else ""
-                    )
-                body_text = str(text) if text is not None else ""
-                esc = (
-                    body_text.replace("&", "&amp;")
-                    .replace("<", "&lt;")
-                    .replace(">", "&gt;")
-                )
-                page = (
-                    f"<html><head><title>p{pid}</title>"
-                    "<style>p{x}</style></head>"
-                    f"<body><p>{esc}</p></body></html>"
-                ).encode("utf-8")
-                status = 404 if did % 13 == 0 else 200
-                enc = did % 3
-                resp = WC.build_http_response(
-                    status=status,
-                    body=page,
-                    content_encoding="gzip" if enc == 1 else None,
-                    chunked=enc == 2,
-                )
-                payload = WC.build_warc_file(
-                    [WC.build_warc_record("response", resp, url=url)],
-                    gzip_members=True,
-                )
-                # crack + decode + status filter, in place: records a
-                # dead-letter row would carry warc_error for (torn
-                # file, bad HTTP block, bad wire coding) are exactly
-                # the rows the old `warc_error IS NULL` filter dropped
-                records, _err = WC.parse_warc_recover(payload)
-                for rec in records:
-                    if rec["warc_type"] != "response":
-                        continue
-                    try:
-                        http = WC.parse_http_response(rec["payload"])
-                    except ValueError:
-                        continue  # dead-letter row -> filtered
-                    h = http["headers"]
-                    try:
-                        body = WC.decode_http_payload(
-                            http["body"],
-                            h.get("transfer-encoding", ""),
-                            h.get("content-encoding", ""),
-                        )
-                        tb = (
-                            WC.decode_text_body(body, http["content_type"])
-                            if WC.is_text_content_type(http["content_type"])
-                            else None
-                        )
-                    except ValueError:
-                        continue  # decode dead-letter -> filtered
-                    if http["status"] != 200:
-                        continue
-                    ids.append(did)
-                    urls.append(rec["url"])
-                    # extract_html's text product (NULL html -> NULL
-                    # text, the codec dead-letter convention)
-                    texts.append(
-                        H.html_to_text(tb) if tb is not None else None
-                    )
-            yield pd.DataFrame(
-                {"doc_id": ids, "url": urls, "text": texts}
-            )
+    def build_crack_extract(doc_id, text):
+        did = int(doc_id)
+        rows = WC.response_rows(_fixture_warc_file(did, text))
+        for url, status, _ct, _body, _n, html, _etag, _lm, err in rows:
+            if err is None and status == 200:
+                # extract_html's text product (NULL html -> NULL text,
+                # the codec dead-letter convention)
+                yield (did, url, H.html_to_text(html) if html is not None else None)
 
     docs = spread(read_table(spark, sf_dir, "documents"))
-    ext = docs.select("doc_id", "text").mapInPandas(
-        build_crack_extract, "doc_id long, url string, text string"
+    ext = map_rows(
+        docs.select("doc_id", "text"),
+        build_crack_extract,
+        "doc_id long, url string, text string",
     )
     # robots: one file per host SPELLING (www and bare serve alike
     # here; real crawls key rules per authority) — 24 rules rows,

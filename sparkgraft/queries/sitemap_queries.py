@@ -11,14 +11,12 @@ frontier rows directly. Library logic in sparkgraft/sitemap.py.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import sitemap as SM
 from ..io import read_table
-from ..relational import spread
+from ..relational import map_rows, spread
 from .registry import register
 
 
@@ -57,34 +55,26 @@ def sitemap_url_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes (build, crack), no shuffle beyond the spread; any XML
     build/parse, namespace, lastmod, or dead-letter defect
     hash-mismatches."""
-    import pandas as pd
 
-    def build(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, xmls = [], []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                base = f"http://site{did % 3}.example.com"
-                if did % 17 == 0:
-                    xml = "<html><body>500 Server Error</body></html>"
-                elif did % 5 == 4:
-                    xml = SM.build_sitemap_index(
-                        [(f"{base}/sm/{did}/1.xml", None),
-                         (f"{base}/sm/{did}/2.xml", None)]
-                    )
-                else:
-                    xml = SM.build_sitemap(
-                        [(f"{base}/p/{did}/a", f"2024-01-0{did % 9 + 1}"),
-                         (f"{base}/p/{did}/b", None)]
-                    )
-                ids.append(did)
-                xmls.append(xml)
-            yield pd.DataFrame({"site_id": ids, "xml": xmls})
+    def build(doc_id):
+        did = int(doc_id)
+        base = f"http://site{did % 3}.example.com"
+        if did % 17 == 0:
+            xml = "<html><body>500 Server Error</body></html>"
+        elif did % 5 == 4:
+            xml = SM.build_sitemap_index(
+                [(f"{base}/sm/{did}/1.xml", None),
+                 (f"{base}/sm/{did}/2.xml", None)]
+            )
+        else:
+            xml = SM.build_sitemap(
+                [(f"{base}/p/{did}/a", f"2024-01-0{did % 9 + 1}"),
+                 (f"{base}/p/{did}/b", None)]
+            )
+        yield did, xml
 
     docs = spread(read_table(spark, sf_dir, "documents"))
-    files = docs.select("doc_id").mapInPandas(
-        build, "site_id long, xml string"
-    )
+    files = map_rows(docs.select("doc_id"), build, "site_id long, xml string")
     out = SM.sitemap_entries(files)
     return out.where(F.col("sitemap_error").isNull()).select(
         F.col("site_id").cast("bigint").alias("doc_id"),

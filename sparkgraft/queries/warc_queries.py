@@ -15,14 +15,12 @@ sparkgraft/warc.py.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import warc as WC
 from ..io import read_table
-from ..relational import spread
+from ..relational import map_rows, spread
 from .registry import register
 
 # the planted non-ASCII suffix for the ISO-8859-1 class: 5 chars, and
@@ -70,45 +68,39 @@ def warc_http_responses(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected rows straight from the documents table, so any framing,
     gzip, chunk, charset, HTTP-split, or byte-fidelity defect in
     EITHER the writer or the parser hash-mismatches."""
-    import pandas as pd
 
-    def build(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(doc_id)
-                status = 404 if did % 7 == 0 else 200
-                cls = did % 3
-                if cls == 2:
-                    body = ((text or "") + _L1_SUFFIX).encode("iso-8859-1")
-                    resp = WC.build_http_response(
-                        status=status, body=body,
-                        content_type="text/html; charset=ISO-8859-1",
-                        chunked=True,
-                    )
-                else:
-                    body = (text or "").encode("utf-8")
-                    resp = WC.build_http_response(
-                        status=status, body=body,
-                        content_encoding="gzip" if cls == 1 else None,
-                    )
-                recs = [
-                    WC.build_warc_record(
-                        "warcinfo", b"software: sparkgraft\r\n",
-                        content_type="application/warc-fields",
-                    ),
-                    WC.build_warc_record(
-                        "response", resp,
-                        url=f"http://crawl.example.com/doc/{did}",
-                    ),
-                ]
-                ids.append(did)
-                payloads.append(WC.build_warc_file(recs, gzip_members=True))
-            yield pd.DataFrame({"file_id": ids, "payload": payloads})
+    def build(doc_id, text):
+        did = int(doc_id)
+        status = 404 if did % 7 == 0 else 200
+        cls = did % 3
+        if cls == 2:
+            body = ((text or "") + _L1_SUFFIX).encode("iso-8859-1")
+            resp = WC.build_http_response(
+                status=status, body=body,
+                content_type="text/html; charset=ISO-8859-1",
+                chunked=True,
+            )
+        else:
+            body = (text or "").encode("utf-8")
+            resp = WC.build_http_response(
+                status=status, body=body,
+                content_encoding="gzip" if cls == 1 else None,
+            )
+        recs = [
+            WC.build_warc_record(
+                "warcinfo", b"software: sparkgraft\r\n",
+                content_type="application/warc-fields",
+            ),
+            WC.build_warc_record(
+                "response", resp,
+                url=f"http://crawl.example.com/doc/{did}",
+            ),
+        ]
+        yield did, WC.build_warc_file(recs, gzip_members=True)
 
     docs = spread(read_table(spark, sf_dir, "documents"))
-    files = docs.select("doc_id", "text").mapInPandas(
-        build, "file_id long, payload binary"
+    files = map_rows(
+        docs.select("doc_id", "text"), build, "file_id long, payload binary"
     )
     out = WC.warc_responses(files)
     return out.where(F.col("warc_error").isNull()).select(

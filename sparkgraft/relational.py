@@ -17,13 +17,18 @@ plan fragment:
 - semi/anti join helpers for spec-vs-observed diffs (absent from the
   reference but the natural formulation of its conformance question).
 
-All pure DataFrame API: Catalyst chooses hash vs sort-merge, AQE fixes
-skew; ``broadcast`` hints are applied only where a side is known-small.
+All pure DataFrame API: Catalyst chooses hash vs sort-merge. AQE does
+not split a skewed window partition: a hot group of a rank window is
+bounded by Spark's Partial ``WindowGroupLimit`` (``top_k_per_group``),
+a hot join key by ``salted_join``. ``broadcast`` hints are applied only
+where a side is known-small. Two helpers sit at the edges of a plan:
+``tiny_frame`` (driver-side rows in) and ``map_rows`` (the one per-row
+Python pass).
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Iterable, Sequence
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -51,6 +56,7 @@ __all__ = [
     "bloom_prune_join",
     "golden_records",
     "tiny_frame",
+    "map_rows",
 ]
 
 
@@ -91,6 +97,39 @@ def tiny_frame(
         schema=arrow,
     )
     return spark.createDataFrame(table, schema)
+
+
+def map_rows(
+    df: DataFrame, fn: Callable[..., Iterable[tuple]], schema_ddl: str
+) -> DataFrame:
+    """One Arrow-batched Python pass: ``fn(*row)`` on every row of
+    ``df`` (values in ``df``'s column order) returns zero or more output
+    tuples in the DDL's column order, and the rows come back typed by
+    the DDL. The helper owns the ``mapInPandas`` batch loop and the
+    output frame, whose column names come from the DDL. The frame is
+    built as ``object`` columns, so pandas never infers a type: an
+    integer column holding a NULL stays exact instead of becoming
+    float64. Every per-record Python pass in the library goes through
+    here; only passes that vectorise across a whole batch call
+    ``mapInPandas`` themselves, and a test in
+    ``tests/test_relational.py`` pins that."""
+    from pyspark.sql.types import StructType
+
+    names = StructType.fromDDL(schema_ddl).names
+
+    def run(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [
+                out
+                for row in pdf.itertuples(index=False, name=None)
+                for out in fn(*row)
+            ]
+            yield pd.DataFrame(rows, columns=names, dtype=object)
+
+    run.__name__ = getattr(fn, "__name__", "map_rows")  # names the plan node
+    return df.mapInPandas(run, schema_ddl)
 
 
 def materialize_intermediate(

@@ -33,10 +33,11 @@ RFC 9309 semantics implemented:
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .relational import map_rows
 
 __all__ = [
     "parse_robots",
@@ -149,35 +150,22 @@ def robots_rules(
     ``pattern_re`` the precompiled-to-regex form the gate matches
     with. A NULL/empty content yields no rows (no rules = everything
     allowed, the RFC default for a missing file)."""
-    import pandas as pd
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for host, content in zip(pdf[host_col], pdf[content_col]):
-                if content is None:
-                    continue
-                for agent, allow, pattern in parse_robots(str(content)):
-                    rows.append(
-                        (
-                            host,
-                            agent,
-                            allow,
-                            pattern,
-                            len(pattern.encode("utf-8")),
-                            pattern_to_regex(pattern),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "host", "agent", "rule_allow", "pattern",
-                    "pattern_len", "pattern_re",
-                ],
+    def run(host, content):
+        if content is None:
+            return
+        for agent, allow, pattern in parse_robots(str(content)):
+            yield (
+                host,
+                agent,
+                allow,
+                pattern,
+                len(pattern.encode("utf-8")),
+                pattern_to_regex(pattern),
             )
 
-    return robots.select(host_col, content_col).mapInPandas(
-        run, ROBOTS_RULE_SCHEMA
+    return map_rows(
+        robots.select(host_col, content_col), run, ROBOTS_RULE_SCHEMA
     )
 
 
@@ -197,20 +185,15 @@ def robots_sitemaps(
     records that seed a crawl's URL frontier alongside the outlink
     tier (resolve/gate/canonicalize downstream like any other URL).
     NULL/empty content yields no rows."""
-    import pandas as pd
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for host, content in zip(pdf[host_col], pdf[content_col]):
-                if content is None:
-                    continue
-                for sm in parse_robots_directives(str(content))["sitemaps"]:
-                    rows.append((host, sm))
-            yield pd.DataFrame(rows, columns=["host", "sitemap_url"])
+    def run(host, content):
+        if content is None:
+            return
+        for sm in parse_robots_directives(str(content))["sitemaps"]:
+            yield host, sm
 
-    return robots.select(host_col, content_col).mapInPandas(
-        run, ROBOTS_SITEMAP_SCHEMA
+    return map_rows(
+        robots.select(host_col, content_col), run, ROBOTS_SITEMAP_SCHEMA
     )
 
 
@@ -226,23 +209,16 @@ def robots_crawl_delays(
     without the directive yield no rows; a crawler resolves its
     effective delay with the same group selection as the gate (exact
     agent row if present, else the ``*`` row)."""
-    import pandas as pd
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for host, content in zip(pdf[host_col], pdf[content_col]):
-                if content is None:
-                    continue
-                d = parse_robots_directives(str(content))["crawl_delays"]
-                for agent, secs in d.items():
-                    rows.append((host, agent, float(secs)))
-            yield pd.DataFrame(
-                rows, columns=["host", "agent", "crawl_delay_sec"]
-            )
+    def run(host, content):
+        if content is None:
+            return
+        d = parse_robots_directives(str(content))["crawl_delays"]
+        for agent, secs in d.items():
+            yield host, agent, float(secs)
 
-    return robots.select(host_col, content_col).mapInPandas(
-        run, ROBOTS_DELAY_SCHEMA
+    return map_rows(
+        robots.select(host_col, content_col), run, ROBOTS_DELAY_SCHEMA
     )
 
 

@@ -12,7 +12,7 @@ surface; extension module per the brief's training-data-pipeline
 mandate, stdlib-only (``xml.etree.ElementTree``).
 
 Scale shape: one sitemap document = one row, cracked in one
-Arrow-batched ``mapInPandas`` pass (the codec seam); a malformed
+Arrow-batched ``relational.map_rows`` pass (the codec seam); a malformed
 document dead-letters as its own row instead of killing the scan. Real
 sitemaps cap at 50k URLs / 50 MB uncompressed by protocol, so per-row
 parsing bounds executor memory by construction.
@@ -21,10 +21,11 @@ parsing bounds executor memory by construction.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 from xml.etree import ElementTree
 
 from pyspark.sql import DataFrame
+
+from .relational import map_rows
 
 __all__ = [
     "build_sitemap",
@@ -138,29 +139,18 @@ def sitemap_entries(
     child sitemap (``kind='sitemapindex'``, the rows the frontier loop
     fetches next). A NULL or malformed document dead-letters as ONE
     row with ``sitemap_error`` set and NULL elsewhere."""
-    import pandas as pd
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for sid, xml in zip(pdf[id_col], pdf[xml_col]):
-                sid = int(sid)
-                if xml is None:
-                    rows.append((sid, None, None, None, "sitemap: null"))
-                    continue
-                try:
-                    parsed = parse_sitemap(str(xml))
-                except ValueError as e:
-                    rows.append((sid, None, None, None, str(e)))
-                    continue
-                for loc, lastmod in parsed["entries"]:
-                    rows.append((sid, parsed["kind"], loc, lastmod, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["site_id", "kind", "loc", "lastmod",
-                         "sitemap_error"],
-            )
+    def run(sid, xml):
+        sid = int(sid)
+        if xml is None:
+            yield sid, None, None, None, "sitemap: null"
+            return
+        try:
+            parsed = parse_sitemap(str(xml))
+        except ValueError as e:
+            yield sid, None, None, None, str(e)
+            return
+        for loc, lastmod in parsed["entries"]:
+            yield sid, parsed["kind"], loc, lastmod, None
 
-    return docs.select(id_col, xml_col).mapInPandas(
-        run, SITEMAP_ENTRY_SCHEMA
-    )
+    return map_rows(docs.select(id_col, xml_col), run, SITEMAP_ENTRY_SCHEMA)

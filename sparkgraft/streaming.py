@@ -22,7 +22,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .json_ops import extract_key, key_presence
+from .conformance import _parse_payloads
 
 __all__ = [
     "stream_table",
@@ -198,17 +198,15 @@ def windowed_conformance(
     watermark: str = "1 day",
 ) -> DataFrame:
     """The flagship conformance metrics per tumbling window — the
-    reference's daily batch job recast as a continuous query. Same
-    expressions as conformance.verify_events (key presence via exact
-    json_object_keys membership, value completeness via single-parse
-    map extraction); the broadcast spec join works identically on a
-    stream."""
+    reference's daily batch job recast as a continuous query. The
+    flags are conformance.verify_events' own (one ``from_json`` map
+    per payload: key presence is exact ``map_keys`` membership, value
+    completeness the first non-empty value), so each window's counts
+    sum to the batch metric; the broadcast spec join works identically
+    on a stream."""
     s = _with_event_time(stream, ts_col).withWatermark("__event_time", watermark)
-    joined = s.join(F.broadcast(spec_long), [event_col], "inner")
-
-    payload_cols_c = [F.col(c) for c in payload_cols]
-    value = F.coalesce(*[extract_key(c, F.col(prop_col)) for c in payload_cols_c])
-    present = key_presence(payload_cols_c, F.col(prop_col))
+    parsed, present, value = _parse_payloads(s, payload_cols, prop_col)
+    joined = parsed.join(F.broadcast(spec_long), [event_col], "inner")
 
     return (
         joined.groupBy(

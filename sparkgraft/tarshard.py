@@ -13,9 +13,9 @@ for crawl archives:
 - :func:`build_tar_shard` / :func:`parse_tar_shard` — deterministic
   bytes-level writer and a recovering reader (pure functions, no
   Spark);
-- :func:`tar_samples` — one Arrow ``mapInPandas`` crack pass over a
-  ``(shard_id, payload)`` DataFrame (the ``binaryFile`` source's
-  shape), one row per member, corrupt shards DEAD-LETTER as rows
+- :func:`tar_samples` — one Arrow ``relational.map_rows`` crack pass
+  over a ``(shard_id, payload)`` DataFrame (the ``binaryFile``
+  source's shape), one row per member, corrupt shards DEAD-LETTER as rows
   instead of killing the job (the ``warc_responses`` contract);
 - :func:`samples_wide` — pivot member rows to one row per sample with
   a binary column per requested extension;
@@ -51,10 +51,12 @@ import json
 import os
 import re
 import tarfile
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .relational import map_rows
 
 __all__ = [
     "build_tar_shard",
@@ -196,40 +198,26 @@ def tar_samples(
     error row.  No shuffle: parsing rides whatever partitioning the
     input files arrived with.
     """
-    import pandas as pd
 
-    out_cols = ["__id", "sample_seq", "key", "ext", "content", "tar_error"]
+    def crack(sid, payload):
+        members, err = parse_tar_shard(bytes(payload or b""))
+        seq = -1
+        prev_key: str | None = None
+        for name, data in members:
+            key, ext = _split_name(name)
+            if key != prev_key:
+                seq += 1
+                prev_key = key
+            yield sid, seq, key, ext, data, None
+        if err is not None:
+            yield sid, None, None, None, None, err
 
-    def crack(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for sid, payload in zip(pdf[id_col], pdf[payload_col]):
-                members, err = parse_tar_shard(bytes(payload or b""))
-                seq = -1
-                prev_key: str | None = None
-                for name, data in members:
-                    key, ext = _split_name(name)
-                    if key != prev_key:
-                        seq += 1
-                        prev_key = key
-                    rows.append((sid, seq, key, ext, data, None))
-                if err is not None:
-                    rows.append((sid, None, None, None, None, err))
-            yield pd.DataFrame(rows, columns=out_cols).reindex(
-                columns=out_cols
-            )
-
-    schema = (
-        f"__id long, sample_seq int, key string, ext string,"
-        f" content binary, tar_error string"
-    )
-    return (
-        files.select(
-            F.col(id_col).cast("long").alias(id_col), payload_col
-        )
-        .mapInPandas(crack, schema)
-        .withColumnRenamed("__id", id_col)
-    )
+    return map_rows(
+        files.select(F.col(id_col).cast("long").alias(id_col), payload_col),
+        crack,
+        "__id long, sample_seq int, key string, ext string,"
+        " content binary, tar_error string",
+    ).withColumnRenamed("__id", id_col)
 
 
 def samples_wide(

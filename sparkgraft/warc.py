@@ -17,11 +17,12 @@ member.
 
 Scale shape: one WARC file = one binary payload row (Spark's
 ``binaryFile`` source yields exactly that), and :func:`warc_responses`
-is ONE Arrow-batched ``mapInPandas`` pass — parse, HTTP-split, emit
-rows; no shuffle until the caller aggregates. Real crawls cap WARC
-files at ~1 GiB, so whole-file parsing bounds executor memory by
-construction; corrupt files dead-letter as a diagnostic row instead of
-killing the job (the multimodal codec convention).
+is ONE Arrow-batched ``relational.map_rows`` pass over
+:func:`response_rows` — parse, HTTP-split, emit rows; no shuffle until
+the caller aggregates. Real crawls cap WARC files at ~1 GiB, so
+whole-file parsing bounds executor memory by construction; corrupt
+files dead-letter as a diagnostic row instead of killing the job (the
+multimodal codec convention).
 """
 
 from __future__ import annotations
@@ -30,6 +31,8 @@ import re
 from typing import Any, Iterator
 
 from pyspark.sql import DataFrame
+
+from .relational import map_rows
 
 __all__ = [
     "build_warc_record",
@@ -44,6 +47,7 @@ __all__ = [
     "charset_of",
     "decode_text_body",
     "is_text_content_type",
+    "response_rows",
     "warc_responses",
     "read_warc_dir",
     "WARC_RESPONSE_SCHEMA",
@@ -461,6 +465,58 @@ WARC_RESPONSE_SCHEMA = (
 )
 
 
+def response_rows(payload: bytes, recover: bool = True) -> Iterator[tuple]:
+    """One WARC file's :func:`warc_responses` rows, without the file
+    id: ``(url, status, content_type, body, n_body_bytes, text_body,
+    etag, last_modified, warc_error)``, dead-letter rows included.
+    A caller keeping only the clean responses filters on
+    ``warc_error is None``."""
+    try:
+        records, err = parse_warc_recover(payload)
+    except NotImplementedError as e:
+        records, err = [], str(e)
+    if err is not None:
+        yield (None, None, None, None, None, None, None, None, err)
+        if not recover:
+            return
+    for rec in records:
+        if rec["warc_type"] != "response":
+            continue
+        try:
+            http = parse_http_response(rec["payload"])
+        except ValueError as e:
+            yield (rec["url"], None, None, None, None, None, None, None, str(e))
+            continue
+        h = http["headers"]
+        try:
+            body = decode_http_payload(
+                http["body"],
+                h.get("transfer-encoding", ""),
+                h.get("content-encoding", ""),
+            )
+            text = (
+                decode_text_body(body, http["content_type"])
+                if is_text_content_type(http["content_type"])
+                else None
+            )
+            decode_err = None
+        except ValueError as e:
+            # keep the raw wire bytes for forensics; the error string
+            # marks the row dead-lettered
+            body, text, decode_err = http["body"], None, str(e)
+        yield (
+            rec["url"],
+            http["status"],
+            http["content_type"],
+            body,
+            len(body),
+            text,
+            h.get("etag") or None,
+            h.get("last-modified") or None,
+            decode_err,
+        )
+
+
 def warc_responses(
     files: DataFrame,
     id_col: str = "file_id",
@@ -468,10 +524,11 @@ def warc_responses(
     recover: bool = True,
 ) -> DataFrame:
     """Crack WARC files into HTTP response rows: one Arrow-batched
-    ``mapInPandas`` pass over ``(file_id, payload)`` rows (the
-    ``binaryFile`` source's shape) emitting one row per ``response``
-    record — ``(file_id, url, status, content_type, body,
-    n_body_bytes, text_body, etag, last_modified, warc_error)``.
+    ``relational.map_rows`` pass of :func:`response_rows` over
+    ``(file_id, payload)`` rows (the ``binaryFile`` source's shape)
+    emitting one row per ``response`` record — ``(file_id, url,
+    status, content_type, body, n_body_bytes, text_body, etag,
+    last_modified, warc_error)``.
     ``etag``/``last_modified`` are the response's cache validators
     verbatim (r13 — the recrawl snapshot stores them so
     ``frontier.recrawl_frontier`` can plan CONDITIONAL refetches:
@@ -498,78 +555,12 @@ def warc_responses(
     retry/alert feed. Downstream is the rest of this engine:
     ``web.url_filter`` on ``url``, ``web.canonical_url`` dedup, text
     quality tiers on ``text_body``."""
-    import pandas as pd
 
-    def crack(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for fid, payload in zip(pdf[id_col], pdf[payload_col]):
-                fid = int(fid)
-                try:
-                    records, err = parse_warc_recover(payload)
-                except NotImplementedError as e:
-                    records, err = [], str(e)
-                if err is not None:
-                    rows.append(
-                        (fid, None, None, None, None, None, None,
-                         None, None, err)
-                    )
-                    if not recover:
-                        continue
-                for rec in records:
-                    if rec["warc_type"] != "response":
-                        continue
-                    try:
-                        http = parse_http_response(rec["payload"])
-                    except ValueError as e:
-                        rows.append(
-                            (fid, rec["url"], None, None, None, None,
-                             None, None, None, str(e))
-                        )
-                        continue
-                    h = http["headers"]
-                    try:
-                        payload = decode_http_payload(
-                            http["body"],
-                            h.get("transfer-encoding", ""),
-                            h.get("content-encoding", ""),
-                        )
-                        text = (
-                            decode_text_body(payload, http["content_type"])
-                            if is_text_content_type(http["content_type"])
-                            else None
-                        )
-                        decode_err = None
-                    except ValueError as e:
-                        # keep the raw wire bytes for forensics; the
-                        # error string marks the row dead-lettered
-                        payload, text, decode_err = http["body"], None, str(e)
-                    rows.append(
-                        (
-                            fid,
-                            rec["url"],
-                            http["status"],
-                            http["content_type"],
-                            payload,
-                            len(payload),
-                            text,
-                            h.get("etag") or None,
-                            h.get("last-modified") or None,
-                            decode_err,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "file_id", "url", "status", "content_type",
-                    "body", "n_body_bytes", "text_body",
-                    "etag", "last_modified", "warc_error",
-                ],
-            )
+    def crack(fid, payload):
+        for row in response_rows(payload, recover):
+            yield (int(fid), *row)
 
-    return files.select(id_col, payload_col).mapInPandas(
-        crack, WARC_RESPONSE_SCHEMA
-    )
+    return map_rows(files.select(id_col, payload_col), crack, WARC_RESPONSE_SCHEMA)
 
 
 def read_warc_dir(

@@ -201,6 +201,28 @@ def test_perceptual_hash_near_dup_vs_unrelated(spark):
     assert hamming(out[1], out[3]) < hamming(out[1], out[4])
 
 
+def test_perceptual_hash_exact_in_a_batch_with_a_null_payload(spark):
+    """A NULL payload in the same Arrow batch leaves every other hash
+    bit-exact: a float64 column would round 64-bit hashes to 53 bits."""
+    import random
+
+    rng = random.Random(7)
+    rows = [(i, bytearray(rng.randrange(256) for _ in range(256))) for i in range(8)]
+
+    def hashes(rows):
+        df = spark.createDataFrame(rows, "id int, raw binary").coalesce(1)
+        media = M.attach_media_metadata(
+            df, "raw", modality="image", format="fake", id_col="id"
+        )
+        return {r.media_id: r.phash for r in M.perceptual_hash(media).collect()}
+
+    clean = hashes(rows)
+    assert any(abs(h) > 1 << 53 for h in clean.values())
+    with_null = hashes(rows + [(99, None)])
+    assert with_null.pop(99) is None
+    assert with_null == clean
+
+
 def test_perceptual_hash_custom_resize_seam(spark):
     """A third-party normalizer rides the same seam: constant-grid
     resize makes every payload hash to the same value."""

@@ -55,6 +55,54 @@ def test_windowed_conformance_stream(spark, sf_dir):
             assert r.keys_not_null_count == 0
 
 
+def test_windowed_conformance_sums_to_verify_events(spark, sf_dir):
+    """Batch/stream parity of the paper's metric: both functions read
+    the same one-parse flags, so the per-window counts summed over
+    windows equal verify_events' observed rows for the same spec —
+    an unobserved prop (0 present keys) and an unobserved event (no
+    row on either side) included."""
+    from sparkgraft.conformance import verify_events
+    from sparkgraft.relational import tiny_frame
+
+    spec = tiny_frame(
+        spark,
+        [
+            (e, p)
+            for e in ("click", "error", "purchase", "signup", "view", "absent")
+            for p in ("k", "session_id", "nope")
+        ],
+        "event_name string, prop_name string",
+    )
+    stream = ST.stream_table(spark, sf_dir, "events").withColumnRenamed(
+        "event_type", "event_name"
+    )
+    win = ST.run_stream_to_memory(
+        ST.windowed_conformance(stream, spec, window="12 hours"), "win_conf_sum"
+    )
+    streamed = {
+        (r.event_name, r.prop_name): (r.t, r.k, r.v)
+        for r in win.groupBy("event_name", "prop_name")
+        .agg(
+            F.sum("total_records").alias("t"),
+            F.sum("keys_not_null_count").alias("k"),
+            F.sum("value_not_null_count").alias("v"),
+        )
+        .collect()
+    }
+    batch = read_table(spark, sf_dir, "events").withColumnRenamed(
+        "event_type", "event_name"
+    )
+    verified = {
+        (r.event_name, r.prop_name): (
+            r.total_records, r.keys_not_null_count, r.value_not_null_count
+        )
+        for r in verify_events(batch, spec).where("total_records > 0").collect()
+    }
+    assert streamed == verified
+    assert len(verified) == 15
+    assert all(verified[(e, "nope")][1:] == (0, 0) for e, _ in verified)
+
+
 def test_stateful_running_stats_multibatch(spark, sf_dir):
     """applyInPandasWithState: per-user running totals must accumulate
     ACROSS micro-batches (3-file split => 3 batches) and converge to the
