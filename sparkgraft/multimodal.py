@@ -94,7 +94,7 @@ def fake_decode_stats(payload: bytes) -> dict[str, Any]:
     """Deterministic stand-in for a real decoder: byte-level statistics.
 
     A real deployment replaces this with e.g. PIL image decode; it MUST
-    stay a pure bytes -> dict function so the mapInPandas stage below
+    stay a pure bytes -> dict function so the ``map_rows`` stage below
     needs no change. Raises on None payloads like a real decoder would.
     """
     if payload is None:
@@ -110,7 +110,6 @@ def fake_decode_stats(payload: bytes) -> dict[str, Any]:
 def extract_features(
     media: DataFrame,
     decode_fn: Callable[[bytes], dict[str, Any]] = fake_decode_stats,
-    batch_size_hint: int = 256,
 ) -> DataFrame:
     """Decode + featurize via Arrow-batched ``relational.map_rows``.
 
@@ -144,7 +143,7 @@ def fake_resize(payload: bytes, width: int, height: int) -> bytes:
     byte stream down to exactly ``width * height`` bytes (repeating the
     source cyclically if it is shorter). A real deployment swaps in
     PIL/cv2 ``decode -> resize -> re-encode``; like ``fake_decode_stats``
-    it must stay a pure bytes -> bytes function so the mapInPandas
+    it must stay a pure bytes -> bytes function so the ``map_rows``
     stage is untouched. Raises on None like a real codec would."""
     if payload is None:
         raise NotImplementedError("no payload: real resize would fail here")
@@ -402,7 +401,7 @@ def png_decode(payload: bytes):
     dead-lettering) is identical — which is the point of the seam.
 
     Raises ValueError on anything that is not a supported PNG (the
-    mapInPandas stages dead-letter that row as NULL, like any corrupt
+    ``map_rows`` stages dead-letter that row as NULL, like any corrupt
     file in a 100 TB corpus).
     """
     import struct
@@ -419,7 +418,7 @@ def png_decode(payload: bytes):
     idat = bytearray()
     while pos + 8 <= len(payload):
         # A truncated header/chunk raises struct.error — normalize to
-        # ValueError so the mapInPandas dead-letter handlers (which
+        # ValueError so the map_rows dead-letter handlers (which
         # catch (NotImplementedError, ValueError)) see every corrupt
         # payload the same way; a broken file must never kill the job.
         try:
@@ -552,7 +551,7 @@ def wav_decode(payload: bytes):
     Raises ValueError on anything that is not a supported WAV —
     including truncated headers and short data chunks, normalized from
     struct/buffer errors exactly like :func:`png_decode` — so the
-    mapInPandas stages dead-letter the row instead of dying.
+    ``map_rows`` stages dead-letter the row instead of dying.
     """
     import struct
 
@@ -2037,7 +2036,7 @@ def jpeg_decode(payload: bytes):
     clean ValueError, the same contract as non-PCM :func:`wav_decode`.
     All
     struct/index errors on corrupt bytes normalize to ValueError so
-    the mapInPandas dead-letter handlers see every broken payload the
+    the ``map_rows`` dead-letter handlers see every broken payload the
     same way."""
     import struct
 

@@ -6,7 +6,7 @@ technique): ``md5(text) || '|MM01|' || doc_id`` encoded as UTF-8 — pure
 ASCII, so DuckDB's per-character ``ascii()`` equals the byte value and
 the two engines agree byte-for-byte. Contrived payloads, real
 operators: the Spark side runs the actual production plumbing
-(``attach_media_metadata`` -> Arrow ``mapInPandas`` decode in
+(``attach_media_metadata`` -> Arrow ``map_rows`` decode in
 :mod:`sparkgraft.multimodal`, and the declarative byte-slicing
 ``sample_frames``), which is exactly what a real deployment would run
 with a non-fake decoder.
@@ -51,7 +51,7 @@ def _payload_col() -> F.Column:
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary feature extraction end-to-end: payload bytes built
-    in-plan, canonical media shape, Arrow-batched ``mapInPandas``
+    in-plan, canonical media shape, Arrow-batched ``map_rows``
     decode (the stub decoder's byte statistics ARE the oracle-checkable
     features: exact integer byte sum -> one double division, rounded
     identically on both engines)."""

@@ -105,31 +105,41 @@ def map_rows(
     """One Arrow-batched Python pass: ``fn(*row)`` on every row of
     ``df`` (values in ``df``'s column order) returns zero or more output
     tuples in the DDL's column order, and the rows come back typed by
-    the DDL. The helper owns the ``mapInPandas`` batch loop and the
-    output frame, whose column names come from the DDL. The frame is
-    built as ``object`` columns, so pandas never infers a type: an
-    integer column holding a NULL stays exact instead of becoming
-    float64. Every per-record Python pass in the library goes through
-    here; only passes that vectorise across a whole batch call
-    ``mapInPandas`` themselves, and a test in
+    the DDL. The helper owns the ``mapInArrow`` batch loop and the
+    output batch, built from the DDL's Arrow schema. Values cross as
+    Python objects both ways (``to_pylist`` in, typed Arrow arrays
+    out), never through pandas: a ``long`` holding a NULL stays exact
+    on either side instead of becoming float64, and a NULL arrives as
+    ``None``. Every per-record Python pass in the
+    library goes through here; only passes that vectorise across a
+    whole batch call ``mapInPandas`` themselves, and a test in
     ``tests/test_relational.py`` pins that."""
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
-    names = StructType.fromDDL(schema_ddl).names
+    schema = to_arrow_schema(StructType.fromDDL(schema_ddl))
 
     def run(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
+        for batch in batches:
             rows = [
                 out
-                for row in pdf.itertuples(index=False, name=None)
+                for row in zip(*(c.to_pylist() for c in batch.columns))
                 for out in fn(*row)
             ]
-            yield pd.DataFrame(rows, columns=names, dtype=object)
+            cols = list(zip(*rows, strict=True)) or [()] * len(schema)
+            # from_pandas: a NaN output is NULL, as in pandas conversion
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(c, type=f.type, from_pandas=True)
+                    for c, f in zip(cols, schema, strict=True)
+                ],
+                schema=schema,
+            )
 
     run.__name__ = getattr(fn, "__name__", "map_rows")  # names the plan node
-    return df.mapInPandas(run, schema_ddl)
+    return df.mapInArrow(run, schema_ddl)
 
 
 def materialize_intermediate(

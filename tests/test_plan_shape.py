@@ -10,7 +10,8 @@ the physical plan must have:
   corpus: a linear scan, which Spark renders as
   BroadcastNestedLoopJoin);
 - no BatchEvalPython (row-at-a-time Python UDFs); Python is allowed
-  only Arrow-batched (ArrowEvalPython / MapInPandas / groups-variants);
+  only Arrow-batched (ArrowEvalPython / MapInArrow / MapInPandas /
+  groups-variants);
 - at most the pinned number of Exchange (shuffle) operators — adding a
   shuffle to one of these plans is a perf regression the fixed-sf bench
   may hide in noise, so the count is asserted structurally;
@@ -226,11 +227,11 @@ PLAN_PINS: dict[str, tuple[int, int]] = {
     # cap's one rank window; the one BHJ is the broadcast
     # rules-onto-URLs gate join (the rules-side has-exact join is gone,
     # was (8, 2)). r14 (guide §4, VERDICT r13
-    # #4): build/crack/extract are FUSED into ONE Arrow MapInPandas
+    # #4): build/crack/extract are FUSED into ONE Arrow MapInArrow
     # pass composing the same library functions (was three passes;
     # the WARC payload and HTML string no longer round-trip through
     # Arrow twice each, and only doc_id/url/text cross back) — the
-    # remaining MapInPandas print is the tiny rules-side parse.
+    # remaining MapInArrow print is the tiny rules-side parse.
     # Never BatchEvalPython. The cap is one rank window, not a salted
     # pre-rank plus a final rank: Spark's Partial WindowGroupLimit
     # already keeps at most cap rows per domain per map task, so the
@@ -433,8 +434,9 @@ NON_HEADLINE_ACTIVE = sorted(
 def test_active_nonheadline_no_row_udfs_or_cartesian(spark, sf_dir, name):
     """The structural no-anti-pattern floor for the ACTIVE queries the
     headline pins don't cover: no row-at-a-time Python (Arrow-batched
-    mapInPandas/ArrowEval is allowed, BatchEvalPython is not) and no
-    unbounded CartesianProduct anywhere in the driver-facing surface.
+    mapInArrow/mapInPandas/ArrowEval is allowed, BatchEvalPython is
+    not) and no unbounded CartesianProduct anywhere in the
+    driver-facing surface.
     (Streaming queries execute micro-batches on construction and are
     parity-gated in test_streaming instead.)"""
     spark.catalog.clearCache()
@@ -575,12 +577,12 @@ R6_OP_PINS = [
     # registrable_domain itself is row-local
     ("web_domain_cap_sample", 2, False),
     # NEW r12 retired tier: WARC build+crack round trip — spread only;
-    # the build and crack stages are two Arrow MapInPandas passes
+    # the build and crack stages are two Arrow MapInArrow passes
     # (never BatchEvalPython), no shuffle after the spread
     ("warc_http_responses", 1, False),
     # NEW r12 retired tier: HTML build-extract round trip — spread
     # only; the page build is row-local codegen and the extractor is
-    # one Arrow MapInPandas pass
+    # one Arrow MapInArrow pass
     ("html_text_extraction", 1, False),
     # (robots_url_gate's pin moved to PLAN_PINS when promoted to the
     # bench headline, r13)
@@ -591,7 +593,7 @@ R6_OP_PINS = [
     ("simhash_by_doc", 1, False),
     # NEW r13 retired tier: RFC 3986 reference resolution — spread
     # only; page build is row-local codegen, parse+resolve is ONE
-    # Arrow MapInPandas pass, posexplode row-local
+    # Arrow MapInArrow pass, posexplode row-local
     ("html_link_resolution", 1, False),
     # NEW r13 retired tier: multilingual quality metrics — the gate
     # rides the scan (spread only), every class explicit-ASCII codegen

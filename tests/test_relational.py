@@ -673,7 +673,8 @@ def test_map_rows_all_skip_batch_is_typed_and_empty(spark):
 
 def test_map_rows_keeps_big_integers_exact_next_to_nulls(spark):
     """pandas would infer float64 for an integer column holding None and
-    round values above 2**53; the helper's object columns keep them."""
+    round values above 2**53; the helper's typed Arrow columns keep
+    them."""
     big = (1 << 62) + 1
     df = spark.range(4, numPartitions=1)
     out = R.map_rows(
@@ -684,12 +685,23 @@ def test_map_rows_keeps_big_integers_exact_next_to_nulls(spark):
     ]
 
 
+def test_map_rows_reads_big_integers_exact_next_to_nulls(spark):
+    """A ``long`` input column that holds a NULL reaches ``fn`` as exact
+    ints and ``None``: pandas would read it as float64 and round the id
+    above 2**53 to 4611686018427387904."""
+    big = (1 << 62) + 1
+    df = spark.createDataFrame([(big,), (None,)], "id long").coalesce(1)
+    seen = R.map_rows(
+        df, lambda i: [(i, repr(i))], "id long, seen string"
+    ).collect()
+    assert set(map(tuple, seen)) == {(big, repr(big)), (None, "None")}
+
+
 def test_only_map_rows_and_batch_passes_call_map_in_pandas():
     """Lint-style guard: every per-record Python pass goes through
-    relational.map_rows; ``mapInPandas`` is called directly only by the
-    helper and by the passes that vectorise across a whole batch."""
+    relational.map_rows, the one ``mapInArrow`` caller; ``mapInPandas``
+    is called only by the passes that vectorise across a whole batch."""
     allowed_fns = {
-        ("relational.py", "map_rows"),
         ("similarity.py", "cosine_pairs_blocked"),
         ("similarity.py", "covariance_cells_arrow"),
         ("similarity.py", "pq_adc_topk"),
@@ -697,7 +709,7 @@ def test_only_map_rows_and_batch_passes_call_map_in_pandas():
         ("text.py", "heavy_hitter_words"),
     }
     root = Path(R.__file__).parent
-    offenders = []
+    offenders, arrow_calls = [], []
     for path in sorted(root.rglob("*.py")):
         tree = ast.parse(path.read_text(), filename=str(path))
         allowed = set()
@@ -709,15 +721,18 @@ def test_only_map_rows_and_batch_passes_call_map_in_pandas():
                 ):
                     allowed |= {id(n) for n in ast.walk(node)}
         for node in ast.walk(tree):
-            if (
+            if not (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "mapInPandas"
-                and id(node) not in allowed
             ):
-                rel = path.relative_to(root.parent)
-                offenders.append(f"{rel}:{node.lineno}")
+                continue
+            rel = f"{path.relative_to(root.parent)}:{node.lineno}"
+            if node.func.attr == "mapInPandas" and id(node) not in allowed:
+                offenders.append(rel)
+            elif node.func.attr == "mapInArrow":
+                arrow_calls.append(rel.rsplit(":", 1)[0])
     assert offenders == [], "use relational.map_rows: " + ", ".join(offenders)
+    assert arrow_calls == ["sparkgraft/relational.py"]
 
 
 def test_tiny_frame_is_a_jvm_local_relation(spark):

@@ -119,7 +119,7 @@ def test_robots_gate_parses_rules_once(spark):
         .executedPlan()
         .toString()
     )
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
 
 
 def test_parse_robots_unknown_directive_between_agents():

@@ -198,3 +198,61 @@ def test_extra_conf_page_size_wins(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert f"PAGE {2**20}" in proc.stdout
+
+
+def _vm_option(spark, name: str) -> str:
+    """A HotSpot flag's value as the driver JVM reads it."""
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    return bean.getVMOption(name).getValue()
+
+
+def test_driver_young_gen_is_capped_at_a_quarter_of_the_heap(spark):
+    """G1 with its young generation capped at 25% of the heap: without
+    the cap G1 grew eden to 60% of a 2 GB heap and kept it resident."""
+    assert _vm_option(spark, "UseG1GC") == "true"
+    assert _vm_option(spark, "G1MaxNewSizePercent") == "25"
+
+
+def test_extra_conf_java_options_replace_the_default(tmp_path):
+    """An ``extra_conf`` ``spark.driver.extraJavaOptions`` replaces the
+    whole default string: the code cache is back at the JVM's 240 MB and
+    the experimental young-gen flag is locked again."""
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO_ROOT!r})
+        sys.path.insert(0, {os.path.join(REPO_ROOT, "tests")!r})
+        from pyspark.errors import IllegalArgumentException
+        from sparkgraft.session import get_spark
+        from test_session import _vm_option
+
+        spark = get_spark(
+            "jvm-opts-probe",
+            master="local[1]",
+            extra_conf={{
+                "spark.driver.extraJavaOptions": "-XX:MaxGCPauseMillis=150"
+            }},
+        )
+        try:
+            cap = _vm_option(spark, "G1MaxNewSizePercent")
+        except IllegalArgumentException:  # experimental flags are locked again
+            cap = "locked"
+        print("OPTS", _vm_option(spark, "MaxGCPauseMillis"),
+              _vm_option(spark, "ReservedCodeCacheSize"), cap)
+        spark.stop()
+        """
+    )
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert f"OPTS 150 {240 * 2**20} locked" in proc.stdout

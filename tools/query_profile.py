@@ -10,8 +10,10 @@ STAGE, not guessed from the plan.
 
 Each measured pass also prints the driver JVM's CPU by thread class
 (C2 and C1 JIT compilers, task threads, py4j/driver threads, GC,
-other), read from ``/proc/<jvm>/task/*/{comm,stat}``, so it launches
-no Spark action.
+other), read from ``/proc/<jvm>/task/*/{comm,stat}``, and its heap
+use: young collections, GC time, and the eden and old-gen peaks
+(the memory pools' peaks are reset before each pass), read from the
+JVM's management beans. Neither launches a Spark action.
 
 Usage: python tools/query_profile.py <query> [query ...] [--sf DIR]
        [--passes N] [--warm K]
@@ -75,6 +77,42 @@ def thread_cpu_line(before, after) -> str:
     return f"  jvm threads: {parts} (total {(total1 - total0) / _TICK:.2f}s)"
 
 
+def gc_totals(jvm) -> dict[str, tuple[int, int]]:
+    """``{collector: (collections, GC milliseconds)}`` since JVM start."""
+    beans = jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+    return {b.getName(): (b.getCollectionCount(), b.getCollectionTime()) for b in beans}
+
+
+def _memory_pools(jvm):
+    return jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans()
+
+
+def reset_pool_peaks(jvm) -> None:
+    """Start every memory pool's peak over from its current use."""
+    for pool in _memory_pools(jvm):
+        pool.resetPeakUsage()
+
+
+def pool_peaks(jvm) -> dict[str, int]:
+    """``{memory pool: peak bytes used}`` since the last reset."""
+    return {p.getName(): p.getPeakUsage().getUsed() for p in _memory_pools(jvm)}
+
+
+def heap_line(before, after, peaks) -> str:
+    """Young collections and GC time between two ``gc_totals`` readings,
+    and the eden and old-gen peaks of a ``pool_peaks`` reading (G1's
+    collector and pool names; a missing one reads 0)."""
+    zero = (0, 0)
+    young = sum(c - before.get(n, zero)[0] for n, (c, _) in after.items() if "Young" in n)
+    gc_ms = sum(ms - before.get(n, zero)[1] for n, (_, ms) in after.items())
+
+    def peak_mb(word: str) -> float:
+        return sum(b for n, b in peaks.items() if word in n) / 2**20
+
+    return (f"  jvm heap: young_gcs={young} gc={gc_ms / 1000:.2f}s "
+            f"eden_peak={peak_mb('Eden'):.0f}MB old_peak={peak_mb('Old Gen'):.0f}MB")
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:]]
     sf_dir = "/root/testdata/sf0.1"
@@ -117,12 +155,15 @@ def main() -> int:
             read()  # discard warm stages
         for p in range(passes):
             spark.catalog.clearCache()
+            reset_pool_peaks(spark._jvm)
+            gc0 = gc_totals(spark._jvm)
             cpu0 = thread_cpu(jvm_pid)
             t0 = time.time()
             fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
             wall = time.time() - t0
             stages = read()
             cpu1 = thread_cpu(jvm_pid)
+            gc1, peaks = gc_totals(spark._jvm), pool_peaks(spark._jvm)
             print(f"\n[{name}] pass {p}: wall {wall:.3f}s, "
                   f"{len(stages)} stages")
             tot_run = sum(s["run_ms"] for s in stages)
@@ -138,6 +179,7 @@ def main() -> int:
             print(f"  total executor-run {tot_run}ms across stages "
                   f"(wall includes driver/planning gaps)")
             print(thread_cpu_line(cpu0, cpu1))
+            print(heap_line(gc0, gc1, peaks))
         spark.sparkContext.setJobDescription(None)
     spark.stop()
     return 0
