@@ -42,17 +42,90 @@ cluster-level config. Here every knob that matters for a 1000-executor /
   the parent's young collections. The 32-core / 48 GB host is not
   measured. An ``extra_conf`` ``spark.driver.extraJavaOptions``
   replaces the whole default string, the cap included.
+- The driver JVM starts from a dynamic class-data-sharing archive
+  (JDK AppCDS, ``-XX:SharedArchiveFile``, appended to the default
+  ``spark.driver.extraJavaOptions``): the classes a session start and
+  its first job load are mapped from one file instead of being read
+  from the jars, parsed and verified again. The archive
+  lives in a per-machine cache outside the checkout,
+  ``$XDG_CACHE_HOME/sparkgraft/cds/<key>.jsa`` (``~/.cache/...`` when
+  the variable is unset); ``rm -r ~/.cache/sparkgraft/cds`` clears
+  it. The key covers what HotSpot checks before it maps an archive:
+  the JDK, the Spark jars (names, sizes, mtimes), the conf dir on the
+  classpath, and whether compressed oops are on (a heap of 32 GB or
+  more turns them off, and an archive dumped with the other setting
+  is silently not mapped). Per-run values stay out of it, so every
+  run of one machine shares one archive per heap class. A missing
+  archive is built once, synchronously, before the serving JVM
+  starts: a separate builder process (``python -m
+  sparkgraft.session <target>``) starts the same session with
+  ``-XX:ArchiveClassesAtExit``, runs one job and exits cleanly, which
+  is when the JVM writes it (a JVM killed with SIGKILL, as benchmark
+  harnesses stop theirs, never does). The build takes ~20 s, writes
+  ~140 MB and logs to ``<key>.log`` next to the archive, never to
+  stdout; a failed build leaves ``<key>.failed`` so later starts do
+  not retry it. The dump refuses a non-empty directory on the
+  classpath, and Spark puts its conf dir first there, so for the
+  launch ``SPARK_CONF_DIR`` points at an empty directory in the cache,
+  but only when it is unset and ``$SPARK_HOME/conf`` holds nothing but
+  ``*.template`` files. Otherwise (with a warning), or when an
+  ``extra_conf`` ``spark.driver.extraJavaOptions`` replaces the
+  default string, the JVM starts without the archive. After start-up
+  ``get_spark`` checks ``/proc/<jvm pid>/maps`` for the archive and
+  warns (``RuntimeWarning``) when the JVM did not map it. Measured
+  only on a 4-vCPU host with a 2 GB driver (``perfbench/run.py``, 10
+  and 6 alternating pairs): median ``setup_s`` fell from 10.35 to
+  5.72 s on ``conformance_bulk`` and from 9.27 to 5.15 s on
+  ``corpus_bulk``; ``cpu_s`` and ``peak_rss_mb`` stayed within noise.
+  The 32-core / 48 GB host is not measured.
 """
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
+import hashlib
+import json
 import os
+import re
+import shutil
+import signal
+import subprocess
+import sys
+import warnings
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 # the directory holding the ``sparkgraft`` package
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+_JAVA_OPTIONS = "spark.driver.extraJavaOptions"
+# whole-stage codegen emits one compiled class per query shape; a
+# multi-query session (bench runs 25+) fills the default 240 MB JIT code
+# cache, after which HotSpot stops compiling and generated code runs
+# interpreted (~2x slower, and it looks like random per-query
+# regressions). Also pin a conservative region-based GC pause target:
+# with 48g x 32 threads the default throughput collector's full-GC
+# pauses show up as multi-second noise spikes in per-query timings. And
+# cap the young generation at 25% of the heap (see the module
+# docstring): G1 sizes eden by the pause goal alone, so with ~20 ms
+# young pauses it grew eden to its 60% maximum and the first warm pass
+# touched every page of it. Below the cap G1 still sizes young by the
+# pause goal. Median peak RSS of perfbench's conformance_bulk: 1,858 ->
+# 1,138 MB (4 vCPU, 2 GB driver; the 32-core / 48 GB host is not
+# measured). ``get_spark`` appends the class-data-sharing archive.
+_DEFAULT_JAVA_OPTIONS = (
+    "-XX:ReservedCodeCacheSize=512m -XX:+UseG1GC -XX:MaxGCPauseMillis=200 "
+    "-XX:+UnlockExperimentalVMOptions -XX:G1MaxNewSizePercent=25"
+)
+# a build takes ~20 s; a hung builder must not hold the build lock forever
+_ARCHIVE_BUILD_LIMIT_S = 300
+
+
+class _NoArchive(Exception):
+    """Why the driver JVM starts without a class-data-sharing archive."""
 
 
 def get_spark(
@@ -72,6 +145,7 @@ def get_spark(
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = cpus
+    driver_memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -105,28 +179,7 @@ def get_spark(
         .config("spark.buffer.pageSize", "2m")
         # local mode = driver-only: this is the whole memory budget.
         # 32 threads on an 8g heap GC-thrash on shuffle-heavy queries.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        # whole-stage codegen emits one compiled class per query shape;
-        # a multi-query session (bench runs 25+) fills the default
-        # 240 MB JIT code cache, after which HotSpot stops compiling
-        # and generated code runs interpreted (~2x slower, and it looks
-        # like random per-query regressions). Also pin a conservative
-        # region-based GC pause target: with 48g x 32 threads the
-        # default throughput collector's full-GC pauses show up as
-        # multi-second noise spikes in per-query timings. And cap the
-        # young generation at 25% of the heap (see the module
-        # docstring): G1 sizes eden by the pause goal alone, so with
-        # ~20 ms young pauses it grew eden to its 60% maximum and the
-        # first warm pass touched every page of it. Below the cap G1
-        # still sizes young by the pause goal. Median peak RSS of
-        # perfbench's conformance_bulk: 1,858 -> 1,138 MB (4 vCPU, 2 GB
-        # driver; the 32-core / 48 GB host is not measured).
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=512m -XX:+UseG1GC "
-            "-XX:MaxGCPauseMillis=200 "
-            "-XX:+UnlockExperimentalVMOptions -XX:G1MaxNewSizePercent=25",
-        )
+        .config("spark.driver.memory", driver_memory)
     )
     conf = dict(extra_conf or {})
     # workers import sparkgraft (the worker daemon and the library's
@@ -135,8 +188,200 @@ def get_spark(
         filter(None, [conf.get(_WORKER_PYTHONPATH), _PACKAGE_ROOT])
     )
     conf.setdefault("spark.python.daemon.module", "sparkgraft._pydaemon")
+    java_options, archive = _DEFAULT_JAVA_OPTIONS, None
+    launch_env: dict[str, str] = {}
+    # the JVM's options count only when this call starts it
+    launches = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+    if launches and _JAVA_OPTIONS not in conf:
+        # start from the class-data-sharing archive in the per-machine
+        # cache, built on first use (see the module docstring; clear it
+        # with ``rm -r ~/.cache/sparkgraft/cds``). Its key is the JDK,
+        # the Spark jars, the conf dir and whether the heap keeps
+        # compressed oops, so the 48g default and a small test heap use
+        # different archives. An ``extra_conf`` value replaces the
+        # whole option string, the archive included.
+        try:
+            archive, launch_env = _class_archive(conf.get("spark.driver.memory", driver_memory))
+        except (_NoArchive, OSError) as e:
+            warnings.warn(
+                f"sparkgraft: the driver JVM starts without a class-data-sharing archive: {e}",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+        else:
+            java_options += f" -XX:SharedArchiveFile={archive}"
+    conf.setdefault(_JAVA_OPTIONS, java_options)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    with _environ(launch_env):
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if archive is not None:
+        _, reason = archive_status(spark)
+        if reason is not None:
+            warnings.warn(f"sparkgraft: {reason}", RuntimeWarning, stacklevel=2)
     return spark
+
+
+def archive_status(spark: SparkSession) -> tuple[str | None, str | None]:
+    """``(archive, None)`` when the session's driver JVM maps the
+    class-data-sharing archive it was started with, else ``(None, why
+    not)``. Reads the JVM's arguments and ``/proc/<jvm pid>/maps``;
+    launches no Spark action."""
+    jvm = spark._jvm
+    args = jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()
+    flag = "-XX:SharedArchiveFile="
+    paths = [a[len(flag) :] for a in args if a.startswith(flag)]
+    if not paths:
+        return None, f"the driver JVM was started without {flag}"
+    pid = jvm.java.lang.ProcessHandle.current().pid()
+    real = os.path.realpath(paths[-1])
+    try:
+        with open(f"/proc/{pid}/maps") as fh:
+            if any(line.rstrip("\n").endswith(real) for line in fh):
+                return paths[-1], None
+    except OSError:
+        pass
+    return None, (
+        f"the driver JVM (pid {pid}) did not map its class-data-sharing archive {paths[-1]}"
+    )
+
+
+def archive_plan(driver_memory: str) -> tuple[str, dict[str, str]]:
+    """The archive path for a driver JVM with this heap, and the
+    environment its launch needs (``SPARK_CONF_DIR`` pointed at an empty
+    directory). Raises ``_NoArchive`` when the conf dir holds real
+    configuration."""
+    cds = os.path.join(
+        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"), "sparkgraft", "cds"
+    )
+    spark_home = _find_spark_home()
+    if "SPARK_CONF_DIR" in os.environ:
+        raise _NoArchive(f"SPARK_CONF_DIR is set ({os.environ['SPARK_CONF_DIR']})")
+    default = os.path.join(spark_home, "conf")
+    if os.path.isdir(default) and not all(n.endswith(".template") for n in os.listdir(default)):
+        raise _NoArchive(f"{default} holds configuration that the launch may not hide")
+    conf_dir = os.path.join(cds, "conf")
+    jdk = os.path.dirname(os.path.dirname(os.path.realpath(_java())))
+    jars = os.path.join(spark_home, "jars")
+    jdk_files = ("release", "lib/modules", "lib/server/libjvm.so")
+    key = {
+        "jdk": [jdk] + [_stamp(os.path.join(jdk, f)) for f in jdk_files],
+        "jars": sorted(_stamp(os.path.join(jars, n)) for n in os.listdir(jars)),
+        "conf_dir": conf_dir,
+        "compressed_oops": _heap_bytes(driver_memory) < 32 * 2**30,
+    }
+    digest = hashlib.sha256(json.dumps(key, sort_keys=True).encode()).hexdigest()[:16]
+    return os.path.join(cds, f"{digest}.jsa"), {"SPARK_CONF_DIR": conf_dir}
+
+
+def _class_archive(driver_memory: str) -> tuple[str, dict[str, str]]:
+    """``archive_plan``'s archive, built first when it is missing."""
+    path, env = archive_plan(driver_memory)
+    os.makedirs(env["SPARK_CONF_DIR"], exist_ok=True)
+    if not os.path.exists(path):
+        _build_archive(path, env)
+    return path, env
+
+
+def _build_archive(path: str, env: dict[str, str]) -> None:
+    """Dump the archive at ``path`` in a builder process, under a lock so
+    concurrent starts build it once. The builder's output goes to
+    ``<key>.log``; a failed build leaves ``<key>.failed``, and later
+    starts skip the archive until that marker is deleted."""
+    stem = path[: -len(".jsa")]
+    log, failed = f"{stem}.log", f"{stem}.failed"
+    with open(f"{stem}.lock", "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        if os.path.exists(path):  # another process built it meanwhile
+            return
+        if os.path.exists(failed):
+            raise _NoArchive(f"its build failed before (see {log}; delete {failed} to retry)")
+        tmp = f"{path}.{os.getpid()}.tmp"
+        pythonpath = os.environ.get("PYTHONPATH")
+        child_env = dict(
+            os.environ,
+            **env,
+            PYTHONPATH=os.pathsep.join(filter(None, [_PACKAGE_ROOT, pythonpath])),
+        )
+        with open(log, "w") as out:
+            proc = subprocess.Popen(
+                [sys.executable, "-m", "sparkgraft.session", tmp],
+                stdin=subprocess.DEVNULL,
+                stdout=out,
+                stderr=subprocess.STDOUT,
+                env=child_env,
+                start_new_session=True,
+            )
+            try:
+                status = f"builder exit status {proc.wait(timeout=_ARCHIVE_BUILD_LIMIT_S)}"
+            except subprocess.TimeoutExpired:
+                os.killpg(proc.pid, signal.SIGKILL)  # the builder and its JVM
+                proc.wait()
+                status = f"builder still running after {_ARCHIVE_BUILD_LIMIT_S} s"
+        if proc.returncode == 0 and os.path.isfile(tmp) and os.path.getsize(tmp) > 0:
+            os.replace(tmp, path)
+            return
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        with open(failed, "w") as fh:
+            fh.write(f"{status}\n")
+        raise _NoArchive(f"its build wrote no archive ({status}; see {log})")
+
+
+def _dump_archive(target: str) -> None:
+    """The builder process: start the session with the dump armed, run
+    one job, stop, and close the gateway so the JVM exits normally and
+    writes the archive to ``target``."""
+    spark = get_spark(
+        "sparkgraft-cds",
+        extra_conf={_JAVA_OPTIONS: f"{_DEFAULT_JAVA_OPTIONS} -XX:ArchiveClassesAtExit={target}"},
+    )
+    spark.range(1).count()
+    spark.stop()
+    gateway = SparkContext._gateway
+    gateway.shutdown()
+    gateway.proc.stdin.close()  # the gateway JVM exits on EOF of its stdin
+    gateway.proc.wait()
+
+
+@contextlib.contextmanager
+def _environ(values: dict[str, str]):
+    """``os.environ`` with ``values`` set, restored on exit."""
+    saved = {k: os.environ.get(k) for k in values}
+    os.environ.update(values)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                os.environ.pop(k, None)
+            else:
+                os.environ[k] = v
+
+
+def _java() -> str:
+    """The java binary Spark's launch script runs."""
+    home = os.environ.get("JAVA_HOME")
+    java = os.path.join(home, "bin", "java") if home else shutil.which("java")
+    if not java:
+        raise _NoArchive("no java binary found")
+    return java
+
+
+def _stamp(path: str) -> list:
+    st = os.stat(path)
+    return [os.path.basename(path), st.st_size, st.st_mtime_ns]
+
+
+def _heap_bytes(memory: str) -> int:
+    """A JVM memory string (Spark's ``spark.driver.memory``: MiB when it
+    has no unit) in bytes."""
+    m = re.fullmatch(r"(\d+)\s*([kmgtp]?)b?", memory.strip().lower())
+    if m is None:
+        raise _NoArchive(f"unreadable driver memory {memory!r}")
+    return int(m[1]) * 2 ** (10 * "kmgtp".index(m[2] or "m") + 10)
+
+
+if __name__ == "__main__":
+    _dump_archive(sys.argv[1])

@@ -2058,7 +2058,10 @@ def pq_adc_topk(
             )
 
     scored = (
+        # a NULL id would turn the batch's id column into float64 in
+        # pandas: rounded ids above 2**53, the NULL as INT64_MIN
         corpus_codes.select(F.col(id_col), "codes")
+        .where(F.col(id_col).isNotNull())
         .mapInPandas(scan, out_schema)
         .where(F.col("cand_id") != F.col("query_id"))
     )

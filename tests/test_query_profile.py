@@ -1,5 +1,6 @@
 """tools/query_profile.py's per-pass CPU split: the JVM thread classes
-match the thread names of a real session's JVM."""
+match the thread names of a real session's JVM; its heap and
+class-archive lines."""
 
 from __future__ import annotations
 
@@ -43,3 +44,11 @@ def test_heap_readings_come_from_the_session_jvm(spark):
     assert "G1 Young Generation" in gc1 and gc1.keys() >= gc0.keys()
     assert {"G1 Eden Space", "G1 Old Gen"} <= peaks.keys()
     assert P.heap_line(gc0, gc1, peaks).startswith("  jvm heap: young_gcs=")
+
+
+def test_archive_line_names_the_archive_or_the_reason():
+    assert P.archive_line("/c/sparkgraft/cds/k.jsa", None) == (
+        "cds archive: mapped /c/sparkgraft/cds/k.jsa"
+    )
+    reason = "the driver JVM was started without -XX:SharedArchiveFile="
+    assert P.archive_line(None, reason) == f"cds archive: not mapped: {reason}"

@@ -1,6 +1,7 @@
 """Session tests (sparkgraft/session.py, sparkgraft/_pydaemon.py): the
 worker daemon's stat-checked zip-cache invalidation, that Python workers
-run it, and that they import sparkgraft from any working directory."""
+run it, that they import sparkgraft from any working directory, the
+driver JVM's options, and its class-data-sharing archive."""
 
 from __future__ import annotations
 
@@ -218,18 +219,19 @@ def test_driver_young_gen_is_capped_at_a_quarter_of_the_heap(spark):
 
 def test_extra_conf_java_options_replace_the_default(tmp_path):
     """An ``extra_conf`` ``spark.driver.extraJavaOptions`` replaces the
-    whole default string: the code cache is back at the JVM's 240 MB and
-    the experimental young-gen flag is locked again."""
+    whole default string: the code cache is back at the JVM's 240 MB,
+    the experimental young-gen flag is locked again, and the JVM maps no
+    class-data-sharing archive."""
     script = textwrap.dedent(
         f"""
         import sys
         sys.path.insert(0, {REPO_ROOT!r})
         sys.path.insert(0, {os.path.join(REPO_ROOT, "tests")!r})
         from pyspark.errors import IllegalArgumentException
-        from sparkgraft.session import get_spark
-        from test_session import _vm_option
+        from sparkgraft import session as S
+        from test_session import _cache_archives, _vm_option
 
-        spark = get_spark(
+        spark = S.get_spark(
             "jvm-opts-probe",
             master="local[1]",
             extra_conf={{
@@ -242,6 +244,7 @@ def test_extra_conf_java_options_replace_the_default(tmp_path):
             cap = "locked"
         print("OPTS", _vm_option(spark, "MaxGCPauseMillis"),
               _vm_option(spark, "ReservedCodeCacheSize"), cap)
+        print("ARCHIVES", _cache_archives(spark), S.archive_status(spark))
         spark.stop()
         """
     )
@@ -256,3 +259,60 @@ def test_extra_conf_java_options_replace_the_default(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert f"OPTS 150 {240 * 2**20} locked" in proc.stdout
+    # the archive flag went too
+    assert "ARCHIVES [] (None, 'the driver JVM was started without" in proc.stdout
+
+
+def _cache_archives(spark) -> list[str]:
+    """The sparkgraft class-data-sharing archives the driver JVM maps."""
+    pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+    with open(f"/proc/{pid}/maps") as fh:
+        paths = {line.split()[-1] for line in fh}
+    return sorted(p for p in paths if "/sparkgraft/cds/" in p and p.endswith(".jsa"))
+
+
+def test_session_jvm_maps_the_class_archive(spark):
+    """The session's driver JVM starts from the cached class-data-sharing
+    archive: the file is mapped, and ``archive_status`` says so."""
+    from sparkgraft import session as S
+
+    [mapped] = _cache_archives(spark)
+    path, reason = S.archive_status(spark)
+    assert reason is None and os.path.realpath(path) == mapped
+
+
+def test_unmapped_archive_warns(tmp_path):
+    """A junk file where the archive should be: the JVM starts without
+    it, and ``get_spark`` says so with a ``RuntimeWarning``."""
+    script = textwrap.dedent(
+        f"""
+        import os, sys, warnings
+        sys.path.insert(0, {REPO_ROOT!r})
+        from sparkgraft import session as S
+
+        path, _ = S.archive_plan("1g")
+        os.makedirs(os.path.dirname(path))
+        with open(path, "wb") as fh:
+            fh.write(b"not an archive" * 64)
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            spark = S.get_spark("archive-probe", master="local[1]")
+        print("COUNT", spark.range(3).count())
+        for w in caught:
+            print("WARNING", w.category.__name__, w.message)
+        spark.stop()
+        """
+    )
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g", XDG_CACHE_HOME=str(tmp_path))
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "COUNT 3" in proc.stdout
+    assert "WARNING RuntimeWarning sparkgraft: the driver JVM" in proc.stdout
+    assert "did not map its class-data-sharing archive" in proc.stdout

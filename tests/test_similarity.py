@@ -741,6 +741,24 @@ def test_pq_adc_planted_exact_duplicate_is_top1(spark, emb):
         assert cand == q + 10_000_000, (q, cand, adist)
 
 
+def test_pq_adc_keeps_big_ids_exact_next_to_a_null_id(spark):
+    """A NULL-id code row in the batch of an id above 2**53: the NULL is
+    no candidate, and the big id comes back exact (pandas would read the
+    batch's id column as float64)."""
+    from sparkgraft.relational import tiny_frame
+
+    big = 4611686018427387905
+    books = [[[0.0], [1.0]], [[0.0], [1.0]]]  # m=2 subspaces of 1 dim
+    codes = tiny_frame(
+        spark,
+        [(big, bytes([0, 0])), (None, bytes([0, 0])), (7, bytes([1, 1]))],
+        "vec_id long, codes binary",
+    )
+    queries = tiny_frame(spark, [(1, [0.0, 0.0])], "vec_id long, embedding array<double>")
+    got = [tuple(r) for r in S.pq_adc_topk(codes, queries, books, k=5).orderBy("rank").collect()]
+    assert got == [(1, 1, big, 0.0), (1, 2, 7, 2.0)]
+
+
 def test_pq_adc_recall_vs_bruteforce_and_plan(spark, emb):
     """Recall measured against the EXACT L2 top-5 (the metric ADC
     approximates — comparing against cosine truth would conflate the

@@ -13,7 +13,9 @@ Each measured pass also prints the driver JVM's CPU by thread class
 other), read from ``/proc/<jvm>/task/*/{comm,stat}``, and its heap
 use: young collections, GC time, and the eden and old-gen peaks
 (the memory pools' peaks are reset before each pass), read from the
-JVM's management beans. Neither launches a Spark action.
+JVM's management beans. Neither launches a Spark action. A header
+line says whether the driver JVM maps its class-data-sharing archive
+(``session.archive_status``, read from ``/proc/<jvm>/maps``).
 
 Usage: python tools/query_profile.py <query> [query ...] [--sf DIR]
        [--passes N] [--warm K]
@@ -113,6 +115,12 @@ def heap_line(before, after, peaks) -> str:
             f"eden_peak={peak_mb('Eden'):.0f}MB old_peak={peak_mb('Old Gen'):.0f}MB")
 
 
+def archive_line(path: str | None, reason: str | None) -> str:
+    """The header line for a ``session.archive_status`` reading."""
+    state = f"mapped {path}" if path is not None else f"not mapped: {reason}"
+    return f"cds archive: {state}"
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:]]
     sf_dir = "/root/testdata/sf0.1"
@@ -135,9 +143,10 @@ def main() -> int:
 
     from sparkgraft import queries as Q
     from sparkgraft.obs import stage_reader
-    from sparkgraft.session import get_spark
+    from sparkgraft.session import archive_status, get_spark
 
     spark = get_spark("query-profile")
+    print(archive_line(*archive_status(spark)))
     read = stage_reader(spark)
     jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
     # session warm-up: JVM + parquet footers
