@@ -219,11 +219,9 @@ def crawl_to_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the rules side otherwise runs its Arrow parse as 32-way
     # near-empty Python tasks per reference)
     hosts = spark.range(24).coalesce(1).select(
-        F.concat(
-            F.when(F.col("id") >= 12, F.lit("www.")).otherwise(F.lit("")),
-            F.lit("h"), (F.col("id") % 4).cast("string"),
-            F.lit(".site"), ((F.col("id") % 12) / 4).cast("int").cast("string"),
-            F.lit(".co.uk"),
+        F.expr(
+            "concat(IF(id >= 12, 'www.', ''), 'h', CAST(id % 4 AS STRING), "
+            "'.site', CAST(CAST((id % 12) / 4 AS INT) AS STRING), '.co.uk')"
         ).alias("host"),
         F.lit(_ROBOTS).alias("content"),
     )

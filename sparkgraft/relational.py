@@ -117,7 +117,8 @@ def map_rows(
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
-    schema = to_arrow_schema(StructType.fromDDL(schema_ddl))
+    struct = StructType.fromDDL(schema_ddl)
+    schema = to_arrow_schema(struct)
 
     def run(batches):
         import pyarrow as pa
@@ -139,7 +140,7 @@ def map_rows(
             )
 
     run.__name__ = getattr(fn, "__name__", "map_rows")  # names the plan node
-    return df.mapInArrow(run, schema_ddl)
+    return df.mapInArrow(run, struct)
 
 
 def materialize_intermediate(

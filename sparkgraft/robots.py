@@ -266,71 +266,53 @@ def robots_gate(
     al = agent.lower()
     # effective group per host from ONE aggregate over the rules (one
     # read, so the robots parse runs once): the exact-agent rules when
-    # the host has any, else '*' (collect_list skips the NULLs)
-    rule = F.struct("rule_allow", "pattern_len", "pattern_re")
+    # the host has any, else '*' (collect_list skips the NULLs). Past
+    # the filter a rule's agent is either the crawler's or '*', so
+    # "not '*'" is the exact group (and when the crawler's agent is
+    # '*', the fallback picks the same rules).
+    rule = "struct(rule_allow, pattern_len, pattern_re)"
     eff = (
         rules.where(F.col("agent").isin(al, "*"))
         .groupBy(F.col("host").alias("__rhost"))
         .agg(
-            F.collect_list(F.when(F.col("agent") == al, rule)).alias("__x"),
-            F.collect_list(F.when(F.col("agent") == "*", rule)).alias("__s"),
+            F.expr(f"collect_list(IF(agent <> '*', {rule}, NULL)) AS __x"),
+            F.expr(f"collect_list(IF(agent = '*', {rule}, NULL)) AS __s"),
         )
-        .select(
-            "__rhost",
-            F.when(F.size("__x") > 0, F.col("__x"))
-            .otherwise(F.col("__s"))
-            .alias("__rules"),
-        )
+        .selectExpr("__rhost", "IF(size(__x) > 0, __x, __s) AS __rules")
     )
     in_cols = urls.columns
     # bare host for the rules join (':port' stripped — the trailing
     # [0-9]+ anchor cannot fire inside an IPv6 '[::1]' literal, whose
     # last char is ']'); path defaults to '/' and the query is
     # appended '?'-prefixed when present (the RFC's match target)
-    tagged = (
-        urls.withColumn(
-            "__host", F.regexp_replace(p["host"], r":[0-9]+$", "")
-        )
-        .withColumn(
-            "__target",
-            F.concat(
-                F.when(p["path"] == "", F.lit("/")).otherwise(p["path"]),
-                F.when(
-                    p["query"] == "", F.lit("")
-                ).otherwise(F.concat(F.lit("?"), p["query"])),
+    tagged = urls.withColumns(
+        {
+            "__host": F.regexp_replace(p["host"], r":[0-9]+$", ""),
+            "__target": F.concat(
+                F.when(p["path"] == "", "/").otherwise(p["path"]),
+                F.when(p["query"] == "", "").otherwise(F.concat(F.lit("?"), p["query"])),
             ),
-        )
+        }
     )
     joined = tagged.join(
         F.broadcast(eff), tagged["__host"] == eff["__rhost"], "left"
     )
-    path = F.col("__target")
-    matches = F.filter(
-        F.coalesce(
-            F.col("__rules"),
-            F.array().cast(
-                "array<struct<rule_allow:boolean,pattern_len:int,"
-                "pattern_re:string>>"
-            ),
-        ),
-        lambda r: F.regexp_like(path, r["pattern_re"]),
-    )
     # row-local argmax fold: (pattern_len, rule_allow) lexicographic
-    # max over the matching rules; sentinel len -1 = no match -> True
-    best = F.aggregate(
-        matches,
-        F.struct(
-            F.lit(-1).alias("pattern_len"), F.lit(True).alias("rule_allow")
-        ),
-        lambda acc, r: F.when(
-            (r["pattern_len"] > acc["pattern_len"])
-            | ((r["pattern_len"] == acc["pattern_len"]) & r["rule_allow"]),
-            F.struct(
-                r["pattern_len"].alias("pattern_len"),
-                r["rule_allow"].alias("rule_allow"),
-            ),
-        ).otherwise(acc),
+    # max over the rules whose pattern matches the target; the start
+    # value (len -1 = no match, allowed) stands when none does, and a
+    # host without rules is allowed. Written as one SQL expression: it
+    # reads only the two columns named above, and the JVM builds it
+    # from one string instead of one py4j round trip per node
+    best = F.expr(
+        """CASE WHEN __rules IS NULL THEN true ELSE aggregate(
+            __rules,
+            named_struct('pattern_len', -1, 'rule_allow', true),
+            (acc, r) -> CASE
+                WHEN regexp_like(__target, r.pattern_re)
+                     AND (r.pattern_len > acc.pattern_len
+                          OR (r.pattern_len = acc.pattern_len AND r.rule_allow))
+                THEN named_struct('pattern_len', r.pattern_len, 'rule_allow', r.rule_allow)
+                ELSE acc END
+        ).rule_allow END"""
     )
-    return joined.withColumn(out_col, best["rule_allow"]).select(
-        *in_cols, out_col
-    )
+    return joined.select(*in_cols, best.alias(out_col))

@@ -17,7 +17,10 @@ never leaves whole-stage codegen.
 
 from __future__ import annotations
 
+import functools
+import operator
 import re as _re
+from collections.abc import Callable, Mapping
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -37,7 +40,62 @@ def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
-def parse_url(url: Column | str) -> dict[str, Column]:
+class _LazyColumns(Mapping):
+    """Read-only ``{name: Column}`` whose Columns are built on first
+    lookup: ``builders[name](self)`` builds one (it may look up other
+    names of the same mapping), and later lookups return that same
+    Column. Keys keep ``builders``' order; anything that reads every
+    value (``items()``, ``dict(m)``, ``{**m}``) builds them all."""
+
+    def __init__(self, builders: dict[str, Callable[[Mapping], Column]]):
+        self._builders = builders
+        self._built: dict[str, Column] = {}
+
+    def __getitem__(self, name: str) -> Column:
+        if name not in self._built:
+            self._built[name] = self._builders[name](self)
+        return self._built[name]
+
+    def __iter__(self):
+        return iter(self._builders)
+
+    def __len__(self) -> int:
+        return len(self._builders)
+
+
+def _url_parts(url: Column | str) -> dict[str, Callable[[Mapping], Column]]:
+    """The component builders of :func:`parse_url`."""
+    u = _col(url)
+    return {
+        "scheme": lambda m: F.lower(
+            F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1)
+        ),
+        "userinfo": lambda m: F.regexp_extract(
+            u, r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#@]*)@", 1
+        ),
+        # host = authority minus an optional userinfo@ prefix; the char
+        # class [^/?#@]* confines the @ scan to the authority (it cannot
+        # cross into path/query/fragment)
+        "host": lambda m: F.lower(
+            F.regexp_extract(
+                u, r"^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/?#@]*@)?([^/?#]+)", 1
+            )
+        ),
+        "path": lambda m: F.regexp_extract(
+            u, r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)", 1
+        ),
+        "query": lambda m: F.regexp_extract(u, r"\?([^#]*)", 1),
+        "domain": lambda m: F.regexp_extract(m["host"], r"([^.]+\.[^.]+)$", 1),
+        # path depth = number of non-empty segments
+        "path_depth": lambda m: F.size(F.array_remove(F.split(m["path"], "/"), ""))
+        .cast("bigint"),
+        "n_params": lambda m: F.when(m["query"] == "", 0)
+        .otherwise(F.size(F.split(m["query"], "&")))
+        .cast("bigint"),
+    }
+
+
+def parse_url(url: Column | str) -> Mapping[str, Column]:
     """Split a URL into ``{scheme, userinfo, host, path, query, domain,
     path_depth, n_params}`` with pure regexp groups. The authority's
     ``user:pass@`` userinfo (RFC 3986 §3.2.1) is split OFF the host —
@@ -47,40 +105,15 @@ def parse_url(url: Column | str) -> dict[str, Column]:
     tier; :func:`registrable_domain` is the public-suffix-aware tier
     every per-site curation rule should key on. Missing components are
     empty strings (``regexp_extract`` semantics), never NULL, so rule
-    predicates stay two-valued."""
-    u = _col(url)
-    scheme = F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1)
-    userinfo = F.regexp_extract(
-        u, r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#@]*)@", 1
-    )
-    # host = authority minus an optional userinfo@ prefix; the char
-    # class [^/?#@]* confines the @ scan to the authority (it cannot
-    # cross into path/query/fragment)
-    host = F.lower(
-        F.regexp_extract(
-            u, r"^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/?#@]*@)?([^/?#]+)", 1
-        )
-    )
-    path = F.regexp_extract(u, r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)", 1)
-    query = F.regexp_extract(u, r"\?([^#]*)", 1)
-    domain = F.regexp_extract(host, r"([^.]+\.[^.]+)$", 1)
-    # path depth = number of non-empty segments
-    path_depth = F.size(
-        F.filter(F.split(path, "/"), lambda s: s != "")
-    ).cast("bigint")
-    n_params = F.when(query == "", F.lit(0).cast("bigint")).otherwise(
-        F.size(F.split(query, "&")).cast("bigint")
-    )
-    return {
-        "scheme": F.lower(scheme),
-        "userinfo": userinfo,
-        "host": host,
-        "path": path,
-        "query": query,
-        "domain": domain,
-        "path_depth": path_depth,
-        "n_params": n_params,
-    }
+    predicates stay two-valued.
+
+    The result is a read-only mapping with those eight keys, in that
+    order. A component's Column is built when it is first looked up,
+    and a later lookup returns the same Column; iterating the values
+    (``items()``, ``dict(p)``) builds them all. Building a Column
+    costs JVM round trips, so a caller that reads only ``p["host"]``
+    builds only the host (and what it depends on)."""
+    return _LazyColumns(_url_parts(url))
 
 
 def url_filter(
@@ -89,37 +122,40 @@ def url_filter(
     path_blocklist: tuple[str, ...] = DEFAULT_PATH_BLOCKLIST,
     max_depth: int = 6,
     max_params: int = 4,
-) -> dict[str, Column]:
+) -> Mapping[str, Column]:
     """The URL gate: parse + rule booleans + ``keep`` conjunction.
     Rules: allowed scheme, host not on the blocklist, no blocked path
     segment, bounded path depth, bounded query-parameter count. A URL
     that fails to parse (empty scheme/host) fails the scheme/host
     rules and is dropped — malformed rows dead-letter through the same
-    booleans rather than erroring the scan."""
-    p = parse_url(url)
-    segs = F.filter(F.split(p["path"], "/"), lambda s: s != "")
-    seg_blocked = F.lit(False)
-    for bad in path_blocklist:
-        seg_blocked = seg_blocked | F.array_contains(
-            F.transform(segs, F.lower), bad
-        )
-    host_ok = p["host"] != ""
-    for bad in host_blocklist:
-        host_ok = host_ok & (p["host"] != bad)
-    scheme_ok = F.lit(False)
-    for s in ALLOWED_SCHEMES:
-        scheme_ok = scheme_ok | (p["scheme"] == s)
+    booleans rather than erroring the scan.
+
+    Returns a read-only mapping with :func:`parse_url`'s eight keys,
+    then ``r_scheme``, ``r_host``, ``r_path``, ``r_depth``,
+    ``r_params`` and ``keep``, built on first lookup as
+    :func:`parse_url`'s are: ``g["keep"]`` builds the five rules and
+    the components they read, and nothing else."""
+    # a path segment holds no '/' and is never empty, so neither entry
+    # can block one; the rest match one whole lowercased segment
+    blocked = [_re.escape(b) for b in path_blocklist if b and "/" not in b]
+    seg_blocked = rf"(^|/)({'|'.join(blocked)})(/|\z)"
+
+    def host_ok(m):
+        ok = m["host"] != ""
+        return ok & ~m["host"].isin(*host_blocklist) if host_blocklist else ok
+
+    def path_ok(m):
+        return ~F.lower(m["path"]).rlike(seg_blocked) if blocked else F.lit(True)
+
     rules = {
-        "r_scheme": scheme_ok,
+        "r_scheme": lambda m: m["scheme"].isin(*ALLOWED_SCHEMES),
         "r_host": host_ok,
-        "r_path": ~seg_blocked,
-        "r_depth": p["path_depth"] <= max_depth,
-        "r_params": p["n_params"] <= max_params,
+        "r_path": path_ok,
+        "r_depth": lambda m: m["path_depth"] <= max_depth,
+        "r_params": lambda m: m["n_params"] <= max_params,
     }
-    keep = F.lit(True)
-    for r in rules.values():
-        keep = keep & r
-    return {**p, **rules, "keep": keep}
+    keep = {"keep": lambda m: functools.reduce(operator.and_, (m[r] for r in rules))}
+    return _LazyColumns({**_url_parts(url), **rules, **keep})
 
 
 # Query parameters that carry tracking state, not content identity —
@@ -130,7 +166,10 @@ def url_filter(
 # `gclid=x` — `(=|$)` instead of a bare `=`). No lookaround — RE2-safe.
 TRACKING_PARAM_PATTERN = r"^(utm_|gclid(=|$)|fbclid(=|$)|ref(=|$))"
 
-_HEX_DIGITS = "0123456789abcdef"
+# the percent-escapes of RFC 3986 §2.3 unreserved characters, by hex
+# pair: - . (2D 2E), 0-9 (30-39), A-Z (41-5A), _ (5F), a-z (61-7A),
+# ~ (7E), either case
+_UNRESERVED_ESCAPE = r"^(2[DEde]|3[0-9]|4[1-9A-Fa-f]|5[0-9AaFf]|6[1-9A-Fa-f]|7[0-9AaEe])"
 
 
 def percent_decode_unreserved(s: Column | str) -> Column:
@@ -139,72 +178,37 @@ def percent_decode_unreserved(s: Column | str) -> Column:
     step that is content-identity-safe (§6.2.2: ``%7E`` and ``~`` ARE
     the same URI; decoding a reserved escape like ``%2F`` would NOT
     be). Single pass, pure codegen: split on ``%``, and for each tail
-    segment whose first two chars are hex, map them to a code point
-    via a position lookup (``position`` over a 16-char literal — both
-    engines lack a scalar hex-parse, both have ``position``/``strpos``
-    and ``char``/``chr``); unreserved codes are replaced by their
+    segment whose first two chars are the hex pair of an unreserved
+    character (:data:`_UNRESERVED_ESCAPE`), ``unhex`` them into that
     character; reserved escapes stay encoded with their two hex digits
     UPPERCASED (RFC 3986 §6.2.2.1 case normalization — ``%2f`` ==
     ``%2F``, r13/ADVICE r12); malformed escapes (not two hex digits)
-    pass through byte-identical behind the re-prefixed ``%``."""
-    c = _col(s)
-    parts = F.split(c, "%")
-    tail = F.slice(parts, 2, F.greatest(F.size(parts) - 1, F.lit(0)))
+    pass through byte-identical behind the re-prefixed ``%``. Each
+    sub-expression is built once and shared by the branches that read
+    it, so the expression is a few dozen nodes (the DuckDB oracle's
+    twin, ``queries/web.py``'s ``_sql_decode_unreserved``, computes the
+    code point with ``strpos`` instead; the two agree on every hex
+    pair)."""
+    parts = F.split(_col(s), "%")
 
-    def hexval(ch: Column) -> Column:
-        return F.position(F.lower(ch), F.lit(_HEX_DIGITS)) - 1
-
-    # stage (seg, code) in a struct so the code-point expression is
-    # built ONCE per segment: the decision below references `code`
-    # five times, and inlining the position-lookup tree at each site
-    # blows the expression tree up ~5x — measurably slower to analyze
-    # and codegen-compile (the r12 adjudication of the 18.8s sweep
-    # row), for identical semantics. Two stacked transforms are not
-    # re-inlined by the optimizer, so the dedup sticks.
-    staged = F.transform(
-        tail,
-        lambda seg: F.struct(
-            seg.alias("seg"),
-            (
-                hexval(F.substring(seg, 1, 1)) * 16
-                + hexval(F.substring(seg, 2, 1))
-            ).cast("int").alias("code"),
-        ),
-    )
-
-    def seg_out(x: Column) -> Column:
-        seg, code = x["seg"], x["code"]
-        is_hex = seg.rlike("^[0-9A-Fa-f]{2}")
-        unreserved = is_hex & (
-            code.between(48, 57)   # 0-9
-            | code.between(65, 90)   # A-Z
-            | code.between(97, 122)  # a-z
-            | code.isin(45, 46, 95, 126)  # - . _ ~
-        )
+    def seg_out(seg: Column) -> Column:
+        pair, rest, pct = seg.substr(1, 2), seg.substr(3, 2147483647), F.lit("%")
         return (
             F.when(
-                unreserved,
-                F.concat(F.char(code), F.substring(seg, 3, 2147483647)),
+                seg.rlike(_UNRESERVED_ESCAPE),
+                F.concat(F.unhex(pair).cast("string"), rest),
             )
             # reserved/other escapes stay ENCODED but get their hex
             # digits uppercased — RFC 3986 §6.2.2.1 case normalization
             # ('%2f' and '%2F' are the same URI; without this they got
             # different canonical keys — ADVICE r12)
-            .when(
-                is_hex,
-                F.concat(
-                    F.lit("%"),
-                    F.upper(F.substring(seg, 1, 2)),
-                    F.substring(seg, 3, 2147483647),
-                ),
-            )
+            .when(seg.rlike("^[0-9A-Fa-f]{2}"), F.concat(pct, F.upper(pair), rest))
             # malformed escape (not two hex digits): byte-identical
-            .otherwise(F.concat(F.lit("%"), seg))
+            .otherwise(F.concat(pct, seg))
         )
 
-    return F.concat(
-        F.element_at(parts, 1), F.array_join(F.transform(staged, seg_out), "")
-    )
+    tail = F.slice(parts, 2, F.size(parts))
+    return F.concat(parts[0], F.array_join(F.transform(tail, seg_out), ""))
 
 
 def canonical_url(url: Column | str) -> Column:
@@ -259,11 +263,16 @@ def canonical_url(url: Column | str) -> Column:
         .when(scheme == "https", F.regexp_replace(host, r":443$", ""))
         .otherwise(host)
     )
-    path = percent_decode_unreserved(p["path"])
+    # ONE decode of path '?' query: '?' is neither a hex digit nor an
+    # unreserved character, so no escape spans the separator and the
+    # decode makes no '?'; the path holds none, so the first '?' splits
+    # the decoded pair back into the two decoded components
+    pq = percent_decode_unreserved(F.concat(p["path"], F.lit("?"), p["query"]))
+    path = F.regexp_extract(pq, r"^([^?]*)", 1)
     path = F.regexp_replace(path, r"/+", "/")
     path = F.regexp_replace(path, r"/$", "")
     params = F.filter(
-        F.split(percent_decode_unreserved(p["query"]), "&"),
+        F.split(F.regexp_extract(pq, r"(?s)\?(.*)", 1), "&"),
         lambda s: (s != "") & (~s.rlike(TRACKING_PARAM_PATTERN)),
     )
     q = F.array_join(F.sort_array(params), "&")
@@ -272,7 +281,7 @@ def canonical_url(url: Column | str) -> Column:
         F.lit("://"),
         host,
         path,
-        F.when(q == "", F.lit("")).otherwise(F.concat(F.lit("?"), q)),
+        F.when(q == "", "").otherwise(F.concat(F.lit("?"), q)),
     )
 
 
@@ -469,6 +478,20 @@ def psl_match_lists(
     return match_rules, exc_rules
 
 
+def _string_array(values: list[str]) -> Column:
+    """A literal ``array<string>`` of PSL rules, built as ONE SQL string
+    literal split on a space (the optimizer folds it to the same
+    literal array that one ``lit`` per rule built). A rule ends at its
+    first whitespace (the PSL file format) and is a hostname pattern,
+    so a space, quote or backslash in one is an error."""
+    bad = [v for v in values if set(v) & set(" '\\")]
+    if bad:
+        raise ValueError(f"PSL rules may not hold a space, quote or backslash: {bad}")
+    if not values:
+        return F.array().cast("array<string>")
+    return F.expr(f"split('{' '.join(values)}', ' ')")
+
+
 def registrable_domain(
     host: Column | str, rules: tuple[str, ...] = PSL_SNAPSHOT
 ) -> Column:
@@ -506,8 +529,7 @@ def registrable_domain(
     cands = F.transform(
         seq, lambda i: F.array_join(F.slice(labels, n - i + 1, i), ".")
     )
-    rule_arr = F.array(*[F.lit(r) for r in match_rules])
-    exc_arr = F.array(*[F.lit(r) for r in exc_rules])
+    rule_arr, exc_arr = _string_array(match_rules), _string_array(exc_rules)
     match_len = F.array_max(
         F.filter(
             seq,

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from sparkgraft import dedup as D
@@ -522,6 +524,19 @@ def test_boilerplate_line_removal_planted(spark):
     assert out[100].cleaned_text == rows[12][1] and out[100].n_removed == 0
     for doc in (101, 102):
         assert out[doc].cleaned_text == "" and out[doc].n_lines == 0
+
+
+def test_boilerplate_frequency_groups_on_hash_and_length(spark):
+    """A 64-bit hash collision alone cannot merge two lines' document
+    counts: the line-frequency aggregate groups on the xxhash64 AND
+    the length of the normalized line."""
+    from sparkgraft.dedup import dedup_boilerplate_lines
+
+    df = spark.createDataFrame([(1, "a\nb")], "doc_id long, text string")
+    plan = dedup_boilerplate_lines(df, min_docs=2)._jdf.queryExecution().analyzed().toString()
+    freq = [ln for ln in plan.splitlines() if "count(distinct" in ln]
+    assert len(freq) == 1, plan
+    assert re.search(r"Aggregate \[__k#\d+L, __n#\d+\], ", freq[0]), freq[0]
 
 
 def test_quality_keep_prefers_richer_member_over_lower_id(spark):

@@ -1,8 +1,12 @@
 """tools/query_profile.py's per-pass CPU split: the JVM thread classes
-match the thread names of a real session's JVM; its heap and
-class-archive lines."""
+match the thread names of a real session's JVM; its heap,
+class-archive and build round-trip lines."""
 
 from __future__ import annotations
+
+import collections
+
+from pyspark.sql import functions as F
 
 from tools import query_profile as P
 
@@ -52,3 +56,26 @@ def test_archive_line_names_the_archive_or_the_reason():
     )
     reason = "the driver JVM was started without -XX:SharedArchiveFile="
     assert P.archive_line(None, reason) == f"cds archive: not mapped: {reason}"
+
+
+def test_round_trips_are_counted_by_kind(spark):
+    P.release_proxies(spark)
+    with P.count_round_trips() as trips:
+        col = F.col("id")  # a name, a member lookup and a call
+        spark.range(1).select(col).collect()
+        del col
+        P.release_proxies(spark)
+    assert trips["name"] >= 1 and trips["member"] >= 1 and trips["delete"] >= 1
+    assert trips["call"] > trips["name"]
+    before = sum(trips.values())
+    F.col("y")  # after the block: not counted
+    assert sum(trips.values()) == before
+    assert set(trips) <= {"call", "member", "name", "delete", "other"}
+
+
+def test_round_trip_line_lists_every_kind():
+    trips = collections.Counter(call=5, member=2, name=2, delete=4)
+    assert P.round_trip_line(trips, 0.25) == (
+        "  build: 0.250s, py4j round trips 13 "
+        "(call=5 member=2 name=2 delete=4 other=0)"
+    )

@@ -17,12 +17,24 @@ JVM's management beans. Neither launches a Spark action. A header
 line says whether the driver JVM maps its class-data-sharing archive
 (``session.archive_status``, read from ``/proc/<jvm>/maps``).
 
+Each pass first builds the query's DataFrame (``fn(spark, sf)``) alone,
+once earlier passes' proxy deletes have been sent, and prints its wall
+seconds and the py4j round trips the build made, by kind: ``call`` (a
+JVM method call), ``member`` (a method or field lookup on a class or
+object), ``name`` (a JVM name resolved through the gateway's imports),
+``delete`` (a proxy released by Python's garbage collector) and
+``other``. They are counted by wrapping
+``py4j.clientserver.ClientServerConnection.send_command``.
+
 Usage: python tools/query_profile.py <query> [query ...] [--sf DIR]
        [--passes N] [--warm K]
 """
 
 from __future__ import annotations
 
+import collections
+import contextlib
+import gc
 import os
 import sys
 import time
@@ -42,6 +54,58 @@ THREAD_CLASSES = (
                      "task-result-get", "spark-listener")),
     ("GC", ("GC Thread", "G1 ", "VM Thread")),
 )
+
+
+# py4j command prefixes (``py4j.protocol``) by round-trip kind; any
+# other command counts as "other"
+ROUND_TRIP_KINDS = (
+    ("call", "c\n"),
+    ("member", "r\nm\n"),
+    ("name", "r\nu\n"),
+    ("delete", "m\nd\n"),
+)
+
+
+@contextlib.contextmanager
+def count_round_trips():
+    """Count the py4j round trips sent while the block runs, from any
+    thread, into the ``Counter`` it yields (keys: the
+    ``ROUND_TRIP_KINDS`` names and "other")."""
+    from py4j.clientserver import ClientServerConnection
+
+    counts: collections.Counter = collections.Counter()
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        kind = next((k for k, prefix in ROUND_TRIP_KINDS if command.startswith(prefix)), "other")
+        counts[kind] += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counted
+    try:
+        yield counts
+    finally:
+        ClientServerConnection.send_command = send
+
+
+def release_proxies(spark, timeout_s: float = 10.0) -> None:
+    """Collect Python's garbage and wait until py4j has sent the JVM the
+    proxy deletes that frees: they are queued and sent by a
+    background thread, so a count taken right after a build would
+    otherwise catch a varying share of an earlier build's deletes."""
+    gc.collect()
+    pending = spark.sparkContext._gateway._gateway_client.finalizer_deque
+    deadline = time.monotonic() + timeout_s
+    while pending and time.monotonic() < deadline:
+        time.sleep(0.005)
+    time.sleep(0.05)  # the delete the thread popped last is in flight
+
+
+def round_trip_line(counts, build_s: float) -> str:
+    """The build line of one pass: its wall seconds and round trips."""
+    kinds = [k for k, _ in ROUND_TRIP_KINDS] + ["other"]
+    parts = " ".join(f"{k}={counts[k]}" for k in kinds)
+    return f"  build: {build_s:.3f}s, py4j round trips {sum(counts.values())} ({parts})"
 
 
 def _cpu_ticks(stat_path: str) -> int:
@@ -164,17 +228,22 @@ def main() -> int:
             read()  # discard warm stages
         for p in range(passes):
             spark.catalog.clearCache()
+            release_proxies(spark)  # earlier passes' deletes stay out of the count
             reset_pool_peaks(spark._jvm)
             gc0 = gc_totals(spark._jvm)
             cpu0 = thread_cpu(jvm_pid)
             t0 = time.time()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+            with count_round_trips() as trips:
+                df = fn(spark, sf_dir)
+            build_s = time.time() - t0
+            df.write.mode("overwrite").format("noop").save()
             wall = time.time() - t0
             stages = read()
             cpu1 = thread_cpu(jvm_pid)
             gc1, peaks = gc_totals(spark._jvm), pool_peaks(spark._jvm)
             print(f"\n[{name}] pass {p}: wall {wall:.3f}s, "
                   f"{len(stages)} stages")
+            print(round_trip_line(trips, build_s))
             tot_run = sum(s["run_ms"] for s in stages)
             for s in stages:
                 print(
