@@ -68,46 +68,6 @@ _CAP = 25
 _MIN_WORDS = 10
 
 
-def _fixture_warc_file(did: int, text: str | None) -> bytes:
-    """Document ``did`` as one gzip-member WARC file holding one
-    response record, planted per the module docstring's geometry."""
-    pid = did // 2
-    host = f"h{pid % 4}.site{pid % 3}.co.uk"
-    c = pid % 4
-    if c == 0:
-        path, query = f"/private/x{pid}", ""
-    elif c == 1:
-        path, query = f"/private/public/x{pid}", ""
-    elif c == 2:
-        path, query = "/search", f"q={pid}"
-    elif pid % 8 == 7:
-        path, query = f"/ads/x{pid}", ""
-    else:
-        path, query = f"/ok/x{pid}", ""
-    if did % 2 == 0:  # canonical noise variant
-        q = query + ("&" if query else "") + "utm_source=x"
-        url = f"http://www.{host}:80{path}?{q}"
-    else:
-        url = f"http://{host}{path}" + (f"?{query}" if query else "")
-    body_text = str(text) if text is not None else ""
-    esc = body_text.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-    page = (
-        f"<html><head><title>p{pid}</title>"
-        "<style>p{x}</style></head>"
-        f"<body><p>{esc}</p></body></html>"
-    ).encode("utf-8")
-    enc = did % 3
-    resp = WC.build_http_response(
-        status=404 if did % 13 == 0 else 200,
-        body=page,
-        content_encoding="gzip" if enc == 1 else None,
-        chunked=enc == 2,
-    )
-    return WC.build_warc_file(
-        [WC.build_warc_record("response", resp, url=url)], gzip_members=True
-    )
-
-
 @register(
     "crawl_to_corpus",
     # NEW r13 ACTIVE: the full-chain composition row. The oracle
@@ -197,9 +157,51 @@ def crawl_to_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     back, instead of the 10-column response row plus the 10-column
     extract row with links/resolved_links nobody consumes."""
 
+    # nested, so the pass ships it by value: cloudpickle ships a
+    # module-level function by reference, and each worker would import
+    # this module and with it the whole ``sparkgraft.queries`` registry
+    def fixture_warc_file(did: int, text: str | None) -> bytes:
+        """Document ``did`` as one gzip-member WARC file holding one
+        response record, planted per the module docstring's geometry."""
+        pid = did // 2
+        host = f"h{pid % 4}.site{pid % 3}.co.uk"
+        c = pid % 4
+        if c == 0:
+            path, query = f"/private/x{pid}", ""
+        elif c == 1:
+            path, query = f"/private/public/x{pid}", ""
+        elif c == 2:
+            path, query = "/search", f"q={pid}"
+        elif pid % 8 == 7:
+            path, query = f"/ads/x{pid}", ""
+        else:
+            path, query = f"/ok/x{pid}", ""
+        if did % 2 == 0:  # canonical noise variant
+            q = query + ("&" if query else "") + "utm_source=x"
+            url = f"http://www.{host}:80{path}?{q}"
+        else:
+            url = f"http://{host}{path}" + (f"?{query}" if query else "")
+        body_text = str(text) if text is not None else ""
+        esc = body_text.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
+        page = (
+            f"<html><head><title>p{pid}</title>"
+            "<style>p{x}</style></head>"
+            f"<body><p>{esc}</p></body></html>"
+        ).encode("utf-8")
+        enc = did % 3
+        resp = WC.build_http_response(
+            status=404 if did % 13 == 0 else 200,
+            body=page,
+            content_encoding="gzip" if enc == 1 else None,
+            chunked=enc == 2,
+        )
+        return WC.build_warc_file(
+            [WC.build_warc_record("response", resp, url=url)], gzip_members=True
+        )
+
     def build_crack_extract(doc_id, text):
         did = int(doc_id)
-        rows = WC.response_rows(_fixture_warc_file(did, text))
+        rows = WC.response_rows(fixture_warc_file(did, text))
         for url, status, _ct, _body, _n, html, _etag, _lm, err in rows:
             if err is None and status == 200:
                 # extract_html's text product (NULL html -> NULL text,

@@ -107,6 +107,27 @@ cluster-level config. Here every knob that matters for a 1000-executor /
   only on a 4-vCPU host with a 2 GB driver (``perfbench/run.py``, 10
   alternating pairs): median ``cpu_s`` on ``corpus_bulk`` fell from
   8.34 to 6.61 s. The 32-core / 48 GB host is not measured.
+- No session-extension providers from the classpath
+  (``spark.sql.extensions.test.loadFromCp=false``, an internal conf).
+  Spark otherwise runs, on each session start, every
+  ``SparkSessionExtensionsProvider`` that a jar lists in
+  ``META-INF/services``. Of PySpark 4.1.2's 287 jars one lists a
+  provider, Spark ML's ``InternalFunctionRegistration``. It builds the
+  UDFs behind ``vector_to_array``, ``array_to_vector`` and
+  ``aggregate_metrics`` through Scala ``TypeTag`` reflection, about a
+  fifth of the main and py4j threads' CPU before the first job, and
+  sparkgraft calls none of them (a test fails if the library, its
+  tools or its entry points use Spark ML). What is lost: in a
+  ``get_spark`` session ``pyspark.ml.functions.vector_to_array`` and
+  ``array_to_vector`` raise ``UNRESOLVED_ROUTINE``. An ``extra_conf``
+  value ``"true"`` for the conf brings them back; the external
+  driver's bare session keeps them. The archive key holds no SQL conf,
+  so an archive built before this default is still used. Measured only
+  on a 4-vCPU host with a 2 GB driver (``perfbench/run.py``, 10
+  alternating pairs): median ``setup_s`` fell from 4.57 to 3.74 s on
+  ``conformance_bulk`` (faster in 10/10 pairs) and from 4.36 to 3.81 s
+  on ``corpus_bulk`` (9/10); ``cpu_s`` and ``peak_rss_mb`` stayed
+  within noise. The 32-core / 48 GB host is not measured.
 """
 
 from __future__ import annotations
@@ -228,6 +249,9 @@ def get_spark(
     # no Python call-site capture around every API call (see the module
     # docstring); PySpark reads this once per process
     conf.setdefault("spark.python.sql.dataFrameDebugging.enabled", "false")
+    # no classpath session-extension providers: the one PySpark ships,
+    # Spark ML's, costs ~0.5 s of start-up (see the module docstring)
+    conf.setdefault("spark.sql.extensions.test.loadFromCp", "false")
     java_options, archive = _DEFAULT_JAVA_OPTIONS, None
     launch_env: dict[str, str] = {}
     # the JVM's options count only when this call starts it

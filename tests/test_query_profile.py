@@ -1,10 +1,14 @@
 """tools/query_profile.py's per-pass CPU split: the JVM thread classes
 match the thread names of a real session's JVM; its heap,
-class-archive and build round-trip lines."""
+class-archive, start-up and build round-trip lines."""
 
 from __future__ import annotations
 
 import collections
+import os
+import re
+import subprocess
+import sys
 
 from pyspark.sql import functions as F
 
@@ -79,3 +83,42 @@ def test_round_trip_line_lists_every_kind():
         "  build: 0.250s, py4j round trips 13 "
         "(call=5 member=2 name=2 delete=4 other=0)"
     )
+
+
+def test_startup_line_splits_the_phases():
+    marks = {"spawn": 100.0, "gateway": 101.25}
+    assert P.startup_line(marks, 100.5, 103.0) == (
+        "startup: spawn->jvm=0.50s jvm->gateway=0.75s gateway->ready=1.75s "
+        "(total 3.00s)"
+    )
+    assert P.startup_line({}, 100.5, 103.0) == (
+        "startup: the driver JVM was already running"
+    )
+
+
+def test_tool_prints_the_start_up_split(tmp_path, sf_dir):
+    """Run with no query, the tool starts its session, prints the
+    archive, start-up and first-job lines, and stops. The phases come
+    in order: spawn, JVM start, gateway, session ready."""
+    tool = os.path.join(os.path.dirname(os.path.abspath(P.__file__)), "query_profile.py")
+    proc = subprocess.run(
+        [sys.executable, tool, "--sf", sf_dir],
+        cwd=tmp_path,
+        env=dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g"),
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    lines = proc.stdout.splitlines()
+    assert lines[0].startswith("cds archive: mapped ")
+    m = re.fullmatch(
+        r"startup: spawn->jvm=(\S+)s jvm->gateway=(\S+)s "
+        r"gateway->ready=(\S+)s \(total (\S+)s\)",
+        lines[1],
+    )
+    assert m is not None, lines[1]
+    phases = [float(x) for x in m.groups()[:3]]
+    assert all(p >= 0 for p in phases)
+    assert abs(sum(phases) - float(m[4])) <= 0.02
+    assert re.fullmatch(r"first job: \d+\.\d\ds", lines[2])

@@ -15,7 +15,13 @@ use: young collections, GC time, and the eden and old-gen peaks
 (the memory pools' peaks are reset before each pass), read from the
 JVM's management beans. Neither launches a Spark action. A header
 line says whether the driver JVM maps its class-data-sharing archive
-(``session.archive_status``, read from ``/proc/<jvm>/maps``).
+(``session.archive_status``, read from ``/proc/<jvm>/maps``). The next
+line splits the tool's own ``get_spark`` call into its start-up phases,
+again without a Spark action: spawn (PySpark launches the driver JVM)
+-> JVM start (the runtime bean's start time) -> gateway (the py4j
+gateway answers) -> session ready (``get_spark`` returns); a third line
+gives the wall seconds of the session's first job, the warm-up. With no
+query named, the tool prints these three lines and stops.
 
 Each pass first builds the query's DataFrame (``fn(spark, sf)``) alone,
 once earlier passes' proxy deletes have been sent, and prints its wall
@@ -26,7 +32,7 @@ object), ``name`` (a JVM name resolved through the gateway's imports),
 ``other``. They are counted by wrapping
 ``py4j.clientserver.ClientServerConnection.send_command``.
 
-Usage: python tools/query_profile.py <query> [query ...] [--sf DIR]
+Usage: python tools/query_profile.py [query ...] [--sf DIR]
        [--passes N] [--warm K]
 """
 
@@ -185,6 +191,44 @@ def archive_line(path: str | None, reason: str | None) -> str:
     return f"cds archive: {state}"
 
 
+@contextlib.contextmanager
+def gateway_clock():
+    """Record into the dict it yields the wall times (``time.time()``)
+    at which PySpark launches the driver JVM (``spawn``) and at which
+    the launch returns a connected py4j gateway (``gateway``). The dict
+    stays empty when the block starts no JVM."""
+    from pyspark.core import context
+
+    marks: dict[str, float] = {}
+    launch = context.launch_gateway
+
+    def timed(*args, **kwargs):
+        marks["spawn"] = time.time()
+        gateway = launch(*args, **kwargs)
+        marks["gateway"] = time.time()
+        return gateway
+
+    context.launch_gateway = timed
+    try:
+        yield marks
+    finally:
+        context.launch_gateway = launch
+
+
+def startup_line(marks: dict[str, float], jvm_start: float, ready: float) -> str:
+    """The start-up phases of a session from ``gateway_clock`` marks,
+    the JVM's start time and the time the session was ready."""
+    if not marks:
+        return "startup: the driver JVM was already running"
+    phases = (
+        ("spawn->jvm", jvm_start - marks["spawn"]),
+        ("jvm->gateway", marks["gateway"] - jvm_start),
+        ("gateway->ready", ready - marks["gateway"]),
+    )
+    parts = " ".join(f"{k}={v:.2f}s" for k, v in phases)
+    return f"startup: {parts} (total {ready - marks['spawn']:.2f}s)"
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:]]
     sf_dir = "/root/testdata/sf0.1"
@@ -209,12 +253,18 @@ def main() -> int:
     from sparkgraft.obs import stage_reader
     from sparkgraft.session import archive_status, get_spark
 
-    spark = get_spark("query-profile")
+    with gateway_clock() as marks:
+        spark = get_spark("query-profile")
+    ready = time.time()
     print(archive_line(*archive_status(spark)))
+    bean = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    print(startup_line(marks, bean.getStartTime() / 1000, ready))
     read = stage_reader(spark)
     jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
     # session warm-up: JVM + parquet footers
+    t0 = time.time()
     spark.range(1000).selectExpr("sum(id)").collect()
+    print(f"first job: {time.time() - t0:.2f}s")
     all_q = dict(Q.QUERIES)
     all_q.update(Q.RETIRED_QUERIES)
     for name in names:
